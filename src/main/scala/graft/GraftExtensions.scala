@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSimilarity, DotProduct, DotProductD, LshBuckets, NearestCentroid, PqAdc, PqEncode, SumOfSquares}
 import graft.plans.RewriteHofDot
@@ -17,80 +17,43 @@ import graft.plans.RewriteHofDot
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
-  * after which `graft_cosine(a, b)` is callable from SQL and via
-  * `functions.call_function`. Operators fall back to the equivalent
-  * compiled UDF on sessions built without the extension
-  * ([[graft.operators.Similarity.cosineCol]]), so the library works —
-  * just slower — on a vanilla session.
+  * It does two things: it registers the `graft_*` SQL names (so
+  * `graft_cosine(a, b)` is callable from SQL and via
+  * `functions.call_function`), and it injects the [[RewriteHofDot]]
+  * optimizer rule. The operators do not depend on it: they build the
+  * same native expressions as Columns directly
+  * ([[graft.operators.Similarity.cosineCol]]), so every session plans
+  * them inside whole-stage codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // optimizer rule: the interpreted HOF dot-product pattern becomes
     // the codegen'd native expression (see RewriteHofDot's Scaladoc)
     ext.injectOptimizerRule(_ => RewriteHofDot)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_dot expects 2 arguments, got ${children.length}")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot_d"),
-      new ExpressionInfo(classOf[DotProductD].getName, "graft_dot_d"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_dot_d expects 2 arguments, got ${children.length}")
-        DotProductD(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_cosine expects 2 arguments, got ${children.length}")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sumsq"),
-      new ExpressionInfo(classOf[SumOfSquares].getName, "graft_sumsq"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1,
-          s"graft_sumsq expects 1 argument, got ${children.length}")
-        SumOfSquares(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_pq_encode expects 2 arguments, got ${children.length}")
-        PqEncode(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 3,
-          s"graft_pq_adc expects 3 arguments, got ${children.length}")
-        PqAdc(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lsh_buckets"),
-      new ExpressionInfo(classOf[LshBuckets].getName, "graft_lsh_buckets"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_lsh_buckets expects 2 arguments, got ${children.length}")
-        LshBuckets(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2,
-          s"graft_nearest_centroid expects 2 arguments, got ${children.length}")
-        NearestCentroid(children.head, children(1))
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, arity, make) =>
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == arity,
+            s"$name expects $arity argument(s), got ${children.length}")
+          make(children)
+        }))
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** (SQL name, expression class, arity, constructor) of every
+    * registered native function. */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], 2, c => DotProduct(c(0), c(1))),
+    ("graft_dot_d", classOf[DotProductD], 2, c => DotProductD(c(0), c(1))),
+    ("graft_cosine", classOf[CosineSimilarity], 2, c => CosineSimilarity(c(0), c(1))),
+    ("graft_sumsq", classOf[SumOfSquares], 1, c => SumOfSquares(c(0))),
+    ("graft_pq_encode", classOf[PqEncode], 2, c => PqEncode(c(0), c(1))),
+    ("graft_pq_adc", classOf[PqAdc], 3, c => PqAdc(c(0), c(1), c(2))),
+    ("graft_lsh_buckets", classOf[LshBuckets], 2, c => LshBuckets(c(0), c(1))),
+    ("graft_nearest_centroid", classOf[NearestCentroid], 2, c => NearestCentroid(c(0), c(1))))
 }

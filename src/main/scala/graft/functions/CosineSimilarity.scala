@@ -10,19 +10,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `array<float>` columns — the hot scoring primitive of every
   * similarity/near-dup operator (s1/s2/s3/s6).
   *
-  * Why an Expression and not the compiled Scala UDF it supersedes
-  * ([[graft.operators.Similarity.cosineF]]): a UDF sits OUTSIDE
+  * Why an Expression and not a compiled Scala UDF (the form it
+  * superseded): a UDF sits OUTSIDE
   * whole-stage codegen — every row pays a codegen-boundary row copy
   * plus `Seq[Float]` materialization of both arrays (boxing + a
   * WrappedArray allocation per side per row). `doGenCode` below inlines
   * the loop into the generated stage, reading floats straight out of
   * the columnar/unsafe array representation with zero allocation.
   *
-  * Arithmetic is IDENTICAL to [[graft.operators.Similarity.cosineF]]
-  * and the DuckDB oracle replay: float widened to double, one
-  * ascending-index pass, d/(√na·√nb) — IEEE-deterministic, so swapping
-  * the UDF for this expression cannot change any oracle hash
-  * (FunctionsSpec asserts bit-equality).
+  * Arithmetic is IDENTICAL to the HOF form
+  * [[graft.operators.Similarity.cosine]] and the DuckDB oracle replay:
+  * float widened to double, one ascending-index pass, d/(√na·√nb) —
+  * IEEE-deterministic, so it cannot change any oracle hash
+  * (FunctionsSpec asserts bit-equality against a scalar reference).
   *
   * Null semantics: null if either side is null (BinaryExpression
   * default); mismatched lengths score the common prefix, matching the

@@ -120,8 +120,7 @@ class GraftIVFModel private[feature] (override val uid: String,
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     dataset.toDF().withColumn($(cellCol),
-      Similarity.nearestCentroidCol(dataset.sparkSession,
-        col($(inputCol)), centroids))
+      Similarity.nearestCentroidCol(col($(inputCol)), centroids))
   }
 
   /** Query-side probe list: the `nprobe` nearest cells for an

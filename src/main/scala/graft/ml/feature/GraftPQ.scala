@@ -130,8 +130,7 @@ class GraftPQModel private[feature] (override val uid: String,
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     dataset.toDF().withColumn($(codesCol),
-      Similarity.pqEncodeCol(dataset.sparkSession,
-        col($(inputCol)), codebooks))
+      Similarity.pqEncodeCol(col($(inputCol)), codebooks))
   }
 
   override def transformSchema(schema: StructType): StructType =

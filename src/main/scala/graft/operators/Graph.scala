@@ -1256,7 +1256,7 @@ object Graph {
     // computing the identical fixpoint: labels are monotone
     // non-increasing, so an unchanged sum across a double-step
     // certifies BOTH inner steps were stable. (A pointer-chasing
-    // variant was A/B-tested in TimeAlt and did NOT reduce rounds on
+    // variant was A/B-tested and did NOT reduce rounds on
     // this graph — random vertex ids create local minima that break
     // label chains — so it was rejected; 2-step batching cut rounds
     // 8 → 5 with bit-identical output.)

@@ -1090,7 +1090,7 @@ object Pipeline {
     val centsOld = Similarity.oldCents(spark, dir)
     val centsNew = Similarity.fullCents(spark, dir)
     def census(df: DataFrame, cents: Array[Array[Double]]): Map[Int, Long] =
-      df.select(Similarity.nearestCentroidCol(spark, $"embedding", cents)
+      df.select(Similarity.nearestCentroidCol($"embedding", cents)
           .as("c"))
         .groupBy($"c").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

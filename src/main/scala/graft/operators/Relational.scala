@@ -316,14 +316,14 @@ object Relational {
   }
 
   /** D16+D21: array/math functions over the embedding column — L2 norm
-    * via the codegen'd Σx² expression when registered (bit-identical to
-    * the transform+aggregate HOF form it falls back to; the HOF path is
-    * interpreted, one lambda dispatch per element). */
+    * via the codegen'd Σx² expression (bit-identical to the
+    * transform+aggregate HOF form, which is interpreted: one lambda
+    * dispatch per element). */
   def q16ArrayMath(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.embeddings(spark, dir)
       .withColumn("dim", size($"embedding"))
-      .withColumn("norm", Similarity.normCol(spark, $"embedding"))
+      .withColumn("norm", Similarity.normCol($"embedding"))
       .groupBy($"label")
       .agg(
         count(lit(1)).as("n_vecs"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftshim.ExpressionShim.{column, expression}
+import graft.functions.{CosineSimilarity, LshBuckets, NearestCentroid, PqAdc, PqEncode, SumOfSquares}
 import graft.sources.Tables
 import graft.CacheScope.ScopedPersist
 
@@ -21,12 +23,13 @@ import graft.CacheScope.ScopedPersist
   * - Plus threshold near-dup pairs (s3), centroid analytics (s4), and
   *   int8 quantization (s5).
   *
-  * Arithmetic: the expression-form dot ([[dot]]) and the compiled
-  * [[cosineF]] both widen float→double and sum sequentially in element
-  * order, so every score is bit-identical to DuckDB's
+  * Arithmetic: the expression-form dot ([[dot]]) and the codegen'd
+  * [[cosineCol]] both widen float→double and sum sequentially in
+  * element order, so every score is bit-identical to DuckDB's
   * `list_inner_product` on `DOUBLE[]` — which is what makes the s1/s3
   * oracles hash-exact. (Spark's higher-order expressions are
-  * interpreted, so hot pair-scoring uses the compiled form.)
+  * interpreted, so hot pair-scoring uses the native expressions of
+  * [[graft.functions]].)
   */
 object Similarity {
 
@@ -39,39 +42,16 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
-  /** Compiled cosine for `array<float>` pairs — bit-identical to
-    * [[cosine]] (same float→double widening, same ascending sequential
-    * summation, IEEE-deterministic) but ~10× faster than the
-    * interpreted higher-order expression path it replaces in the hot
-    * pair-scoring loops. */
-  val cosineF = udf { (a: Seq[Float], b: Seq[Float]) =>
-    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    val n = a.length
-    while (i < n) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      d += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    d / (math.sqrt(na) * math.sqrt(nb))
-  }
+  /** Cosine for the hot scoring loops: the codegen'd native expression
+    * [[graft.functions.CosineSimilarity]] (zero per-row allocation,
+    * fused into whole-stage codegen), bit-identical to [[cosine]]. */
+  def cosineCol(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  /** Best-available cosine for the hot scoring loops: the codegen'd
-    * native expression ([[graft.functions.CosineSimilarity]], zero
-    * per-row allocation, fused into whole-stage codegen) when the
-    * session was built with `spark.sql.extensions=graft.GraftExtensions`;
-    * otherwise the compiled UDF [[cosineF]]. Both compute bit-identical
-    * doubles (FunctionsSpec), so the choice never changes results. */
-  def cosineCol(spark: SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_cosine")) call_function("graft_cosine", a, b)
-    else cosineF(a, b)
-
-  /** Best-available L2 norm of an `array<float>` column: codegen'd
-    * Σx² expression ([[graft.functions.SumOfSquares]]) when registered,
-    * else the interpreted HOF form [[l2norm]]. Bit-identical results. */
-  def normCol(spark: SparkSession, a: Column): Column =
-    if (spark.catalog.functionExists("graft_sumsq"))
-      sqrt(call_function("graft_sumsq", a))
-    else l2norm(a)
+  /** L2 norm of an `array<float>` column via the codegen'd Σx²
+    * expression [[graft.functions.SumOfSquares]]; bit-identical to the
+    * HOF form [[l2norm]]. */
+  def normCol(a: Column): Column = sqrt(column(SumOfSquares(expression(a))))
 
   /** D19: exact brute-force cosine top-5 neighbors for query vectors
     * (vec_id < 5). Queries are broadcast; the corpus is scanned once.
@@ -90,7 +70,7 @@ object Similarity {
     val scored = emb.select($"vec_id".as("neighbor_id"), $"embedding")
       .crossJoin(broadcast(q))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .withColumn("salt", pmod(crc32($"neighbor_id".cast("string")), lit(32)))
     val wLocal = Window.partitionBy($"query_id", $"salt")
       .orderBy($"cos".desc, $"neighbor_id")
@@ -128,7 +108,7 @@ object Similarity {
     emb.select($"vec_id".as("neighbor_id"), $"embedding")
       .crossJoin(broadcast(q))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .filter($"cos" >= rangeTau)
       .select($"query_id", $"neighbor_id", round($"cos", 4).as("cos_sim"))
       .orderBy($"query_id", $"neighbor_id")
@@ -211,39 +191,15 @@ object Similarity {
     p
   }
 
-  /** All-tables bucket ids in one pass: a compiled closure over the
-    * broadcast hyperplane tensor beats 16 interpreted higher-order dot
-    * expressions by an order of magnitude, and the semantics (sign bits
-    * of hyperplane dot products, float widened to double, ascending-dim
-    * summation) are identical to the expression form it replaces. */
-  private[graft] def lshBuckets(dim: Int, nPlanes: Int = lshPlanes) = {
-    val planes = planesTensor(dim, nPlanes)
-    udf { (emb: Seq[Float]) =>
-      Array.tabulate(lshTables) { t =>
-        var bucket = 0
-        var p = 0
-        while (p < nPlanes) {
-          val plane = planes(t)(p)
-          var s = 0.0; var d = 0
-          while (d < dim) { s += emb(d) * plane(d); d += 1 }
-          if (s >= 0) bucket |= (1 << p)
-          p += 1
-        }
-        bucket
-      }
-    }
-  }
-
-  /** Best-available LSH bucket assignment: the codegen'd native
-    * expression ([[graft.functions.LshBuckets]]) under the graft
-    * extensions, else the compiled UDF [[lshBuckets]]. Bit-identical
-    * bucket ids either way (FunctionsSpec). */
-  def lshBucketsCol(spark: SparkSession, a: Column, dim: Int,
-      nPlanes: Int = lshPlanes): Column =
-    if (spark.catalog.functionExists("graft_lsh_buckets"))
-      call_function("graft_lsh_buckets", a,
-        typedLit(planesTensor(dim, nPlanes).map(_.map(_.toSeq).toSeq).toSeq))
-    else lshBuckets(dim, nPlanes)(a)
+  /** All-tables bucket ids in one pass via the codegen'd native
+    * expression [[graft.functions.LshBuckets]]: the hyperplane tensor
+    * rides as one foldable literal, and the per-row sign bits of the
+    * hyperplane dot products (float widened to double, ascending-dim
+    * summation) run inside whole-stage codegen — an order of magnitude
+    * faster than 16 interpreted higher-order dot expressions. */
+  def lshBucketsCol(a: Column, dim: Int, nPlanes: Int = lshPlanes): Column =
+    column(LshBuckets(expression(a), expression(
+      typedLit(planesTensor(dim, nPlanes).map(_.map(_.toSeq).toSeq).toSeq))))
 
   /** D19 scale path: LSH-bucketed approximate top-5 — explode each
     * vector to its `lshTables` (table, bucket) keys, equi-join within
@@ -258,7 +214,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val dim = 64 // fixture embedding width (FIXTURES.md)
     val keyed = emb.select($"vec_id", $"embedding",
-      posexplode(lshBucketsCol(spark, $"embedding", dim)).as(Seq("tbl", "bucket")))
+      posexplode(lshBucketsCol($"embedding", dim)).as(Seq("tbl", "bucket")))
     val qs = keyed.filter($"vec_id" < 5)
       .select($"tbl", $"bucket", $"vec_id".as("query_id"), $"embedding".as("q_emb"))
     val cands = keyed
@@ -267,7 +223,7 @@ object Similarity {
       .filter($"neighbor_id" =!= $"query_id")
       .select($"query_id", $"neighbor_id", $"q_emb", $"embedding")
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
     cands.withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
@@ -314,7 +270,7 @@ object Similarity {
     // the broadcast-join side, so without the scoped persist the LSH
     // bucket expression ran over the whole corpus twice. 12 bytes/row.
     val keyed = emb.select($"vec_id",
-      posexplode(lshBucketsCol(spark, $"embedding", dim, np))
+      posexplode(lshBucketsCol($"embedding", dim, np))
         .as(Seq("tbl", "bucket")))
       .scopedPersist()
     // bounded census (≤ tables × 2^planes rows): broadcast filter
@@ -332,7 +288,7 @@ object Similarity {
     val a = emb.select($"vec_id".as("id_a"), $"embedding".as("emb_a"))
     val b = emb.select($"vec_id".as("id_b"), $"embedding".as("emb_b"))
     pairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .withColumn("cos", round(cosineCol(spark, $"emb_a", $"emb_b"), 4))
+      .withColumn("cos", round(cosineCol($"emb_a", $"emb_b"), 4))
       .filter($"cos" >= 0.35)
       .select($"id_a", $"id_b", $"cos".as("cos_sim"))
       .orderBy($"id_a", $"id_b")
@@ -348,7 +304,7 @@ object Similarity {
     val b = emb.select($"vec_id".as("id_b"), $"embedding".as("emb_b"))
     a.crossJoin(b)
       .filter($"id_a" < $"id_b")
-      .withColumn("cos", round(cosineCol(spark, $"emb_a", $"emb_b"), 4))
+      .withColumn("cos", round(cosineCol($"emb_a", $"emb_b"), 4))
       .filter($"cos" >= 0.35)
       .select($"id_a", $"id_b", $"cos".as("cos_sim"))
       .orderBy($"id_a", $"id_b")
@@ -362,7 +318,7 @@ object Similarity {
     // norm lands in its own projection below the Generate, so the O(d)
     // dot runs once per ROW; dividing inside a `transform` lambda would
     // re-evaluate it per ELEMENT (interpreted HOF) — O(d²) per row
-    emb.select($"label", normCol(spark, $"embedding").as("nrm"),
+    emb.select($"label", normCol($"embedding").as("nrm"),
         posexplode($"embedding").as(Seq("pos", "v")))
       .groupBy($"label", $"pos")
       .agg(avg($"v".cast("double") / $"nrm").as("c"))
@@ -388,7 +344,7 @@ object Similarity {
   def s12CentroidDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val c = Tables.embeddings(spark, dir)
-      .select($"label", normCol(spark, $"embedding").as("nrm"),
+      .select($"label", normCol($"embedding").as("nrm"),
         posexplode($"embedding").as(Seq("pos", "v")))
       .groupBy($"label", $"pos")
       .agg(avg($"v".cast("double") / $"nrm").as("c"))
@@ -433,7 +389,7 @@ object Similarity {
     * ([[pqCodebooks]]). Deterministic AND cross-engine replayable
     * (the KMeans/d14 discipline): seed = first `k` rows, squared-L2
     * assignment with strict < and lowest-index ties (the same rule as
-    * the compiled [[nearestCentroid]]), means as INTEGER sums of
+    * [[nearestCentroidCol]]), means as INTEGER sums of
     * `floor(v · 2^20)` quantized components — integer addition
     * commutes, so the means are order-free and bit-identical to the
     * DuckDB oracle's `sum(CAST(floor(v*qScale) AS BIGINT))` replay —
@@ -465,32 +421,13 @@ object Similarity {
     cents
   }
 
-  /** Best-available cell assignment: the codegen'd native expression
-    * ([[graft.functions.NearestCentroid]]) under the graft extensions,
-    * else the compiled UDF [[nearestCentroid]]. Bit-identical cells
-    * either way (FunctionsSpec). */
-  def nearestCentroidCol(spark: SparkSession, a: Column,
-      cents: Array[Array[Double]]): Column =
-    if (spark.catalog.functionExists("graft_nearest_centroid"))
-      call_function("graft_nearest_centroid", a,
-        typedLit(cents.map(_.toSeq).toSeq))
-    else nearestCentroid(cents)(a)
-
-  /** Compiled nearest-centroid (squared L2) assignment. */
-  private[graft] def nearestCentroid(cents: Array[Array[Double]]) =
-    udf { (emb: Seq[Float]) =>
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val ct = cents(c); var d = 0.0; var i = 0
-        while (i < ct.length) {
-          val diff = emb(i) - ct(i); d += diff * diff; i += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
+  /** Cell assignment via the codegen'd native expression
+    * [[graft.functions.NearestCentroid]]: the centroid matrix rides as
+    * one foldable literal; squared L2 with strict < and lowest-index
+    * ties (the [[lloyd]] rule). */
+  def nearestCentroidCol(a: Column, cents: Array[Array[Double]]): Column =
+    column(NearestCentroid(expression(a),
+      expression(typedLit(cents.map(_.toSeq).toSeq))))
 
   /** Probed cluster ids (the `nprobe` nearest centroids) for a query. */
   private[graft] def probes(cents: Array[Array[Double]], nprobe: Int) =
@@ -556,13 +493,13 @@ object Similarity {
     // driver-local Lloyd over the bounded sample (see ivfCentroids)
     val cents = fullCents(spark, dir)
     val corpus = emb.select($"vec_id".as("neighbor_id"), $"embedding",
-      nearestCentroidCol(spark, $"embedding", cents).as("cell"))
+      nearestCentroidCol($"embedding", cents).as("cell"))
     val qs = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         explode(probes(cents, 4)($"embedding")).as("cell"))
     val cands = corpus.join(qs, Seq("cell"))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
     cands.withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
@@ -635,7 +572,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val cents = oldCents(spark, dir)
     val cells = emb
-      .select(nearestCentroidCol(spark, $"embedding", cents).as("cell_id"),
+      .select(nearestCentroidCol($"embedding", cents).as("cell_id"),
         ($"vec_id" % ingestMod === 0).cast("long").as("isnew"))
       .groupBy($"cell_id")
       .agg(sum(lit(1L) - $"isnew").as("n_old"), sum($"isnew").as("n_new"))
@@ -681,7 +618,7 @@ object Similarity {
     val cents = oldCents(spark, dir)
     // one corpus pass: (cell, old|batch) census, ≤ k·(batches+1) rows
     val census = emb
-      .select(nearestCentroidCol(spark, $"embedding", cents).as("cell_id"),
+      .select(nearestCentroidCol($"embedding", cents).as("cell_id"),
         ($"vec_id" % ingestMod === 0).as("isnew"),
         expr(s"CASE WHEN vec_id % $ingestMod = 0 THEN " +
           s"(vec_id div $ingestMod) % $numIngestBatches ELSE -1 END")
@@ -742,7 +679,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val cents = fullCents(spark, dir)
     val corpus = emb.select($"vec_id".as("neighbor_id"), $"embedding",
-      nearestCentroidCol(spark, $"embedding", cents).as("cell"))
+      nearestCentroidCol($"embedding", cents).as("cell"))
     val qs = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         posexplode(probes(cents, sweepProbes.max)($"embedding"))
@@ -750,7 +687,7 @@ object Similarity {
     val cands = corpus.join(qs, Seq("cell"))
       .filter($"neighbor_id" =!= $"query_id")
       .select($"query_id", $"neighbor_id", $"pidx",
-        cosineCol(spark, $"q_emb", $"embedding").as("cos"))
+        cosineCol($"q_emb", $"embedding").as("cos"))
       .scopedPersist()
     val truth = s1KnnBrute(spark, dir)
       .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
@@ -826,14 +763,14 @@ object Similarity {
     val cents = fullCents(spark, dir)
     val corpus = emb.select($"vec_id".as("neighbor_id"),
       $"label".as("n_label"), $"embedding",
-      nearestCentroidCol(spark, $"embedding", cents).as("cell"))
+      nearestCentroidCol($"embedding", cents).as("cell"))
     val qs = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("query_id"), $"label".as("q_label"),
         $"embedding".as("q_emb"),
         explode(probes(cents, filteredProbes)($"embedding")).as("cell"))
     val cands = corpus.join(qs, Seq("cell"))
       .filter($"neighbor_id" =!= $"query_id" && $"n_label" === $"q_label")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
     val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")
     cands.withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
@@ -877,60 +814,25 @@ object Similarity {
     }
   }
 
-  /** Best-available PQ encoder: the codegen'd native expression
-    * ([[graft.functions.PqEncode]] — codebook baked into the generated
-    * stage via a reference object, zero per-row allocation) when the
-    * session carries the graft extensions, else the compiled UDF
-    * [[pqEncode]]. Bit-identical codes either way (FunctionsSpec). */
-  def pqEncodeCol(spark: SparkSession, a: Column,
-      books: Array[Array[Array[Double]]]): Column =
-    if (spark.catalog.functionExists("graft_pq_encode"))
-      call_function("graft_pq_encode", a,
-        typedLit(books.map(_.map(_.toSeq).toSeq).toSeq))
-    else pqEncode(books)(a)
+  /** PQ encoder via the codegen'd native expression
+    * [[graft.functions.PqEncode]]: normalize, then per-subspace
+    * nearest-centroid code (strict <, lowest index — the [[lloyd]]
+    * assignment rule), with the codebook baked into the generated stage
+    * through one foldable literal. */
+  def pqEncodeCol(a: Column, books: Array[Array[Array[Double]]]): Column =
+    column(PqEncode(expression(a),
+      expression(typedLit(books.map(_.map(_.toSeq).toSeq).toSeq))))
 
-  /** Best-available ADC ranking: the codegen'd native expression
-    * ([[graft.functions.PqAdc]]) under the graft extensions — the
-    * bounded per-query distance tables ride as ONE foldable
-    * struct-array literal — else the compiled UDF. Bit-identical
-    * distances either way (FunctionsSpec). */
-  def pqAdcCol(spark: SparkSession, qid: Column, codes: Column,
+  /** ADC ranking via the codegen'd native expression
+    * [[graft.functions.PqAdc]]: ascending-subspace double adds over the
+    * bounded per-query distance tables, which ride as ONE foldable
+    * struct-array literal. An id absent from the tables fails the
+    * query rather than scoring silently. */
+  def pqAdcCol(qid: Column, codes: Column,
       tables: Map[Long, Array[Array[Double]]]): Column =
-    if (spark.catalog.functionExists("graft_pq_adc"))
-      call_function("graft_pq_adc", qid, codes,
-        typedLit(tables.toSeq.sortBy(_._1)
-          .map { case (id, t) => (id, t.map(_.toSeq).toSeq) }))
-    else pqAdc(tables)(qid, codes)
-
-  /** Compiled ADC ranking (ascending-subspace double adds — the exact
-    * arithmetic of the native expression). */
-  private[graft] def pqAdc(tables: Map[Long, Array[Array[Double]]]) =
-    udf { (qid: Long, codes: Seq[Int]) =>
-      val t = tables(qid)
-      var s = 0.0; var m = 0
-      while (m < t.length) { s += t(m)(codes(m)); m += 1 }
-      s
-    }
-
-  /** Compiled PQ encoder: normalize, then per-subspace nearest-centroid
-    * code (strict <, lowest index — the [[lloyd]] assignment rule). */
-  private[graft] def pqEncode(books: Array[Array[Array[Double]]]) =
-    udf { (emb: Seq[Float]) =>
-      val v = normalized(emb.map(_.toDouble).toArray)
-      val sub = v.length / books.length
-      Array.tabulate(books.length) { m =>
-        val book = books(m); val off = m * sub
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < book.length) {
-          val ct = book(c); var d = 0.0; var i = 0
-          while (i < sub) { val t = v(off + i) - ct(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      }
-    }
+    column(PqAdc(expression(qid), expression(codes),
+      expression(typedLit(tables.toSeq.sortBy(_._1)
+        .map { case (id, t) => (id, t.map(_.toSeq).toSeq) }))))
 
   /** D19 scale path #3: product-quantization ANN with asymmetric
     * distance computation (ADC). The corpus is encoded ONCE into 4
@@ -970,11 +872,11 @@ object Similarity {
       }
     }.toMap
     val corpus = emb.select($"vec_id".as("neighbor_id"),
-      pqEncodeCol(spark, $"embedding", books).as("codes"))
+      pqEncodeCol($"embedding", books).as("codes"))
     val qIds = qRows.map(_._1).toSeq.toDF("query_id")
     val scored = corpus.crossJoin(broadcast(qIds))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("adc", pqAdcCol(spark, $"query_id", $"codes", tables))
+      .withColumn("adc", pqAdcCol($"query_id", $"codes", tables))
       .withColumn("salt", pmod(crc32($"neighbor_id".cast("string")), lit(32)))
     val wLocal = Window.partitionBy($"query_id", $"salt")
       .orderBy($"adc".asc, $"neighbor_id")
@@ -993,7 +895,7 @@ object Similarity {
     shortlist
       .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), "neighbor_id")
       .join(broadcast(qEmb), "query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
       .select($"query_id", $"rk", $"neighbor_id", round($"cos", 4).as("cos_sim"))
@@ -1017,8 +919,8 @@ object Similarity {
     val cents = fullCents(spark, dir)
     val books = fullBooks(spark, dir)
     val corpus = emb.select($"vec_id".as("neighbor_id"),
-      nearestCentroidCol(spark, $"embedding", cents).as("cell"),
-      pqEncodeCol(spark, $"embedding", books).as("codes"))
+      nearestCentroidCol($"embedding", cents).as("cell"),
+      pqEncodeCol($"embedding", books).as("codes"))
     val qRows = emb.filter($"vec_id" < 5)
       .select($"vec_id", $"embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
@@ -1045,7 +947,7 @@ object Similarity {
     }.toMap
     val scored = corpus.join(broadcast(probeDf), Seq("cell"))
       .filter($"neighbor_id" =!= $"query_id")
-      .withColumn("adc", pqAdcCol(spark, $"query_id", $"codes", tables))
+      .withColumn("adc", pqAdcCol($"query_id", $"codes", tables))
       .withColumn("salt", pmod(crc32($"neighbor_id".cast("string")), lit(32)))
     val wLocal = Window.partitionBy($"query_id", $"salt")
       .orderBy($"adc".asc, $"neighbor_id")
@@ -1062,7 +964,7 @@ object Similarity {
     shortlist
       .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), "neighbor_id")
       .join(broadcast(qEmb), "query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
       .select($"query_id", $"rk", $"neighbor_id", round($"cos", 4).as("cos_sim"))
@@ -1088,7 +990,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val cents = fullCents(spark, dir)
     val cells = emb
-      .select(nearestCentroidCol(spark, $"embedding", cents).as("cell"))
+      .select(nearestCentroidCol($"embedding", cents).as("cell"))
       .groupBy($"cell").agg(count(lit(1)).as("n_vecs"))
     val tot = cells.agg(sum($"n_vecs").as("n"),
       sum(($"n_vecs".cast("decimal(38,0)") * $"n_vecs")).as("ss"),
@@ -1109,7 +1011,7 @@ object Similarity {
     * contributes noise, not signal, to every ADC score, and the fix —
     * more centroids or a rotation — is per-subspace).
     *
-    * Determinism: assignment and error reuse the [[pqEncode]]
+    * Determinism: assignment and error reuse the [[pqEncodeCol]]
     * arithmetic (ascending-dim squared-difference fold — identical
     * IEEE order to the oracle's list_inner_product over the dv list);
     * each per-vector error is snapped to a 1e-9 integer grid and
@@ -1298,7 +1200,7 @@ object Similarity {
     val scored = emb.select($"vec_id".as("cid"), $"embedding")
       .crossJoin(broadcast(q))
       .filter($"cid" =!= $"query_id")
-      .withColumn("rel", round(cosineCol(spark, $"q_emb", $"embedding"), 4))
+      .withColumn("rel", round(cosineCol($"q_emb", $"embedding"), 4))
       .withColumn("salt", pmod(crc32($"cid".cast("string")), lit(32)))
     val wL = Window.partitionBy($"query_id", $"salt")
       .orderBy($"rel".desc, $"cid")
@@ -1312,7 +1214,7 @@ object Similarity {
       .join(cand.select($"query_id", $"cid".as("cid_b"), $"embedding".as("eb")),
         Seq("query_id"))
       .filter($"cid_a" =!= $"cid_b")
-      .withColumn("sim", round(cosineCol(spark, $"ea", $"eb"), 4))
+      .withColumn("sim", round(cosineCol($"ea", $"eb"), 4))
       .select($"query_id", $"cid_a", $"cid_b", $"sim")
       .scopedPersist()
     val pool = cand.select($"query_id", $"cid", $"rel")
@@ -1376,7 +1278,7 @@ object Similarity {
     val scored = emb.select($"vec_id".as("cand_id"), $"embedding", $"label")
       .crossJoin(broadcast(anchors))
       .filter($"cand_id" =!= $"anchor_id")
-      .withColumn("cos", cosineCol(spark, $"a_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"a_emb", $"embedding"))
       .withColumn("salt", pmod(crc32($"cand_id".cast("string")), lit(32)))
       .scopedPersist()
     def extreme(df: DataFrame, asc: Boolean): DataFrame = {
@@ -1432,7 +1334,7 @@ object Similarity {
     var centerEmb = seed.getSeq[Float](1).toArray
     var state = emb
       .withColumn("dist",
-        lit(1.0) - cosineCol(spark, $"embedding", typedLit(centerEmb)))
+        lit(1.0) - cosineCol($"embedding", typedLit(centerEmb)))
       .localCheckpoint()
     for (r <- 2 to kcenterK) {
       val next = state.orderBy($"dist".desc, $"vec_id").limit(1).collect()(0)
@@ -1442,7 +1344,7 @@ object Similarity {
       centerEmb = next.getSeq[Float](1).toArray
       state = state
         .withColumn("dist", least($"dist",
-          lit(1.0) - cosineCol(spark, $"embedding", typedLit(centerEmb))))
+          lit(1.0) - cosineCol($"embedding", typedLit(centerEmb))))
         .localCheckpoint()
     }
     picks.toSeq.map(p => (p._1, p._2, p._3))
@@ -1453,7 +1355,7 @@ object Similarity {
   /** Compiled squared-L2 distance for `array<float>` pairs: float →
     * double per element, ascending sequential summation — bit-identical
     * to DuckDB's `list_inner_product(dv, dv)` over the ascending diff
-    * list ([[sqDistCols]]), the same parity contract as [[cosineF]]. */
+    * list ([[sqDistCols]]), the same parity contract as [[cosineCol]]. */
   private[graft] val sqDistF = udf { (a: Seq[Float], b: Seq[Float]) =>
     var d = 0.0; var i = 0
     val n = a.length
@@ -1511,7 +1413,7 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val cents = fullCents(spark, dir)
     val cells = emb.select($"vec_id", $"embedding",
-      nearestCentroidCol(spark, $"embedding", cents).as("cell"))
+      nearestCentroidCol($"embedding", cents).as("cell"))
       .scopedPersist()
     // within-cell exact kNN graph: the NSW base layer, cell-confined
     val a = cells.select($"cell", $"vec_id".as("node_id"),
@@ -1655,7 +1557,7 @@ object Similarity {
     shortlist
       .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), "neighbor_id")
       .join(broadcast(qEmb), "query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
       .select($"query_id", $"rk", $"neighbor_id", round($"cos", 4).as("cos_sim"))
@@ -1732,7 +1634,7 @@ object Similarity {
     shortlist
       .join(emb.select($"vec_id".as("neighbor_id"), $"embedding"), "neighbor_id")
       .join(broadcast(qEmb), "query_id")
-      .withColumn("cos", cosineCol(spark, $"q_emb", $"embedding"))
+      .withColumn("cos", cosineCol($"q_emb", $"embedding"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= 5)
       .select($"query_id", $"rk", $"neighbor_id", round($"cos", 4).as("cos_sim"))

@@ -40,10 +40,9 @@ final class IvfIngest(val centroids: Array[Array[Double]],
   /** Fold one micro-batch (`batch_id` long, `embedding` array) into
     * the running census. Empty batches are no-ops. */
   def update(batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
     val counts = batch
       .select(col("batch_id").cast("long").as("batch_id"),
-        Similarity.nearestCentroidCol(spark, col("embedding"), centroids)
+        Similarity.nearestCentroidCol(col("embedding"), centroids)
           .as("cell_id"))
       .groupBy(col("batch_id"), col("cell_id"))
       .agg(count(lit(1)).as("n"))
@@ -113,9 +112,8 @@ object IvfIngest {
 
   private def fromCentroids(cents: Array[Array[Double]],
       old: DataFrame): IvfIngest = {
-    val spark = old.sparkSession
     val oldCensus = old
-      .select(Similarity.nearestCentroidCol(spark, col("embedding"), cents)
+      .select(Similarity.nearestCentroidCol(col("embedding"), cents)
         .as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -109,30 +109,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("sharedSigs cache survives a session stop: second session recomputes (forked JVM)") {
-    // must fork: the shared TestSpark session can't be stopped in-process.
-    // Test / fork := true puts the full test classpath in java.class.path.
-    import scala.sys.process._
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-cp", sys.props("java.class.path"),
-      "graft.TwoSessionCheck", sf)
-    val out = new StringBuilder
-    val logger = ProcessLogger(l => out.append(l).append('\n'),
-      l => out.append(l).append('\n'))
-    val rc = Process(cmd).!(logger)
-    assert(rc == 0 && out.toString.contains("TWO_SESSION_OK"),
-      s"two-session check failed (rc=$rc):\n${out.toString.takeRight(3000)}")
+    // must fork: the shared TestSpark session can't be stopped in-process
+    val (rc, out) = ForkedJvm.run("graft.TwoSessionCheck", sf)
+    assert(rc == 0 && out.contains("TWO_SESSION_OK"),
+      s"two-session check failed (rc=$rc):\n${out.takeRight(3000)}")
   }
 
   test("decontaminatePairs counts shared shingles and DF-caps boilerplate") {

@@ -5,10 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
 
-/** The native `graft_cosine` Catalyst expression must be registered by
-  * GraftExtensions, produce BIT-identical doubles to the compiled UDF
-  * it supersedes (so swapping never changes an oracle hash), and run
-  * inside whole-stage codegen rather than at a UDF boundary. */
+/** The native `graft_*` Catalyst expressions must be registered by
+  * GraftExtensions, produce BIT-identical results to the scalar
+  * references in [[SimilarityReference]] (run here as test-local UDFs,
+  * so a mismatch can never change an oracle hash unseen), and run
+  * inside whole-stage codegen rather than at a UDF boundary — with or
+  * without the extensions. */
 class FunctionsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -29,7 +31,7 @@ class FunctionsSpec extends AnyFunSuite {
     val pairs = a.crossJoin(b)
     val both = pairs.select($"id_a", $"id_b",
         call_function("graft_cosine", $"ea", $"eb").as("native"),
-        Similarity.cosineF($"ea", $"eb").as("viaUdf"))
+        udf(SimilarityReference.cosineF _).apply($"ea", $"eb").as("viaUdf"))
       .collect()
     assert(both.length == 40 * 40)
     both.foreach { r =>
@@ -112,9 +114,9 @@ class FunctionsSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(1)),
         s"${r.getDouble(0)} vs ${r.getDouble(1)}")
     }
-    // dispatch helper returns the same value
+    // the helper returns the same value
     val d = emb.limit(5).select(
-      Similarity.normCol(spark, $"embedding").as("n"),
+      Similarity.normCol($"embedding").as("n"),
       Similarity.l2norm($"embedding").as("h")).collect()
     d.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
@@ -124,17 +126,17 @@ class FunctionsSpec extends AnyFunSuite {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val books = Similarity.pqCodebooks(emb)
     val rows = emb.select(
-        Similarity.pqEncodeCol(spark, $"embedding", books).as("native"),
-        Similarity.pqEncode(books)($"embedding").as("viaUdf"))
+        Similarity.pqEncodeCol($"embedding", books).as("native"),
+        udf(SimilarityReference.pqEncode(books)).apply($"embedding").as("viaUdf"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getSeq[Int](0) == r.getSeq[Int](1),
         s"${r.getSeq[Int](0)} vs ${r.getSeq[Int](1)}")
     }
-    // and the dispatch really used the native expression under codegen
+    // and the helper really plans the native expression under codegen
     val plan = emb.select(
-      Similarity.pqEncodeCol(spark, $"embedding", books))
+      Similarity.pqEncodeCol($"embedding", books))
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_pq_encode"), s"native expression not planned:\n$plan")
     assert(!plan.contains("UDF("), s"UDF boundary in the encode plan:\n$plan")
@@ -159,11 +161,11 @@ class FunctionsSpec extends AnyFunSuite {
       }
     }.toMap
     val coded = emb.select($"vec_id",
-        Similarity.pqEncodeCol(spark, $"embedding", books).as("codes"))
+        Similarity.pqEncodeCol($"embedding", books).as("codes"))
       .crossJoin(broadcast(qRows.map(_._1).toSeq.toDF("query_id")))
     val rows = coded.select(
-        Similarity.pqAdcCol(spark, $"query_id", $"codes", tables).as("native"),
-        Similarity.pqAdc(tables)($"query_id", $"codes").as("viaUdf"))
+        Similarity.pqAdcCol($"query_id", $"codes", tables).as("native"),
+        udf(SimilarityReference.pqAdc(tables)).apply($"query_id", $"codes").as("viaUdf"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -171,16 +173,16 @@ class FunctionsSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(1)),
         s"${r.getDouble(0)} vs ${r.getDouble(1)}")
     }
-    // the dispatch really planned the native expression under codegen
+    // the helper really planned the native expression under codegen
     val plan = coded.select(
-        Similarity.pqAdcCol(spark, $"query_id", $"codes", tables))
+        Similarity.pqAdcCol($"query_id", $"codes", tables))
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_pq_adc"), s"native expression not planned:\n$plan")
     assert(!plan.contains("UDF("), s"UDF boundary in the ADC plan:\n$plan")
-    // an unknown query id fails loudly (the UDF's contract), never a
-    // silent wrong distance
+    // an unknown query id fails loudly (the reference's contract), never
+    // a silent wrong distance
     val err = intercept[Exception] {
-      coded.limit(1).select(Similarity.pqAdcCol(spark, lit(99999L),
+      coded.limit(1).select(Similarity.pqAdcCol(lit(99999L),
         $"codes", tables)).collect()
     }
     assert(err.getMessage != null)
@@ -190,15 +192,15 @@ class FunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val rows = emb.select(
-        Similarity.lshBucketsCol(spark, $"embedding", 64).as("native"),
-        Similarity.lshBuckets(64)($"embedding").as("viaUdf"))
+        Similarity.lshBucketsCol($"embedding", 64).as("native"),
+        udf(SimilarityReference.lshBuckets(64)).apply($"embedding").as("viaUdf"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getSeq[Int](0) == r.getSeq[Int](1),
         s"${r.getSeq[Int](0)} vs ${r.getSeq[Int](1)}")
     }
-    val plan = emb.select(Similarity.lshBucketsCol(spark, $"embedding", 64))
+    val plan = emb.select(Similarity.lshBucketsCol($"embedding", 64))
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_lsh_buckets"), s"native expression not planned:\n$plan")
     assert(!plan.contains("UDF("), s"UDF boundary in the bucket plan:\n$plan")
@@ -209,13 +211,13 @@ class FunctionsSpec extends AnyFunSuite {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val cents = Similarity.ivfCentroids(emb, k = 16, iters = 2)
     val rows = emb.select(
-        Similarity.nearestCentroidCol(spark, $"embedding", cents).as("native"),
-        Similarity.nearestCentroid(cents)($"embedding").as("viaUdf"))
+        Similarity.nearestCentroidCol($"embedding", cents).as("native"),
+        udf(SimilarityReference.nearestCentroid(cents)).apply($"embedding").as("viaUdf"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1),
       s"${r.getInt(0)} vs ${r.getInt(1)}"))
-    val plan = emb.select(Similarity.nearestCentroidCol(spark, $"embedding", cents))
+    val plan = emb.select(Similarity.nearestCentroidCol($"embedding", cents))
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_nearest_centroid"), s"native expression not planned:\n$plan")
     assert(!plan.contains("UDF("), s"UDF boundary in the assignment plan:\n$plan")
@@ -229,7 +231,7 @@ class FunctionsSpec extends AnyFunSuite {
       (1L, Some(Array.fill(64)(0.0f))),
       (2L, Option.empty[Array[Float]])).toDF("id", "embedding")
     val rows = df.select(
-      Similarity.pqEncodeCol(spark, $"embedding", books)).collect()
+      Similarity.pqEncodeCol($"embedding", books)).collect()
     assert(!rows(0).isNullAt(0) && rows(0).getSeq[Int](0).length == Similarity.pqSubspaces)
     assert(rows(1).isNullAt(0))
   }
@@ -262,17 +264,11 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!plan.contains("UDF("), s"UDF boundary still in the s1 plan:\n$plan")
   }
 
-  test("cosineCol falls back to the UDF when the extension is absent") {
-    // the catalog probe is the dispatch condition; simulate its negative
-    // branch directly on a name that is never registered
-    assert(!spark.catalog.functionExists("graft_cosine_nonexistent"))
-    // and the positive branch is what every similarity query exercises
-    // end-to-end above — both sides of the dispatch are covered
-    import spark.implicits._
-    val df = Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f))).toDF("a", "b")
-    val viaDispatch = df.select(
-      Similarity.cosineCol(spark, $"a", $"b").as("c")).head.getDouble(0)
-    assert(math.abs(viaDispatch - 1.0) < 1e-15)
+  test("helpers plan graft_* nodes in codegen without the extensions (forked JVM)") {
+    // must fork: the shared TestSpark session carries the extensions
+    val (rc, out) = ForkedJvm.run("graft.NoExtensionsCheck", sf)
+    assert(rc == 0 && out.contains("NO_EXTENSIONS_OK"),
+      s"extension-less check failed (rc=$rc):\n${out.takeRight(3000)}")
   }
 
   test("BitsetReach folds neighbor one-hots and unions registers exactly") {

@@ -137,7 +137,7 @@ class SimilaritySpec extends AnyFunSuite {
     val total = emb.count()
     val sizes = emb
       .select($"vec_id",
-        posexplode(Similarity.lshBuckets(64)($"embedding")).as(Seq("tbl", "bucket")))
+        posexplode(udf(SimilarityReference.lshBuckets(64)).apply($"embedding")).as(Seq("tbl", "bucket")))
       .groupBy($"tbl", $"bucket").count()
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2)))
     assert(sizes.nonEmpty)
@@ -596,7 +596,7 @@ class SimilaritySpec extends AnyFunSuite {
     val cents = Similarity.ivfCentroids(
       emb.filter($"vec_id" % Similarity.ingestMod =!= 0), k = 16, iters = 2)
     val assigned = emb.select(
-        Similarity.nearestCentroidCol(spark, $"embedding", cents),
+        Similarity.nearestCentroidCol($"embedding", cents),
         ($"vec_id" % Similarity.ingestMod === 0))
       .collect().map(r => (r.getInt(0), r.getBoolean(1)))
     val expected = assigned.groupBy(_._1).toSeq.map { case (cell, xs) =>
@@ -636,7 +636,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id", col("cell")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val viaQuery = emb.select($"vec_id",
-        Similarity.nearestCentroidCol(spark, $"embedding", direct).as("cell"))
+        Similarity.nearestCentroidCol($"embedding", direct).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaModel == viaQuery && viaModel.nonEmpty)
     // query-side probe list ≡ the s6 probe udf
@@ -680,7 +680,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"vec_id", col("pq_codes")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     val viaQuery = emb.select($"vec_id",
-        Similarity.pqEncodeCol(spark, $"embedding", direct).as("c"))
+        Similarity.pqEncodeCol($"embedding", direct).as("c"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
     assert(viaModel == viaQuery && viaModel.nonEmpty)
     // persistence round-trip: same codebooks, same codes
