@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, DotProduct, DotProductD, LshBuckets, NearestCentroid, PqAdc, PqEncode, SumOfSquares}
+import graft.functions.{CosineSimilarity, DotProduct, DotProductD, LshBuckets, NearestCentroid, PcaProject, PqAdc, PqEncode, SumOfSquares}
 import graft.plans.RewriteHofDot
 
 /** Session extensions for the graft engine — the public plug-in point
@@ -55,5 +55,6 @@ object GraftExtensions {
     ("graft_pq_encode", classOf[PqEncode], 2, c => PqEncode(c(0), c(1))),
     ("graft_pq_adc", classOf[PqAdc], 3, c => PqAdc(c(0), c(1), c(2))),
     ("graft_lsh_buckets", classOf[LshBuckets], 2, c => LshBuckets(c(0), c(1))),
-    ("graft_nearest_centroid", classOf[NearestCentroid], 2, c => NearestCentroid(c(0), c(1))))
+    ("graft_nearest_centroid", classOf[NearestCentroid], 2, c => NearestCentroid(c(0), c(1))),
+    ("graft_pca_project", classOf[PcaProject], 2, c => PcaProject(c(0), c(1))))
 }

@@ -4,7 +4,7 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 
 /** Distributed column statistics + Gram/covariance computation.
@@ -44,15 +44,34 @@ object Cov {
   /** Extract an `RDD[Vector]` from either a `VectorUDT` column or an
     * `array<numeric>` column (the fixture `embeddings.embedding` is
     * `array<float>`; the reference API is VectorUDT — support both,
-    * cf. dense/sparse equivalence in PCASuite.scala:155-190). */
+    * cf. dense/sparse equivalence in PCASuite.scala:155-190).
+    *
+    * Array columns are read from the plan's internal rows: one primitive
+    * `double[]` per row, float widened element by element, no `Row` and
+    * no boxing. `array<float>`/`array<double>` are read as they are;
+    * other numeric arrays are cast to `array<double>` in the plan. A
+    * null row or a null element fails the job with an
+    * `IllegalArgumentException` instead of entering the Gram. */
   def vectorRdd(df: DataFrame, inputCol: String): RDD[Vector] = {
     df.schema(inputCol).dataType match {
-      case _: ArrayType =>
-        df.select(col(inputCol).cast("array<double>")).rdd.map { r =>
-          val s = r.getSeq[Double](0)
-          if (s == null) throw new IllegalArgumentException(
+      case ArrayType(et, _) =>
+        val isFloat = et == FloatType
+        val arrays =
+          if (isFloat || et == DoubleType) df.select(col(inputCol))
+          else df.select(col(inputCol).cast("array<double>"))
+        arrays.queryExecution.toRdd.map { row =>
+          if (row.isNullAt(0)) throw new IllegalArgumentException(
             s"null value in input column '$inputCol'")
-          Vectors.dense(s.toArray)
+          val a = row.getArray(0)
+          val v = new Array[Double](a.numElements())
+          var i = 0
+          while (i < v.length) {
+            if (a.isNullAt(i)) throw new IllegalArgumentException(
+              s"null element at index $i in input column '$inputCol'")
+            v(i) = if (isFloat) a.getFloat(i) else a.getDouble(i)
+            i += 1
+          }
+          Vectors.dense(v)
         }
       case _ =>
         df.select(col(inputCol)).rdd.map { r =>

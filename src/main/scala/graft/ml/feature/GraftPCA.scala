@@ -1,24 +1,30 @@
 package graft.ml.feature
 
-import breeze.linalg.{DenseMatrix => BDM}
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.attribute.AttributeGroup
-import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, SQLDataTypes, Vector}
+import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, SQLDataTypes}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, Metadata, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, typedLit}
+import org.apache.spark.sql.graftshim.ExpressionShim.{column, expression}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, Metadata, StructField, StructType}
 
+import graft.functions.PcaProject
 import graft.ml.{Cov, Eigen}
 
 /** Principal Component Analysis, API-compatible with the reference's
   * `com.nvidia.spark.ml.feature.PCA` (reference: PCA.scala:27-37,
   * RapidsPCA.scala:30-210): same params (`k`, `inputCol`, `outputCol`,
-  * `meanCentering`, plus the GPU algorithm-selection switches `useGemm`,
-  * `useCuSolverSVD`, `gpuId` kept as inert compatibility params), same
+  * `meanCentering`, `useGemm`, plus the GPU switches `useCuSolverSVD`
+  * and `gpuId` kept as inert compatibility params), same
   * fit/transform/persistence protocol, deterministic canonical-sign
-  * eigenvectors.
+  * eigenvectors. `useGemm` governs the covariance accumulation only, as
+  * in the reference (RapidsPCA.scala:47-52): blocked dgemm or per-row
+  * upper-triangle updates. Fit keeps only the top-k eigenpairs
+  * ([[graft.ml.Eigen]]); transform is one codegen'd projection
+  * expression ([[graft.functions.PcaProject]]) on every input type.
   *
   * Differences from stock Spark ML PCA, matching the reference:
   *  - `meanCentering=false` computes components of the uncentered second
@@ -36,8 +42,9 @@ trait GraftPCAParams extends Params {
   final val meanCentering = new BooleanParam(this, "meanCentering",
     "center columns before computing covariance (reference RapidsPCA.scala:36-45)")
   final val useGemm = new BooleanParam(this, "useGemm",
-    "blocked-GEMM (BLAS dgemm per row block, the reference default) vs " +
-      "per-row upper-triangle accumulation (reference RapidsPCA.scala:47-52)")
+    "covariance accumulation only: blocked-GEMM (BLAS dgemm per row block, " +
+      "the reference default) vs per-row upper-triangle accumulation " +
+      "(reference RapidsPCA.scala:47-52); transform is the same either way")
   final val useCuSolverSVD = new BooleanParam(this, "useCuSolverSVD",
     "compat: inert on JVM (reference RapidsPCA.scala:54-59)")
   final val gpuId = new IntParam(this, "gpuId",
@@ -169,8 +176,8 @@ object GraftPCA extends MLReadable[GraftPCA] {
       s""""sparkVersion":"${spark.version}","uid":"${instance.uid}",""" +
       s""""paramMap":{$pairs},"defaultParamMap":{}}"""
     import spark.implicits._
-    Seq(json).toDS().repartition(1).write.mode("overwrite")
-      .text(s"$path/metadata")
+    // a one-row local Dataset is one partition: one part file, no shuffle
+    Seq(json).toDS().write.mode("overwrite").text(s"$path/metadata")
   }
 
   private[feature] def paramsData(p: GraftPCAParams with Params): ParamsData =
@@ -193,7 +200,7 @@ object GraftPCA extends MLReadable[GraftPCA] {
       val spark = sparkSession
       import spark.implicits._
       Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
+        .write.mode("overwrite").parquet(s"$path/params")
       writeMetadata(path, spark, instance)
     }
   }
@@ -222,86 +229,24 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
 
   def setInputCol(value: String): this.type = set(inputCol, value)
   def setOutputCol(value: String): this.type = set(outputCol, value)
-  def setUseGemm(value: Boolean): this.type = set(useGemm, value)
 
+  /** One appended column: the codegen'd [[graft.functions.PcaProject]]
+    * with pcᵀ as a foldable k×n literal. `array<float>`/`array<double>`
+    * input goes in directly, other numeric arrays are cast to
+    * `array<double>` in the plan, and VectorUDT input (dense or sparse)
+    * is wrapped in Spark's `vector_to_array`/`array_to_vector`. */
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema, logging = true)
-    if ($(useGemm)) transformGemm(dataset.toDF()) else transformGemv(dataset)
-  }
-
-  /** Per-row projection: one BLAS gemv per row, sparse-aware; the
-    * transposed component matrix is precomputed on the driver and is the
-    * ONLY closure state (reference: RapidsPCA.scala:187). */
-  private def transformGemv(dataset: Dataset[_]): DataFrame = {
-    val pcT = pc.transpose
-    dataset.schema($(inputCol)).dataType match {
-      case t if t == SQLDataTypes.VectorType =>
-        val f = udf { v: Vector => pcT.multiply(v) }
-        dataset.withColumn($(outputCol), f(col($(inputCol))))
-      case _: ArrayType =>
-        val f = udf { arr: Seq[Double] =>
-          pcT.multiply(new DenseVector(arr.toArray)).values.toSeq
-        }
-        dataset.withColumn($(outputCol),
-          f(col($(inputCol)).cast("array<double>")))
-      case other => throw new IllegalArgumentException(s"bad input type $other")
+    val outField = transformSchema(dataset.schema, logging = true)($(outputCol))
+    val in = col($(inputCol))
+    val (rows, isVec) = dataset.schema($(inputCol)).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => (in, false)
+      case _: ArrayType => (in.cast("array<double>"), false)
+      case _ => (vector_to_array(in), true)
     }
-  }
-
-  /** Rows per GEMM block: ~1M buffered doubles (8 MB), capped at 4096
-    * rows so a block always fits beside the shuffle buffers. */
-  private def gemmBlockRows(n: Int): Int =
-    math.max(16, math.min(4096, (1 << 20) / math.max(1, n)))
-
-  /** Partition-batched GEMM projection — the blocked transform the
-    * reference carries as a disabled variant (RapidsPCA.scala:172-185):
-    * buffer rows into an m×n block, ONE BLAS dgemm per block against the
-    * n×k component matrix, instead of one gemv per row. Same
-    * float→double widening and multiply-accumulate per element as
-    * [[transformGemv]], so outputs agree to machine precision (PCASpec
-    * asserts 1e-12 on the fixture embeddings). */
-  private def transformGemm(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val n = pc.numRows
-    val kk = pc.numCols
-    // Spark ML and Breeze matrices are both column-major: wrap, no copy
-    val pcB = new BDM[Double](n, kk, pc.values)
-    val isVec = df.schema($(inputCol)).dataType == SQLDataTypes.VectorType
-    val outSchema = validateAndTransformSchema(df.schema)
-    val block = gemmBlockRows(n)
-    // pre-cast array input to double in the plan, so the buffered rows
-    // carry doubles instead of unboxing arbitrary numerics per element
-    val prepped =
-      if (isVec) df
-      else df.withColumn("__graft_in", col($(inputCol)).cast("array<double>"))
-    val inIdx = if (isVec) df.schema.fieldIndex($(inputCol))
-                else prepped.schema.length - 1
-    val nOrig = df.schema.length
-    val rdd = prepped.rdd.mapPartitions { it =>
-      it.grouped(block).flatMap { rows =>
-        val m = rows.size
-        val a = new BDM[Double](m, n)
-        var i = 0
-        rows.foreach { r =>
-          if (isVec) {
-            val v = r.getAs[Vector](inIdx)
-            var j = 0; while (j < n) { a(i, j) = v(j); j += 1 }
-          } else {
-            val s = r.getSeq[Double](inIdx)
-            var j = 0; while (j < n) { a(i, j) = s(j); j += 1 }
-          }
-          i += 1
-        }
-        val p = a * pcB // m×k in one dgemm
-        rows.iterator.zipWithIndex.map { case (r, ri) =>
-          val out: Any =
-            if (isVec) new DenseVector(Array.tabulate(kk)(c => p(ri, c)))
-            else Array.tabulate(kk)(c => p(ri, c)).toSeq
-          Row.fromSeq(r.toSeq.take(nOrig) :+ out)
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    val pcT = pc.colIter.map(_.toArray.toSeq).toSeq
+    val projected = column(PcaProject(expression(rows), expression(typedLit(pcT))))
+    dataset.select(col("*"), (if (isVec) array_to_vector(projected) else projected)
+      .as($(outputCol), outField.metadata))
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -324,8 +269,7 @@ object GraftPCAModel extends MLReadable[GraftPCAModel] {
         instance.pc.numCols, instance.pc.values,
         instance.explainedVariance.values)
       // single artifact file, as the reference (RapidsPCA.scala:224)
-      Seq(d).toDS().repartition(1).write.mode("overwrite")
-        .parquet(s"$path/data")
+      Seq(d).toDS().write.mode("overwrite").parquet(s"$path/data")
       GraftPCA.writeMetadata(path, spark, instance)
     }
   }

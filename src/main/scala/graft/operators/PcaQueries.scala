@@ -108,9 +108,9 @@ object PcaQueries {
     * explainedVariance ratio × covariance trace, so this checks fit
     * (eigenvalues), transform (projections) and the variance identity
     * var(pcᵢᵀv) = λᵢ end-to-end; the oracle pins the exact constant the
-    * identity predicts. Distributed shape: transform is the batched
-    * GEMM path, the per-component variance one partial-aggregated
-    * groupBy over an 8-way posexplode. */
+    * identity predicts. Distributed shape: transform is one codegen'd
+    * `graft_pca_project` column in the scan's stage, the per-component
+    * variance one partial-aggregated groupBy over an 8-way posexplode. */
   def p6PcaWhiten(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val k = 8

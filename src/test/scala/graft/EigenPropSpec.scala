@@ -1,6 +1,6 @@
 package graft
 
-import breeze.linalg.{DenseMatrix => BDM}
+import breeze.linalg.{eigSym, DenseMatrix => BDM}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Eigen
@@ -71,6 +71,38 @@ class EigenPropSpec extends AnyFunSuite {
       for (j <- 0 until k)
         assert(math.abs(trunc.explainedVariance(j) - full.explainedVariance(j)) < 1e-12,
           s"seed $seed")
+    }
+  }
+
+  /** Sample covariance of `rows` Gaussian rows of width n, the matrix
+    * PCA eigendecomposes. */
+  private def sampleCov(n: Int, rows: Int, seed: Long): BDM[Double] = {
+    val rng = new scala.util.Random(seed)
+    val b = BDM.fill(rows, n)(rng.nextGaussian())
+    (b.t * b) / (rows - 1).toDouble
+  }
+
+  test("top-k dsyevr agrees with a full Breeze eigSym reference (n = 64, 512; k = 1, 16, n)") {
+    // rows = n puts eigenvalues close to 0 and to each other (the
+    // hardest case for eigenvectors); rows = 4n is a typical covariance
+    for (n <- Seq(64, 512); rows <- Seq(n, 4 * n)) {
+      val cov = sampleCov(n, rows, n.toLong + rows)
+      // reference: every eigenpair, descending, clamped, canonical sign,
+      // ratios over the sum of all n eigenvalues
+      val eig = eigSym(cov)
+      val values = Array.tabulate(n)(j => math.max(eig.eigenvalues(n - 1 - j), 0.0))
+      val vectors = Eigen.signFlip(BDM.tabulate(n, n)((i, j) => eig.eigenvectors(i, n - 1 - j)))
+      val total = values.sum
+      for (k <- Seq(1, 16, n)) {
+        val res = Eigen.pca(cov, k)
+        assert(res.pc.numRows == n && res.pc.numCols == k && res.eigenvalues.length == k)
+        for (j <- 0 until k; i <- 0 until n)
+          assert(math.abs(res.pc(i, j) - vectors(i, j)) < 1e-10,
+            s"n=$n rows=$rows k=$k pc($i,$j): ${res.pc(i, j)} vs ${vectors(i, j)}")
+        for (j <- 0 until k)
+          assert(math.abs(res.explainedVariance(j) - values(j) / total) < 1e-12,
+            s"n=$n rows=$rows k=$k ratio $j: ${res.explainedVariance(j)} vs ${values(j) / total}")
+      }
     }
   }
 }

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.ml.feature.GraftPCA
 import graft.operators.Similarity
 
 /** Forked-JVM scenario behind FunctionsSpec's extension-less test: on a
   * session built WITHOUT `spark.sql.extensions`, every native-function
-  * helper of [[graft.operators.Similarity]] must still plan its
-  * `graft_*` expression inside a whole-stage codegen stage, with no
-  * UDF boundary. Exit 0 + the marker line = pass. */
+  * helper of [[graft.operators.Similarity]], and the PCA model's
+  * transform, must still plan its `graft_*` expression inside a
+  * whole-stage codegen stage, with no UDF boundary. Exit 0 + the marker
+  * line = pass. */
 object NoExtensionsCheck {
   def main(args: Array[String]): Unit = {
     val sf = args(0)
@@ -38,8 +40,10 @@ object NoExtensionsCheck {
       "graft_pq_encode" -> Similarity.pqEncodeCol($"embedding", books),
       "graft_pq_adc" -> Similarity.pqAdcCol($"vec_id" % 5L,
         Similarity.pqEncodeCol($"embedding", books), tables))
-    cases.foreach { case (name, c) =>
-      val q = emb.select(c.as("v"))
+    val pca = new GraftPCA().setK(4).setInputCol("embedding").setOutputCol("v").fit(emb)
+    val queries = cases.map { case (name, c) => name -> emb.select(c.as("v")) } :+
+      ("graft_pca_project" -> pca.transform(emb))
+    queries.foreach { case (name, q) =>
       require(q.collect().nonEmpty, s"$name: no rows")
       val plan = q.queryExecution.executedPlan.toString
       require(raw"\*\(\d+\) [^\n]*\b$name\(".r.findFirstIn(plan).isDefined,

@@ -3,8 +3,14 @@ package graft
 import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, Vector, Vectors}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.PcaProject
 import graft.ml.feature.{GraftPCA, GraftPCAModel}
 import graft.ml.{Cov, Eigen}
 
@@ -162,36 +168,128 @@ class PCASpec extends AnyFunSuite {
       assert(math.abs(m1.pc.values(i) - m2.pc.values(i)) < tol)
   }
 
-  test("GEMM-batched transform equals the per-row gemv transform (1e-12)") {
+  /** pcᵀx computed locally, ascending-index accumulation. */
+  private def localProjection(pc: DenseMatrix, x: Array[Double]): Array[Double] =
+    Array.tabulate(pc.numCols)(j => (0 until pc.numRows).map(i => pc(i, j) * x(i)).sum)
+
+  test("transform equals a locally computed pc^T x (1e-12) on every input type") {
     import spark.implicits._
-    // array<float> input on the 64-dim fixture embeddings
+    import org.apache.spark.sql.functions.{col, transform => mapElems}
+    // array<float> on the 64-dim fixture embeddings, plus the same rows
+    // as array<double> and (scaled, truncated) as array<int>
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val model = new GraftPCA().setK(8)
       .setInputCol("embedding").setOutputCol("o").fit(emb)
-    def proj(gemm: Boolean): Map[Long, Seq[Double]] = {
-      model.setUseGemm(gemm)
-      model.transform(emb).select($"vec_id", $"o").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val inputs = Seq(
+      "array<float>" -> emb,
+      "array<double>" -> emb.withColumn("embedding", col("embedding").cast("array<double>")),
+      "array<int>" -> emb.withColumn("embedding",
+        mapElems(col("embedding"), x => (x * 100).cast("int"))))
+    inputs.foreach { case (label, df) =>
+      val rows = model.transform(df).select($"embedding".cast("array<double>"), $"o")
+        .collect()
+      assert(rows.nonEmpty, label)
+      rows.foreach { r =>
+        val got = r.getSeq[Double](1)
+        val exp = localProjection(model.pc, r.getSeq[Double](0).toArray)
+        assert(got.length == 8, label)
+        got.indices.foreach(j =>
+          assert(math.abs(got(j) - exp(j)) < 1e-12, s"$label dim $j: ${got(j)} vs ${exp(j)}"))
+      }
     }
-    val g = proj(true)
-    val v = proj(false)
-    assert(g.nonEmpty && g.keySet == v.keySet)
-    g.foreach { case (id, gv) =>
-      val vv = v(id)
-      assert(gv.length == 8 && vv.length == 8)
-      gv.indices.foreach(i =>
-        assert(math.abs(gv(i) - vv(i)) < 1e-12, s"vec $id dim $i: ${gv(i)} vs ${vv(i)}"))
-    }
-    // VectorUDT input path (dense + sparse rows)
+    // VectorUDT input: dense and sparse rows, VectorUDT output
     val vecDf = handData.map(Tuple1(_)).toDF("f")
     val m2 = new GraftPCA().setK(2).setInputCol("f").setOutputCol("o").fit(vecDf)
-    val a = m2.setUseGemm(true).transform(vecDf)
-      .select("o").collect().map(_.getAs[Vector](0))
-    val b = m2.setUseGemm(false).transform(vecDf)
-      .select("o").collect().map(_.getAs[Vector](0))
-    a.zip(b).foreach { case (x, y) =>
-      (0 until 2).foreach(j => assert(math.abs(x(j) - y(j)) < 1e-12))
+    val out = m2.transform(vecDf).select("f", "o").collect()
+    assert(out.length == handData.length)
+    out.foreach { r =>
+      val exp = localProjection(m2.pc, r.getAs[Vector](0).toArray)
+      val got = r.getAs[Vector](1)
+      (0 until 2).foreach(j => assert(math.abs(got(j) - exp(j)) < 1e-12))
     }
+  }
+
+  test("transform plans graft_pca_project in a codegen stage, no UDF, no RDD scan") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val model = new GraftPCA().setK(4)
+      .setInputCol("embedding").setOutputCol("o").fit(emb)
+    val plan = model.transform(emb).queryExecution.executedPlan.toString
+    assert(raw"\*\(\d+\) [^\n]*\bgraft_pca_project\(".r.findFirstIn(plan).isDefined,
+      s"graft_pca_project not inside a codegen stage:\n$plan")
+    assert(!plan.contains("UDF("), plan)
+    assert(!plan.contains("Scan ExistingRDD"), plan)
+  }
+
+  /** The message of the IllegalArgumentException `body` throws,
+    * directly or as the cause of a failed Spark job. */
+  private def illegalArgument(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
+      .getOrElse(fail(s"no IllegalArgumentException in $e"))
+  }
+
+  /** The messages `PcaProject` fails with on one input row, from its
+    * interpreted `eval` and from its generated code. */
+  private def projectFailures(row: ArrayData): Seq[String] = {
+    val in = BoundReference(0, ArrayType(FloatType, containsNull = true), nullable = true)
+    val pcT = Literal.create(Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0)),
+      ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false))
+    val expr = PcaProject(in, pcT)
+    val input = InternalRow(row)
+    Seq(
+      illegalArgument(expr.eval(input)),
+      illegalArgument(GenerateUnsafeProjection.generate(Seq(expr)).apply(input)))
+  }
+
+  test("transform rejects a null row by name (eval and codegen)") {
+    projectFailures(null).foreach(m =>
+      assert(m.contains("graft_pca_project") && m.contains("null input row"), m))
+  }
+
+  test("transform rejects a row whose width is not n (eval, codegen and a job)") {
+    for (width <- Seq(2, 4)) {
+      val row = new GenericArrayData(Array.tabulate[Any](width)(_.toFloat))
+      projectFailures(row).foreach(m =>
+        assert(m.contains("graft_pca_project") && m.contains(s"has $width elements"), m))
+    }
+    // a wider row in a parquet scan: the job fails, nothing is truncated
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-width").toString
+    Seq(Array(1.0f, 2.0f), Array(3.0f, 5.0f), Array(1.0f, 2.0f, 3.0f)).toDF("f")
+      .write.mode("overwrite").parquet(dir)
+    val model = new GraftPCAModel("w", new DenseMatrix(2, 1, Array(1.0, 0.0)),
+      new DenseVector(Array(1.0))).setInputCol("f").setOutputCol("o")
+    val m = illegalArgument(model.transform(spark.read.parquet(dir)).collect())
+    assert(m.contains("graft_pca_project") && m.contains("has 3 elements"), m)
+  }
+
+  test("transform rejects a null element by name (eval and codegen)") {
+    val row = new GenericArrayData(Array[Any](1.0f, null, 3.0f))
+    projectFailures(row).foreach(m =>
+      assert(m.contains("graft_pca_project") && m.contains("null element at index 1"), m))
+  }
+
+  test("a null element fails the covariance pass instead of reading as 0") {
+    import spark.implicits._
+    val df = Seq(Seq(Some(1.0), Some(2.0)), Seq(Some(3.0), None), Seq(Some(5.0), Some(1.0)))
+      .toDF("f")
+    val m = illegalArgument(Cov.vectorRdd(df, "f").collect())
+    assert(m.contains("null element at index 1") && m.contains("'f'"), m)
+    assert(illegalArgument(new GraftPCA().setK(1).setInputCol("f").setOutputCol("o")
+      .fit(df)).contains("null element"))
+  }
+
+  test("save writes exactly one part file per directory") {
+    def partFiles(dir: String): Int =
+      new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-parts").toString
+    val model = new GraftPCAModel("pca_parts",
+      new DenseMatrix(2, 1, Array(0.6, 0.8)), new DenseVector(Array(0.9)))
+    model.write.overwrite().save(s"$dir/model")
+    new GraftPCA().setK(1).write.overwrite().save(s"$dir/est")
+    for (sub <- Seq("model/data", "model/metadata", "est/params", "est/metadata"))
+      assert(partFiles(s"$dir/$sub") == 1, sub)
   }
 
   test("p7 grouped OLS matches a driver-side normal-equations replay") {
