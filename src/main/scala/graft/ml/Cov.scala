@@ -1,11 +1,14 @@
 package graft.ml
 
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
+import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
 
 /** Distributed column statistics + Gram/covariance computation.
   *
@@ -14,14 +17,19 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
   * rows produces per-partition partials `(count, colSum, BᵀB)` that are
   * tree-reduced to the driver, where the small n×n result is finalized.
   * The reference's GEMM path batches partition rows into a local matrix
-  * and calls cublasDgemm (RapidsRowMatrix.scala:168-200); ours batches
-  * into a Breeze matrix block and uses netlib dgemm — same blocking
-  * idea, JVM BLAS instead of a device kernel.
+  * and calls cublasDgemm (RapidsRowMatrix.scala:168-200); ours writes
+  * each row straight into a [[blockRows]]-row block buffer and adds the
+  * block's Gram into the partition's accumulator in place, one netlib
+  * `dgemm` per [[panelCols]]-column panel of the upper block triangle.
+  * Only the upper triangle is accumulated (half the flops, like
+  * SystemML's `tsmm`); it is mirrored once, after the tree reduce, so
+  * every pass returns a full symmetric `gram`.
   *
-  * Scale notes: the shuffle-free `treeAggregate` moves only n×n partials
+  * Scale notes: the shuffle-free tree reduce moves only n×n partials
   * (n ≤ 65535 enforced below, same ceiling as RapidsRowMatrix.scala:147);
   * row data never leaves its partition, so this holds at any row count —
-  * executor work is O(rows·n²/blocked-GEMM) and driver work is O(n²·log P).
+  * executor work is O(rows·n²/2) in blocked GEMM and driver work is
+  * O(n²·log P).
   */
 object Cov {
 
@@ -33,13 +41,60 @@ object Cov {
     * blockRows·n doubles regardless of partition size. */
   val blockRows = 4096
 
+  /** Columns per upper-triangle `dgemm` panel. One pass over 50,000×512
+    * floats in 4 partitions on a 4-core box with Java11BLAS (medians of
+    * 6, same JVM): panels of 64 / 128 / 256 took 1.26 / 1.27 / 1.49 s,
+    * and one 512-column panel (the full square) 1.80 s; scanning and
+    * copying the rows alone took 0.36 s. */
+  val panelCols = 128
+
   /** One partition/tree-level partial: row count, per-column sum, and
-    * the n×n second-moment accumulation Σ v·vᵀ. */
+    * the n×n second-moment accumulation Σ v·vᵀ (upper triangle only
+    * until a pass mirrors it). */
   final case class Partial(var m: Long, sum: BDV[Double], gram: BDM[Double]) {
     def merge(o: Partial): Partial = {
       m += o.m; sum += o.sum; gram += o.gram; this
     }
   }
+
+  /** An `array<numeric>` column as the plan's internal rows, and whether
+    * its elements are floats. `array<float>`/`array<double>` are read as
+    * they are; other numeric arrays are cast to `array<double>` in the
+    * plan. `None` for any other column type. */
+  private def arrayRows(df: DataFrame, inputCol: String): Option[(RDD[InternalRow], Boolean)] =
+    df.schema(inputCol).dataType match {
+      case ArrayType(et, _) =>
+        val isFloat = et == FloatType
+        val arrays =
+          if (isFloat || et == DoubleType) df.select(col(inputCol))
+          else df.select(col(inputCol).cast("array<double>"))
+        Some((arrays.queryExecution.toRdd, isFloat))
+      case _ => None
+    }
+
+  /** Row 0's array; a null row fails by name. */
+  private def arrayOf(row: InternalRow, inputCol: String): ArrayData = {
+    if (row.isNullAt(0)) throw new IllegalArgumentException(
+      s"null value in input column '$inputCol'")
+    row.getArray(0)
+  }
+
+  /** Writes `a` into `dst` from `off`, widening floats; a null element
+    * fails by name instead of reading as 0. */
+  private def copyInto(a: ArrayData, isFloat: Boolean, inputCol: String,
+      dst: Array[Double], off: Int): Unit = {
+    val len = a.numElements()
+    var i = 0
+    while (i < len) {
+      if (a.isNullAt(i)) throw new IllegalArgumentException(
+        s"null element at index $i in input column '$inputCol'")
+      dst(off + i) = if (isFloat) a.getFloat(i) else a.getDouble(i)
+      i += 1
+    }
+  }
+
+  private def requireRowWidth(width: Int, n: Int): Unit =
+    require(width == n, s"row width $width != $n (uniform width required)")
 
   /** Extract an `RDD[Vector]` from either a `VectorUDT` column or an
     * `array<numeric>` column (the fixture `embeddings.embedding` is
@@ -48,32 +103,20 @@ object Cov {
     *
     * Array columns are read from the plan's internal rows: one primitive
     * `double[]` per row, float widened element by element, no `Row` and
-    * no boxing. `array<float>`/`array<double>` are read as they are;
-    * other numeric arrays are cast to `array<double>` in the plan. A
-    * null row or a null element fails the job with an
-    * `IllegalArgumentException` instead of entering the Gram. */
-  def vectorRdd(df: DataFrame, inputCol: String): RDD[Vector] = {
-    df.schema(inputCol).dataType match {
-      case ArrayType(et, _) =>
-        val isFloat = et == FloatType
-        val arrays =
-          if (isFloat || et == DoubleType) df.select(col(inputCol))
-          else df.select(col(inputCol).cast("array<double>"))
-        arrays.queryExecution.toRdd.map { row =>
-          if (row.isNullAt(0)) throw new IllegalArgumentException(
-            s"null value in input column '$inputCol'")
-          val a = row.getArray(0)
+    * no boxing. A null row or a null element fails the job with an
+    * `IllegalArgumentException` instead of entering the Gram. The GEMM
+    * pass over an array column does not come through here: it writes
+    * the elements straight into its block buffer. */
+  def vectorRdd(df: DataFrame, inputCol: String): RDD[Vector] =
+    arrayRows(df, inputCol) match {
+      case Some((rows, isFloat)) =>
+        rows.map { row =>
+          val a = arrayOf(row, inputCol)
           val v = new Array[Double](a.numElements())
-          var i = 0
-          while (i < v.length) {
-            if (a.isNullAt(i)) throw new IllegalArgumentException(
-              s"null element at index $i in input column '$inputCol'")
-            v(i) = if (isFloat) a.getFloat(i) else a.getDouble(i)
-            i += 1
-          }
+          copyInto(a, isFloat, inputCol, v, 0)
           Vectors.dense(v)
         }
-      case _ =>
+      case None =>
         df.select(col(inputCol)).rdd.map { r =>
           r.get(0) match {
             case v: Vector => v
@@ -82,78 +125,156 @@ object Cov {
           }
         }
     }
-  }
+
+  /** Width of the first row, `None` for no rows: one `take(1)` job. */
+  def firstWidth(df: DataFrame, inputCol: String): Option[Int] =
+    vectorRdd(df, inputCol).map(_.size).take(1).headOption
+
+  /** As [[firstWidth]]; no rows fails by name. */
+  def width(df: DataFrame, inputCol: String): Int =
+    firstWidth(df, inputCol).getOrElse(
+      throw new IllegalArgumentException(s"empty input column '$inputCol'"))
+
+  private def requireWidth(n: Int): Unit =
+    require(n > 0 && n <= MaxCols, s"feature width $n outside (0, $MaxCols]")
 
   /** Single-pass distributed (count, mean, Gram) — per-row accumulation
     * path (the reference's SPR path, RapidsRowMatrix.scala:203-234):
     * scalar upper-triangle updates, cheapest for sparse rows. Partials
     * combine via treeAggregate (2 levels), so the driver receives
-    * O(sqrt(P)) partials instead of P. */
+    * O(sqrt(P)) partials instead of P. Returns a full symmetric `gram`. */
   def meanAndGram(rows: RDD[Vector], n: Int): Partial = {
-    require(n > 0 && n <= MaxCols, s"feature width $n outside (0, $MaxCols]")
+    requireWidth(n)
     val zero = Partial(0L, BDV.zeros[Double](n), BDM.zeros[Double](n, n))
-    rows.treeAggregate(zero)(
+    val p = rows.treeAggregate(zero)(
       seqOp = (p, v) => { accumulate(p, v); p },
       combOp = (a, b) => a.merge(b),
       depth = 2)
+    symmetrize(p.gram)
+    p
   }
 
   /** Single-pass distributed (count, mean, Gram) — blocked-GEMM path
     * (the reference's default, RapidsRowMatrix.scala:168-200, which
-    * stacks partition rows into a matrix and calls cublasDgemm): rows
-    * buffer into [[blockRows]]-row blocks, each block contributes
-    * Bᵀ·B via one netlib dgemm. ~5-10× the per-row path's throughput
-    * for dense data; identical semantics up to FP summation order. */
+    * stacks partition rows into a matrix and calls cublasDgemm), for
+    * `array<numeric>` and `VectorUDT` columns. Array elements are
+    * written from the scanned rows straight into the block buffer, with
+    * no per-row `double[]` or `Vector`; VectorUDT columns go through
+    * [[vectorRdd]]. Identical semantics to [[meanAndGram]] up to FP
+    * summation order; returns a full symmetric `gram`. */
+  def meanAndGramGemm(df: DataFrame, inputCol: String, n: Int): Partial =
+    arrayRows(df, inputCol) match {
+      case Some((rows, isFloat)) =>
+        requireWidth(n)
+        reduceGemm(rows.mapPartitions { it =>
+          val g = new GramBlock(n)
+          while (it.hasNext) {
+            val a = arrayOf(it.next(), inputCol)
+            requireRowWidth(a.numElements(), n)
+            copyInto(a, isFloat, inputCol, g.buf, g.slot())
+          }
+          Iterator.single(g.result())
+        })
+      case None => meanAndGramGemm(vectorRdd(df, inputCol), n)
+    }
+
+  /** As above over vectors, dense or sparse, into the same block buffer. */
   def meanAndGramGemm(rows: RDD[Vector], n: Int): Partial = {
-    require(n > 0 && n <= MaxCols, s"feature width $n outside (0, $MaxCols]")
-    // bound block buffer memory at ~16 MiB regardless of width
-    val block = math.max(1, math.min(blockRows, (16 << 20) / 8 / n))
-    val partials = rows.mapPartitions { it =>
-      val sum = BDV.zeros[Double](n)
-      val gram = BDM.zeros[Double](n, n)
-      var m = 0L
-      val buf = new Array[Double](block * n)
-      var r = 0
-      def flush(): Unit = if (r > 0) {
-        // buf holds r rows row-major = Bᵀ (n×r) column-major
-        val bt = new BDM[Double](n, r, java.util.Arrays.copyOf(buf, r * n))
-        gram += bt * bt.t // dgemm
-        r = 0
-      }
+    requireWidth(n)
+    reduceGemm(rows.mapPartitions { it =>
+      val g = new GramBlock(n)
       while (it.hasNext) {
         val v = it.next()
-        require(v.size == n, s"row width ${v.size} != $n (uniform width required)")
-        val off = r * n
+        requireRowWidth(v.size, n)
+        val off = g.slot()
         v match {
-          case dv: org.apache.spark.ml.linalg.DenseVector =>
-            System.arraycopy(dv.values, 0, buf, off, n)
-          case sv: org.apache.spark.ml.linalg.SparseVector =>
-            java.util.Arrays.fill(buf, off, off + n, 0.0)
-            sv.foreachActive((i, x) => buf(off + i) = x)
+          case dv: DenseVector =>
+            System.arraycopy(dv.values, 0, g.buf, off, n)
+          case sv: SparseVector =>
+            java.util.Arrays.fill(g.buf, off, off + n, 0.0)
+            sv.foreachActive((i, x) => g.buf(off + i) = x)
         }
-        var i = 0
-        while (i < n) { sum(i) += buf(off + i); i += 1 }
-        m += 1; r += 1
-        if (r == block) flush()
       }
-      flush()
-      Iterator.single(Partial(m, sum, gram))
-    }
-    partials.treeReduce((a, b) => a.merge(b), depth = 2)
+      Iterator.single(g.result())
+    })
   }
 
-  // Row accumulation: dspr-style upper update would halve the flops; a
-  // full syrk via Breeze on a buffered block halves wall time further.
-  // For clarity and zero per-row allocation we do the full outer-product
-  // update on the lower-cost path: x := v once, gram += v vᵀ in a tight
-  // loop over the upper triangle, mirrored at finalize time.
+  private def reduceGemm(partials: RDD[Partial]): Partial = {
+    val p = partials.treeReduce((a, b) => a.merge(b), depth = 2)
+    symmetrize(p.gram)
+    p
+  }
+
+  /** One partition's blocked Gram. Rows are written into `buf` row-major,
+    * which is Bᵀ column-major (n×r, leading dimension n); a full block is
+    * added into the upper block triangle of `gram` in place:
+    * for each panel of columns [j0, j0+bj), `gram[0:j0+bj, j0:j0+bj] +=
+    * Bᵀ[0:j0+bj, :]·B[:, j0:j0+bj]`, one `dgemm` with offsets and
+    * beta = 1. No copy of the block and no temporary n×n product. The
+    * strict lower triangle outside the diagonal panels stays 0 and is
+    * overwritten by the mirror after the reduce.
+    *
+    * `dsyrk` would be the textbook call, but this BLAS has it only as
+    * F2j, which took 0.49–0.52 s against 0.26–0.32 s for the Java11BLAS
+    * full `dgemm` on one 4096-row block. A hand-written rank-8
+    * `Math.fma` upper-triangle kernel lost to the panels in the same
+    * pass (1.55 s against 1.31 s, same JVM, medians of 6), and so did
+    * `dgemm("T", "N")` over a feature-major buffer (1.37 s against
+    * 1.28 s, medians of 8). */
+  private final class GramBlock(n: Int) {
+    // bound block buffer memory at ~16 MiB regardless of width
+    private val block = math.max(1, math.min(blockRows, (16 << 20) / 8 / n))
+    val buf = new Array[Double](block * n)
+    private val sum = new Array[Double](n)
+    private val gram = new Array[Double](n * n)
+    private var m = 0L
+    private var r = 0
+
+    /** Offset in `buf` for the next row, flushing a full block first. The
+      * caller fills all n slots before asking for the next one. */
+    def slot(): Int = {
+      if (r == block) flush()
+      r += 1
+      (r - 1) * n
+    }
+
+    private def flush(): Unit = if (r > 0) {
+      var k = 0
+      while (k < r) {
+        val off = k * n
+        var i = 0
+        while (i < n) { sum(i) += buf(off + i); i += 1 }
+        k += 1
+      }
+      val blas = BLAS.getInstance()
+      var j0 = 0
+      while (j0 < n) {
+        val bj = math.min(panelCols, n - j0)
+        blas.dgemm("N", "T", j0 + bj, bj, r, 1.0, buf, 0, n, buf, j0, n,
+          1.0, gram, j0 * n, n)
+        j0 += bj
+      }
+      m += r
+      r = 0
+    }
+
+    def result(): Partial = {
+      flush()
+      Partial(m, new BDV(sum), new BDM(n, n, gram))
+    }
+  }
+
+  // Per-row accumulation: a dspr-style update of the upper triangle only
+  // (half the flops of the full outer product, no per-row allocation),
+  // mirrored once by the pass. Zero entries of a dense row are skipped,
+  // so sparse-ish dense rows cost less too.
   private def accumulate(p: Partial, v: Vector): Unit = {
     val n = p.sum.length
-    require(v.size == n, s"row width ${v.size} != $n (uniform width required)")
+    requireRowWidth(v.size, n)
     p.m += 1
     val g = p.gram.data
     v match {
-      case dv: org.apache.spark.ml.linalg.DenseVector =>
+      case dv: DenseVector =>
         val a = dv.values
         var j = 0
         while (j < n) {
@@ -166,7 +287,7 @@ object Cov {
           }
           j += 1
         }
-      case sv: org.apache.spark.ml.linalg.SparseVector =>
+      case sv: SparseVector =>
         val idx = sv.indices; val vals = sv.values
         var jj = 0
         while (jj < idx.length) {
@@ -182,15 +303,15 @@ object Cov {
 
   /** Mirror the accumulated upper triangle into the lower (cf. the
     * reference's `triuToFull`, RapidsRowMatrix.scala:260-288). */
-  private def symmetrize(gram: BDM[Double]): BDM[Double] = {
+  private def symmetrize(gram: BDM[Double]): Unit = {
     val n = gram.rows
+    val g = gram.data
     var j = 0
     while (j < n) {
       var i = j + 1
-      while (i < n) { gram(i, j) = gram(j, i); i += 1 }
+      while (i < n) { g(j * n + i) = g(i * n + j); i += 1 }
       j += 1
     }
-    gram
   }
 
   /** Result of the distributed pass. */
@@ -219,25 +340,32 @@ object Cov {
     }
   }
 
+  private def finish(p: Partial): Stats = {
+    require(p.m > 0, "empty input")
+    Stats(p.m, p.sum / p.m.toDouble, p.gram)
+  }
+
   /** Run the distributed pass; feature width inferred from the first row
     * (reference: RapidsPCA.scala:117). `useGemm` selects blocked-GEMM
     * (default, like the reference) vs per-row accumulation. */
   def stats(rows: RDD[Vector], useGemm: Boolean = true): Stats =
     stats(rows, rows.first().size, useGemm)
 
-  /** As above with the width already known — callers that probed the
-    * first row for routing (GraftPCA's exact-vs-sketch decision) must
-    * not pay a second first() job. */
-  def stats(rows: RDD[Vector], n: Int, useGemm: Boolean): Stats = {
-    val p = if (useGemm) meanAndGramGemm(rows, n) else meanAndGram(rows, n)
-    require(p.m > 0, "empty input")
-    val moment = if (useGemm) p.gram else symmetrize(p.gram)
-    Stats(p.m, p.sum / p.m.toDouble, moment)
-  }
+  /** As above with the width already known. */
+  def stats(rows: RDD[Vector], n: Int, useGemm: Boolean): Stats =
+    finish(if (useGemm) meanAndGramGemm(rows, n) else meanAndGram(rows, n))
 
   def stats(df: DataFrame, inputCol: String): Stats =
-    stats(vectorRdd(df, inputCol))
+    stats(df, inputCol, useGemm = true)
 
   def stats(df: DataFrame, inputCol: String, useGemm: Boolean): Stats =
-    stats(vectorRdd(df, inputCol), useGemm)
+    stats(df, inputCol, width(df, inputCol), useGemm)
+
+  /** The pass over a column whose width is already known — callers that
+    * probed the first row for routing (GraftPCA's exact-vs-sketch
+    * decision) must not pay a second probe job. */
+  def stats(df: DataFrame, inputCol: String, n: Int, useGemm: Boolean): Stats =
+    finish(
+      if (useGemm) meanAndGramGemm(df, inputCol, n)
+      else meanAndGram(vectorRdd(df, inputCol), n))
 }

@@ -21,10 +21,11 @@ import graft.ml.{Cov, Eigen}
   * and `gpuId` kept as inert compatibility params), same
   * fit/transform/persistence protocol, deterministic canonical-sign
   * eigenvectors. `useGemm` governs the covariance accumulation only, as
-  * in the reference (RapidsPCA.scala:47-52): blocked dgemm or per-row
-  * upper-triangle updates. Fit keeps only the top-k eigenpairs
-  * ([[graft.ml.Eigen]]); transform is one codegen'd projection
-  * expression ([[graft.functions.PcaProject]]) on every input type.
+  * in the reference (RapidsPCA.scala:47-52): upper-triangle panel dgemm
+  * over row blocks or per-row upper-triangle updates. Fit keeps only
+  * the top-k eigenpairs ([[graft.ml.Eigen]]); transform is one codegen'd
+  * projection expression ([[graft.functions.PcaProject]]) on every
+  * input type.
   *
   * Differences from stock Spark ML PCA, matching the reference:
   *  - `meanCentering=false` computes components of the uncentered second
@@ -104,21 +105,22 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
     * reference documents as unsupported. */
   override def fit(dataset: Dataset[_]): GraftPCAModel = {
     transformSchema(dataset.schema, logging = true)
-    val rows = Cov.vectorRdd(dataset.toDF(), $(inputCol))
+    val df = dataset.toDF()
     // ONE width probe routes exact-vs-sketch; the n-aware stats
-    // overload reuses it, so neither route pays a second first() job
-    val n = rows.first().size
+    // overload reuses it, so neither route pays a second probe job
+    val n = Cov.width(df, $(inputCol))
     require($(k) <= n, s"k=${$(k)} must be <= numFeatures=$n")
     val res =
       if (n > Cov.MaxCols) {
         // the sketch makes powerIters+2 passes: cache the extracted
         // vectors so each pass rereads storage instead of re-running
         // the upstream query's whole lineage
+        val rows = Cov.vectorRdd(df, $(inputCol))
         rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try graft.ml.Rsvd.pca(rows, n, $(k), $(meanCentering))
         finally { rows.unpersist(blocking = false); () }
       } else {
-        val stats = Cov.stats(rows, n, $(useGemm))
+        val stats = Cov.stats(df, $(inputCol), n, $(useGemm))
         val matrix =
           if ($(meanCentering)) stats.covariance else stats.gramNormalized
         Eigen.pca(matrix, $(k))

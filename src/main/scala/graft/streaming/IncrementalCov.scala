@@ -30,19 +30,18 @@ final class IncrementalCov(inputCol: String) extends Serializable {
 
   /** Fold one micro-batch into the running state. Empty batches are
     * no-ops (streams deliver them on watermark-only triggers). */
-  def update(batch: DataFrame): Unit = {
-    val rows = Cov.vectorRdd(batch, inputCol)
-    if (!rows.isEmpty()) {
-      val n = rows.first().size
-      val p = Cov.meanAndGramGemm(rows, n)
+  def update(batch: DataFrame): Unit =
+    // one take(1) probe answers both "any rows?" and the width
+    Cov.firstWidth(batch, inputCol).foreach { n =>
+      val p = Cov.meanAndGramGemm(batch, inputCol, n)
       synchronized { acc = if (acc == null) p else acc.merge(p) }
     }
-  }
 
   def rowCount: Long = synchronized { if (acc == null) 0L else acc.m }
 
   /** Current statistics; same accessor surface as the batch
-    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). */
+    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). Every
+    * folded partial is full and symmetric, so their sum is too. */
   def stats: Cov.Stats = synchronized {
     require(acc != null && acc.m > 0, "no rows accumulated yet")
     Cov.Stats(acc.m, acc.sum / acc.m.toDouble, acc.gram)

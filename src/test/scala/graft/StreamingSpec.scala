@@ -863,6 +863,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(inc.rowCount == batchStats.m, "row counts diverged")
     val incStats = inc.stats
     val n = batchStats.mean.length
+    val sm = incStats.secondMoment
+    for (i <- 0 until n; j <- 0 until i)
+      assert(java.lang.Double.doubleToRawLongBits(sm(i, j)) ==
+        java.lang.Double.doubleToRawLongBits(sm(j, i)), s"secondMoment($i,$j) not symmetric")
     (0 until n).foreach { i =>
       assert(math.abs(incStats.mean(i) - batchStats.mean(i)) <= 1e-12)
     }
