@@ -13,29 +13,36 @@ import org.apache.spark.ml.linalg.{DenseVector, SparseVector, Vector, Vectors}
 /** Distributed column statistics + Gram/covariance computation.
   *
   * Semantics follow the reference's `RapidsRowMatrix.computeCovariance`
-  * (reference: RapidsRowMatrix.scala:149-257): a single pass over the
-  * rows produces per-partition partials `(count, colSum, BᵀB)` that are
+  * (reference: RapidsRowMatrix.scala:149-257): one pass over the rows
+  * produces per-partition partials `(count, colSum, BᵀB)` that are
   * tree-reduced to the driver, where the small n×n result is finalized.
-  * The reference's GEMM path batches partition rows into a local matrix
-  * and calls cublasDgemm (RapidsRowMatrix.scala:168-200); ours writes
-  * each row straight into a [[blockRows]]-row block buffer and adds the
-  * block's Gram into the partition's accumulator in place, one netlib
-  * `dgemm` per [[panelCols]]-column panel of the upper block triangle.
-  * Only the upper triangle is accumulated (half the flops, like
-  * SystemML's `tsmm`); it is mirrored once, after the tree reduce, so
-  * every pass returns a full symmetric `gram`.
+  * The pass is one Spark job and one kernel. Each partition reads the
+  * width from its own first row and only then allocates its
+  * accumulator; an empty partition contributes nothing, and the merge
+  * fails by name when two partitions' widths differ. The reference's
+  * GEMM path batches partition rows into a local matrix and calls
+  * cublasDgemm (RapidsRowMatrix.scala:168-200); ours writes each row
+  * straight into a [[blockRows]]-row block buffer and adds the block's
+  * Gram into the partition's accumulator in place, one netlib `dgemm`
+  * per [[panelCols]]-column panel of the upper block triangle. Only the
+  * upper triangle is accumulated (half the flops, like SystemML's
+  * `tsmm`); it is mirrored once, after the tree reduce, so every pass
+  * returns a full symmetric `gram`.
   *
   * Scale notes: the shuffle-free tree reduce moves only n×n partials
-  * (n ≤ 65535 enforced below, same ceiling as RapidsRowMatrix.scala:147);
-  * row data never leaves its partition, so this holds at any row count —
-  * executor work is O(rows·n²/2) in blocked GEMM and driver work is
-  * O(n²·log P).
+  * (n ≤ [[MaxCols]]); row data never leaves its partition, so this holds
+  * at any row count — executor work is O(rows·n²/2) in blocked GEMM and
+  * driver work is O(n²·log P). A partition whose first row is wider
+  * than [[MaxCols]] stops there and reports only that width, so a
+  * caller can route wide input elsewhere without a probe job.
   */
 object Cov {
 
-  /** Max supported feature width, as documented by the reference
-    * (RapidsRowMatrix.scala:66-68): n(n+1)/2 must stay within Int range. */
-  val MaxCols = 65535
+  /** Max width of the exact path: the dense n×n accumulator is one JVM
+    * array, so n·n must fit an `Int` (46340² ≤ Int.MaxValue < 46341²).
+    * The reference documents 65535 (RapidsRowMatrix.scala:66-68), where
+    * n(n+1)/2 must fit; past ours `GraftPCA` routes to [[Rsvd]]. */
+  val MaxCols = 46340
 
   /** Rows per GEMM block inside a partition — bounds executor memory at
     * blockRows·n doubles regardless of partition size. */
@@ -48,12 +55,25 @@ object Cov {
     * copying the rows alone took 0.36 s. */
   val panelCols = 128
 
-  /** One partition/tree-level partial: row count, per-column sum, and
-    * the n×n second-moment accumulation Σ v·vᵀ (upper triangle only
-    * until a pass mirrors it). */
-  final case class Partial(var m: Long, sum: BDV[Double], gram: BDM[Double]) {
+  /** One partition/tree-level partial of a pass: the row width, the row
+    * count, the per-column sum, and the n×n second-moment accumulation
+    * Σ v·vᵀ (upper triangle only until the pass mirrors it). `sum` and
+    * `gram` are null, and `m` is 0, when the width is outside
+    * (0, [[MaxCols]]]: the partial then reports only its width. */
+  final case class Partial(width: Int, var m: Long, sum: BDV[Double], gram: BDM[Double]) {
+    /** Adds `o` into this partial; partials of different widths fail by
+      * name. */
     def merge(o: Partial): Partial = {
-      m += o.m; sum += o.sum; gram += o.gram; this
+      requireRowWidth(o.width, width)
+      if (gram != null) { m += o.m; sum += o.sum; gram += o.gram }
+      this
+    }
+
+    /** The finished statistics; a width outside (0, [[MaxCols]]] fails
+      * by name. */
+    def stats: Stats = {
+      requireWidth(width)
+      Stats(m, sum / m.toDouble, gram)
     }
   }
 
@@ -104,9 +124,9 @@ object Cov {
     * Array columns are read from the plan's internal rows: one primitive
     * `double[]` per row, float widened element by element, no `Row` and
     * no boxing. A null row or a null element fails the job with an
-    * `IllegalArgumentException` instead of entering the Gram. The GEMM
-    * pass over an array column does not come through here: it writes
-    * the elements straight into its block buffer. */
+    * `IllegalArgumentException` instead of entering the Gram. The pass
+    * over an array column does not come through here: it writes the
+    * elements straight into its block buffer. */
   def vectorRdd(df: DataFrame, inputCol: String): RDD[Vector] =
     arrayRows(df, inputCol) match {
       case Some((rows, isFloat)) =>
@@ -126,82 +146,69 @@ object Cov {
         }
     }
 
-  /** Width of the first row, `None` for no rows: one `take(1)` job. */
-  def firstWidth(df: DataFrame, inputCol: String): Option[Int] =
-    vectorRdd(df, inputCol).map(_.size).take(1).headOption
-
-  /** As [[firstWidth]]; no rows fails by name. */
-  def width(df: DataFrame, inputCol: String): Int =
-    firstWidth(df, inputCol).getOrElse(
-      throw new IllegalArgumentException(s"empty input column '$inputCol'"))
-
-  private def requireWidth(n: Int): Unit =
+  private[graft] def requireWidth(n: Int): Unit =
     require(n > 0 && n <= MaxCols, s"feature width $n outside (0, $MaxCols]")
 
-  /** Single-pass distributed (count, mean, Gram) — per-row accumulation
-    * path (the reference's SPR path, RapidsRowMatrix.scala:203-234):
-    * scalar upper-triangle updates, cheapest for sparse rows. Partials
-    * combine via treeAggregate (2 levels), so the driver receives
-    * O(sqrt(P)) partials instead of P. Returns a full symmetric `gram`. */
-  def meanAndGram(rows: RDD[Vector], n: Int): Partial = {
-    requireWidth(n)
-    val zero = Partial(0L, BDV.zeros[Double](n), BDM.zeros[Double](n, n))
-    val p = rows.treeAggregate(zero)(
-      seqOp = (p, v) => { accumulate(p, v); p },
-      combOp = (a, b) => a.merge(b),
-      depth = 2)
-    symmetrize(p.gram)
-    p
-  }
-
-  /** Single-pass distributed (count, mean, Gram) — blocked-GEMM path
-    * (the reference's default, RapidsRowMatrix.scala:168-200, which
-    * stacks partition rows into a matrix and calls cublasDgemm), for
-    * `array<numeric>` and `VectorUDT` columns. Array elements are
-    * written from the scanned rows straight into the block buffer, with
-    * no per-row `double[]` or `Vector`; VectorUDT columns go through
-    * [[vectorRdd]]. Identical semantics to [[meanAndGram]] up to FP
-    * summation order; returns a full symmetric `gram`. */
-  def meanAndGramGemm(df: DataFrame, inputCol: String, n: Int): Partial =
+  /** The pass over an `array<numeric>` or `VectorUDT` column: one job,
+    * `None` for a column with no rows. Array elements are written from
+    * the scanned rows straight into the block buffer, with no per-row
+    * `double[]` or `Vector`; VectorUDT columns go through [[vectorRdd]].
+    * The result's width is the rows'; past [[MaxCols]] it carries only
+    * that width (see [[Partial]]). */
+  def pass(df: DataFrame, inputCol: String): Option[Partial] =
     arrayRows(df, inputCol) match {
       case Some((rows, isFloat)) =>
-        requireWidth(n)
-        reduceGemm(rows.mapPartitions { it =>
-          val g = new GramBlock(n)
-          while (it.hasNext) {
-            val a = arrayOf(it.next(), inputCol)
-            requireRowWidth(a.numElements(), n)
-            copyInto(a, isFloat, inputCol, g.buf, g.slot())
+        reduce(rows.mapPartitions { it =>
+          partitionPartial(it.map(arrayOf(_, inputCol)))(_.numElements()) {
+            (a, buf, off) => copyInto(a, isFloat, inputCol, buf, off)
           }
-          Iterator.single(g.result())
         })
-      case None => meanAndGramGemm(vectorRdd(df, inputCol), n)
+      case None => pass(vectorRdd(df, inputCol))
     }
 
   /** As above over vectors, dense or sparse, into the same block buffer. */
-  def meanAndGramGemm(rows: RDD[Vector], n: Int): Partial = {
-    requireWidth(n)
-    reduceGemm(rows.mapPartitions { it =>
-      val g = new GramBlock(n)
-      while (it.hasNext) {
-        val v = it.next()
-        requireRowWidth(v.size, n)
-        val off = g.slot()
+  private def pass(rows: RDD[Vector]): Option[Partial] =
+    reduce(rows.mapPartitions { it =>
+      partitionPartial(it)(_.size) { (v, buf, off) =>
         v match {
           case dv: DenseVector =>
-            System.arraycopy(dv.values, 0, g.buf, off, n)
+            System.arraycopy(dv.values, 0, buf, off, dv.size)
           case sv: SparseVector =>
-            java.util.Arrays.fill(g.buf, off, off + n, 0.0)
-            sv.foreachActive((i, x) => g.buf(off + i) = x)
+            java.util.Arrays.fill(buf, off, off + sv.size, 0.0)
+            sv.foreachActive((i, x) => buf(off + i) = x)
         }
       }
-      Iterator.single(g.result())
     })
-  }
 
-  private def reduceGemm(partials: RDD[Partial]): Partial = {
-    val p = partials.treeReduce((a, b) => a.merge(b), depth = 2)
-    symmetrize(p.gram)
+  /** One partition's partial, `None` for no rows. The width n is the
+    * first row's, and every later row must match it. A first row whose
+    * width is outside (0, [[MaxCols]]] ends the scan: the partial holds
+    * only that width, with no n×n allocation. `fill` writes one row into
+    * the block buffer from the given offset. */
+  private def partitionPartial[T](rows: Iterator[T])(width: T => Int)(
+      fill: (T, Array[Double], Int) => Unit): Iterator[Option[Partial]] =
+    Iterator.single(if (!rows.hasNext) None else {
+      val first = rows.next()
+      val n = width(first)
+      if (n < 1 || n > MaxCols) Some(Partial(n, 0L, null, null))
+      else {
+        val g = new GramBlock(n)
+        fill(first, g.buf, g.slot())
+        rows.foreach { x =>
+          requireRowWidth(width(x), n)
+          fill(x, g.buf, g.slot())
+        }
+        Some(g.result())
+      }
+    })
+
+  /** Tree-reduces the partition partials (2 levels, so the driver
+    * receives O(sqrt(P)) partials instead of P) and mirrors the result's
+    * upper triangle. */
+  private def reduce(partials: RDD[Option[Partial]]): Option[Partial] = {
+    val merge = (a: Option[Partial], b: Option[Partial]) => (a ++ b).reduceOption(_.merge(_))
+    val p = partials.treeAggregate(Option.empty[Partial])(merge, merge, depth = 2)
+    p.foreach(q => if (q.gram != null) symmetrize(q.gram))
     p
   }
 
@@ -260,44 +267,7 @@ object Cov {
 
     def result(): Partial = {
       flush()
-      Partial(m, new BDV(sum), new BDM(n, n, gram))
-    }
-  }
-
-  // Per-row accumulation: a dspr-style update of the upper triangle only
-  // (half the flops of the full outer product, no per-row allocation),
-  // mirrored once by the pass. Zero entries of a dense row are skipped,
-  // so sparse-ish dense rows cost less too.
-  private def accumulate(p: Partial, v: Vector): Unit = {
-    val n = p.sum.length
-    requireRowWidth(v.size, n)
-    p.m += 1
-    val g = p.gram.data
-    v match {
-      case dv: DenseVector =>
-        val a = dv.values
-        var j = 0
-        while (j < n) {
-          val vj = a(j)
-          if (vj != 0.0) {
-            p.sum(j) += vj
-            val off = j * n
-            var i = 0
-            while (i <= j) { g(off + i) += a(i) * vj; i += 1 }
-          }
-          j += 1
-        }
-      case sv: SparseVector =>
-        val idx = sv.indices; val vals = sv.values
-        var jj = 0
-        while (jj < idx.length) {
-          val j = idx(jj); val vj = vals(jj)
-          p.sum(j) += vj
-          val off = j * n
-          var ii = 0
-          while (ii <= jj) { g(off + idx(ii)) += vals(ii) * vj; ii += 1 }
-          jj += 1
-        }
+      Partial(n, m, new BDV(sum), new BDM(n, n, gram))
     }
   }
 
@@ -340,32 +310,18 @@ object Cov {
     }
   }
 
-  private def finish(p: Partial): Stats = {
-    require(p.m > 0, "empty input")
-    Stats(p.m, p.sum / p.m.toDouble, p.gram)
-  }
-
-  /** Run the distributed pass; feature width inferred from the first row
-    * (reference: RapidsPCA.scala:117). `useGemm` selects blocked-GEMM
-    * (default, like the reference) vs per-row accumulation. */
-  def stats(rows: RDD[Vector], useGemm: Boolean = true): Stats =
-    stats(rows, rows.first().size, useGemm)
-
-  /** As above with the width already known. */
-  def stats(rows: RDD[Vector], n: Int, useGemm: Boolean): Stats =
-    finish(if (useGemm) meanAndGramGemm(rows, n) else meanAndGram(rows, n))
-
+  /** The pass and its statistics. No rows, or a width outside
+    * (0, [[MaxCols]]], fails by name. */
   def stats(df: DataFrame, inputCol: String): Stats =
-    stats(df, inputCol, useGemm = true)
+    pass(df, inputCol).getOrElse(
+      throw new IllegalArgumentException(s"empty input column '$inputCol'")).stats
 
-  def stats(df: DataFrame, inputCol: String, useGemm: Boolean): Stats =
-    stats(df, inputCol, width(df, inputCol), useGemm)
-
-  /** The pass over a column whose width is already known — callers that
-    * probed the first row for routing (GraftPCA's exact-vs-sketch
-    * decision) must not pay a second probe job. */
-  def stats(df: DataFrame, inputCol: String, n: Int, useGemm: Boolean): Stats =
-    finish(
-      if (useGemm) meanAndGramGemm(df, inputCol, n)
-      else meanAndGram(vectorRdd(df, inputCol), n))
+  /** The pass over vectors whose width the caller states; rows of
+    * another width fail by name. `useGemm` is accepted for API
+    * compatibility and ignored: there is one kernel. */
+  def stats(rows: RDD[Vector], n: Int, useGemm: Boolean): Stats = {
+    val p = pass(rows).getOrElse(throw new IllegalArgumentException("empty input"))
+    requireRowWidth(p.width, n)
+    p.stats
+  }
 }

@@ -18,8 +18,9 @@ import org.netlib.util.intW
   * k = n), and the ratio denominator is the trace, which equals the sum
   * of all n eigenvalues without a full decomposition.
   *
-  * This never distributes: n ≤ 65535 so the n×n problem fits the driver
-  * (reference does the same, RapidsRowMatrix.scala:94-95).
+  * This never distributes: n ≤ [[Cov.MaxCols]] = 46340 so the n×n
+  * problem fits the driver (reference does the same, with n ≤ 65535,
+  * RapidsRowMatrix.scala:94-95).
   */
 object Eigen {
 

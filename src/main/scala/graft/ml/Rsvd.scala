@@ -4,13 +4,15 @@ import breeze.linalg.{eigSym, qr, DenseMatrix => BDM, DenseVector => BDV}
 import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, Vector}
 import org.apache.spark.rdd.RDD
 
-/** Randomized PCA past the reference's 65,535-column ceiling
-  * (SURVEY.md §2.D D250).
+/** Randomized PCA past the exact path's [[Cov.MaxCols]] = 46,340-column
+  * ceiling, which lies below the reference's 65,535 (SURVEY.md §2.D
+  * D250).
   *
-  * The reference fails fast at [[Cov.MaxCols]] because its exact route
+  * The reference fails fast at 65,535 columns because its exact route
   * MATERIALIZES the n×n covariance (reference:
   * RapidsRowMatrix.scala:66-68,147 — n(n+1)/2 must fit an Int, and the
-  * n×n Gram must fit one device buffer). This route never forms it:
+  * n×n Gram must fit one device buffer); ours stops at [[Cov.MaxCols]],
+  * where n·n no longer fits one JVM array. This route never forms it:
   * the Halko–Martinsson–Tropp randomized range finder (Halko,
   * Martinsson & Tropp, SIAM Rev. 53(2), 2011, Algs. 4.3/4.4 + 5.3)
   * sketches the covariance OPERATOR v ↦ Cv, which is available in one
@@ -37,7 +39,8 @@ import org.apache.spark.rdd.RDD
   * spans the whole column space; for general spectra the HMT bound
   * applies and `powerIters` sharpens the tail — PCASpec pins 1e-5
   * agreement with the exact path on a narrow-rank 2,048-dim fixture
-  * and runs the >65,535-dim case the exact path must reject. */
+  * and runs the 46,341- and 66,000-dim cases the exact path must
+  * reject. */
 object Rsvd {
 
   /** Extra sketch columns beyond k (HMT recommend 5–10). */

@@ -17,13 +17,12 @@ import graft.ml.{Cov, Eigen}
 /** Principal Component Analysis, API-compatible with the reference's
   * `com.nvidia.spark.ml.feature.PCA` (reference: PCA.scala:27-37,
   * RapidsPCA.scala:30-210): same params (`k`, `inputCol`, `outputCol`,
-  * `meanCentering`, `useGemm`, plus the GPU switches `useCuSolverSVD`
-  * and `gpuId` kept as inert compatibility params), same
-  * fit/transform/persistence protocol, deterministic canonical-sign
-  * eigenvectors. `useGemm` governs the covariance accumulation only, as
-  * in the reference (RapidsPCA.scala:47-52): upper-triangle panel dgemm
-  * over row blocks or per-row upper-triangle updates. Fit keeps only
-  * the top-k eigenpairs ([[graft.ml.Eigen]]); transform is one codegen'd
+  * `meanCentering`, plus `useGemm`, `useCuSolverSVD` and `gpuId` kept
+  * as inert compatibility params), same fit/transform/persistence
+  * protocol, deterministic canonical-sign eigenvectors. The covariance
+  * is always one [[graft.ml.Cov]] pass: upper-triangle panel `dgemm`
+  * over row blocks, whatever `useGemm` says. Fit keeps only the top-k
+  * eigenpairs ([[graft.ml.Eigen]]); transform is one codegen'd
   * projection expression ([[graft.functions.PcaProject]]) on every
   * input type.
   *
@@ -43,9 +42,8 @@ trait GraftPCAParams extends Params {
   final val meanCentering = new BooleanParam(this, "meanCentering",
     "center columns before computing covariance (reference RapidsPCA.scala:36-45)")
   final val useGemm = new BooleanParam(this, "useGemm",
-    "covariance accumulation only: blocked-GEMM (BLAS dgemm per row block, " +
-      "the reference default) vs per-row upper-triangle accumulation " +
-      "(reference RapidsPCA.scala:47-52); transform is the same either way")
+    "compat: inert on JVM, the covariance is always the blocked dgemm pass " +
+      "(reference RapidsPCA.scala:47-52)")
   final val useCuSolverSVD = new BooleanParam(this, "useCuSolverSVD",
     "compat: inert on JVM (reference RapidsPCA.scala:54-59)")
   final val gpuId = new IntParam(this, "gpuId",
@@ -95,20 +93,22 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
 
   /** Fit: one distributed pass (count+mean+Gram, Cov.scala), then
     * driver-local eigen post-processing (Eigen.scala). Mirrors the
-    * reference lifecycle (RapidsPCA.scala:111-125).
+    * reference lifecycle (RapidsPCA.scala:111-125), in one Spark job.
     *
-    * Past the reference's [[Cov.MaxCols]] ceiling — where the exact
-    * route would need an n×n covariance the reference fails fast on
-    * (RapidsRowMatrix.scala:66-68) — fit auto-selects the randomized
-    * sketch ([[graft.ml.Rsvd]]): same output contract, O(n·(k+10))
-    * memory instead of O(n²), so this engine accepts widths the
-    * reference documents as unsupported. */
+    * The pass reads the width from the rows. Past [[Cov.MaxCols]], where
+    * the exact route would need an n×n covariance that no JVM array
+    * holds (the reference fails fast at 65535, RapidsRowMatrix.scala:
+    * 66-68), the pass returns only the width and fit runs the randomized
+    * sketch ([[graft.ml.Rsvd]]) instead: same output contract,
+    * O(n·(k+10)) memory instead of O(n²). Routing depends on the width
+    * alone, and only such wide input pays the width-only pass as an
+    * extra job before the sketch's own passes. */
   override def fit(dataset: Dataset[_]): GraftPCAModel = {
     transformSchema(dataset.schema, logging = true)
     val df = dataset.toDF()
-    // ONE width probe routes exact-vs-sketch; the n-aware stats
-    // overload reuses it, so neither route pays a second probe job
-    val n = Cov.width(df, $(inputCol))
+    val p = Cov.pass(df, $(inputCol)).getOrElse(
+      throw new IllegalArgumentException(s"empty input column '${$(inputCol)}'"))
+    val n = p.width
     require($(k) <= n, s"k=${$(k)} must be <= numFeatures=$n")
     val res =
       if (n > Cov.MaxCols) {
@@ -120,7 +120,7 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
         try graft.ml.Rsvd.pca(rows, n, $(k), $(meanCentering))
         finally { rows.unpersist(blocking = false); () }
       } else {
-        val stats = Cov.stats(df, $(inputCol), n, $(useGemm))
+        val stats = p.stats
         val matrix =
           if ($(meanCentering)) stats.covariance else stats.gramNormalized
         Eigen.pca(matrix, $(k))

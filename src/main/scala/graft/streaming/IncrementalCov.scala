@@ -17,7 +17,7 @@ import graft.ml.Cov
   * each batch's heavy work (blocked GEMM over executor partitions)
   * stays distributed; only one n×n partial returns to the driver per
   * batch, and driver state is a single n×n matrix (n capped by
-  * [[Cov.MaxCols]] exactly like the batch path).
+  * [[Cov.MaxCols]] = 46340 exactly like the batch path).
   *
   * Wire into Structured Streaming with
   * `writeStream.foreachBatch((df, _) => inc.update(df))`; replay
@@ -28,12 +28,13 @@ final class IncrementalCov(inputCol: String) extends Serializable {
 
   private var acc: Cov.Partial = _
 
-  /** Fold one micro-batch into the running state. Empty batches are
-    * no-ops (streams deliver them on watermark-only triggers). */
+  /** Fold one micro-batch into the running state: one [[Cov.pass]] job.
+    * Empty batches are no-ops (streams deliver them on watermark-only
+    * triggers); a batch whose width is outside (0, [[Cov.MaxCols]]], or
+    * differs from the folded batches', fails by name. */
   def update(batch: DataFrame): Unit =
-    // one take(1) probe answers both "any rows?" and the width
-    Cov.firstWidth(batch, inputCol).foreach { n =>
-      val p = Cov.meanAndGramGemm(batch, inputCol, n)
+    Cov.pass(batch, inputCol).foreach { p =>
+      Cov.requireWidth(p.width)
       synchronized { acc = if (acc == null) p else acc.merge(p) }
     }
 
@@ -43,7 +44,7 @@ final class IncrementalCov(inputCol: String) extends Serializable {
     * [[Cov.stats]] result (covariance, gramNormalized, mean, m). Every
     * folded partial is full and symmetric, so their sum is too. */
   def stats: Cov.Stats = synchronized {
-    require(acc != null && acc.m > 0, "no rows accumulated yet")
-    Cov.Stats(acc.m, acc.sum / acc.m.toDouble, acc.gram)
+    require(acc != null, "no rows accumulated yet")
+    acc.stats
   }
 }

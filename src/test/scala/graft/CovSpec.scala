@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Cov
 
-/** The covariance pass against a locally computed Gram: both
-  * accumulation paths, every input type, widths on and around the
-  * upper-triangle panel edges, partitions that end mid-block, hold more
-  * than one block, or hold nothing. */
+/** The covariance pass against a locally computed Gram: every input
+  * type, widths on and around the upper-triangle panel edges, partitions
+  * that end mid-block, hold more than one block, or hold nothing (the
+  * leading ones included, so the width comes from a later partition). */
 class CovSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -92,12 +92,12 @@ class CovSpec extends AnyFunSuite {
   test("Gram and column sums equal a local B^T B on every input type and panel edge") {
     for (n <- Seq(1, 63, 127, 128, 129, 300, 512); kind <- inputTypes) {
       val seed = n * 31L + kind.hashCode
-      // 29 and 34 rows end mid-block; the middle partition is empty
-      val parts = Seq(rows(kind, n, 29, seed), Seq.empty, rows(kind, n, 34, seed + 1))
-      val df = frame(kind, parts)
-      for (useGemm <- Seq(true, false))
-        assertExact(Cov.stats(df, "f", useGemm), parts.flatten,
-          s"n=$n $kind useGemm=$useGemm")
+      // 29 and 34 rows end mid-block; an empty partition sits between
+      // them, or the two leading partitions are empty
+      val (a, b) = (rows(kind, n, 29, seed), rows(kind, n, 34, seed + 1))
+      for (parts <- Seq(Seq(a, Seq.empty, b), Seq(Seq.empty, Seq.empty, a, b)))
+        assertExact(Cov.stats(frame(kind, parts), "f"), parts.flatten,
+          s"n=$n $kind partitions=${parts.map(_.length).mkString(",")}")
     }
   }
 
@@ -106,7 +106,7 @@ class CovSpec extends AnyFunSuite {
     for (kind <- Seq("array<float>", "vector dense")) {
       val parts = Seq(rows(kind, n, Cov.blockRows + 7, 1L), Seq.empty,
         rows(kind, n, Cov.blockRows, 2L), rows(kind, n, 2 * Cov.blockRows + 1, 3L))
-      assertExact(Cov.stats(frame(kind, parts), "f", useGemm = true), parts.flatten,
+      assertExact(Cov.stats(frame(kind, parts), "f"), parts.flatten,
         s"n=$n $kind")
     }
   }
@@ -122,11 +122,21 @@ class CovSpec extends AnyFunSuite {
 
   test("a row wider or narrower than the first fails the pass with both widths") {
     import spark.implicits._
-    for (odd <- Seq(Array(1.0, 2.0, 3.0, 4.0), Array(1.0, 2.0)); useGemm <- Seq(true, false)) {
+    for (odd <- Seq(Array(1.0, 2.0, 3.0, 4.0), Array(1.0, 2.0))) {
       val df = Seq(Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0), odd, Array(7.0, 8.0, 9.0))
         .toDF("f").coalesce(1)
-      val msg = illegalArgument(Cov.stats(df, "f", useGemm))
-      assert(msg.contains(s"row width ${odd.length} != 3"), s"useGemm=$useGemm: $msg")
+      val msg = illegalArgument(Cov.stats(df, "f"))
+      assert(msg.contains(s"row width ${odd.length} != 3"), msg)
+    }
+    // each partition reads its own first row: the merge compares them
+    val split = frame("array<double>",
+      Seq(Seq(Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)), Seq.empty, Seq(Array(1.0, 2.0))))
+    val msg = illegalArgument(Cov.stats(split, "f"))
+    assert(msg.contains("row width 2 != 3") || msg.contains("row width 3 != 2"), msg)
+    // no rows at all: there is no width, and the pass says why
+    for (kind <- Seq("array<float>", "vector dense")) {
+      val empty = frame(kind, Seq(Seq.empty, Seq.empty))
+      assert(illegalArgument(Cov.stats(empty, "f")).contains("empty input column 'f'"), kind)
     }
   }
 

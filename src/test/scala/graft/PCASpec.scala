@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, Vector, Vectors}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
@@ -150,22 +151,56 @@ class PCASpec extends AnyFunSuite {
       assert(math.abs(model.pc.values(i) - res.pc.values(i)) < tol)
   }
 
-  test("GEMM-blocked and per-row accumulation paths agree (useGemm param)") {
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    val gemm = Cov.stats(emb, "embedding", useGemm = true)
-    val spr = Cov.stats(emb, "embedding", useGemm = false)
-    assert(gemm.m == spr.m)
-    val (cg, cs) = (gemm.covariance, spr.covariance)
-    for (i <- 0 until cg.rows; j <- 0 until cg.cols)
-      assert(math.abs(cg(i, j) - cs(i, j)) < 1e-10, s"cov($i,$j)")
-    // mixed dense/sparse through the GEMM block buffer
+  test("useGemm is inert: both settings fit identical models") {
     import spark.implicits._
-    val m1 = new GraftPCA().setK(2).setInputCol("f").setOutputCol("o")
-      .setUseGemm(true).fit(handData.map(Tuple1(_)).toDF("f"))
-    val m2 = new GraftPCA().setK(2).setInputCol("f").setOutputCol("o")
-      .setUseGemm(false).fit(handData.map(Tuple1(_)).toDF("f"))
-    for (i <- m1.pc.values.indices)
-      assert(math.abs(m1.pc.values(i) - m2.pc.values(i)) < tol)
+    // one partition each, so the pass merges its partials in one order
+    val inputs = Seq(
+      graft.sources.Tables.embeddings(spark, sf).coalesce(1) -> "embedding",
+      handData.map(Tuple1(_)).toDF("f").coalesce(1) -> "f")
+    for ((df, c) <- inputs) {
+      val Seq(on, off) = Seq(true, false).map(g => new GraftPCA().setK(2)
+        .setInputCol(c).setOutputCol("o").setUseGemm(g).fit(df))
+      assert(on.pc.values.sameElements(off.pc.values), c)
+      assert(on.explainedVariance.values.sameElements(off.explainedVariance.values), c)
+    }
+    // still a persisted param: the setting round-trips
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-gemm").toString
+    new GraftPCA().setK(1).setUseGemm(false).write.overwrite().save(dir)
+    val loaded = GraftPCA.load(dir)
+    assert(loaded.isSet(loaded.useGemm) && !loaded.getOrDefault(loaded.useGemm))
+  }
+
+  test("GraftPCA.fit on the exact route runs one Spark job") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val fitJobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("pca-fit") => fitJobs.incrementAndGet()
+          case Some("pca-marker") => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val inputs = Seq(
+      graft.sources.Tables.embeddings(spark, sf) -> "embedding",
+      handData.map(Tuple1(_)).toDF("f") -> "f")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pca-fit", "fit")
+      for ((df, c) <- inputs)
+        new GraftPCA().setK(2).setInputCol(c).setOutputCol("o").fit(df)
+      // one listener sees events in posting order: once the marker job's
+      // start arrives, every fit job's start has arrived before it
+      sc.setJobGroup("pca-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(fitJobs.get == inputs.length, s"${fitJobs.get} jobs for ${inputs.length} fits")
   }
 
   /** pcᵀx computed locally, ascending-index accumulation. */
@@ -428,16 +463,33 @@ class PCASpec extends AnyFunSuite {
 
   test("width past Cov.MaxCols fails fast, before any n x n allocation") {
     import spark.implicits._
-    // reference parity: RapidsRowMatrix.scala:66-68 documents the same
-    // 65535-column covariance ceiling. The guard must fire from the
-    // first row's width — at MaxCols+1 the gram would be ~34 GB, so
-    // reaching allocation would BE the failure.
-    val wide = Seq(Tuple1(Array.fill(graft.ml.Cov.MaxCols + 1)(1.0)))
-      .toDF("f")
+    // 46341 is the first width whose n x n accumulator overflows an Int
+    // index (the reference's documented ceiling is 65535,
+    // RapidsRowMatrix.scala:66-68). The guard must fire from the first
+    // row's width: reaching allocation would BE the failure.
+    assert(Cov.MaxCols == 46340)
+    val wide = Seq(Tuple1(Array.fill(46341)(1.0))).toDF("f")
     val ex = intercept[IllegalArgumentException] {
       graft.ml.Cov.stats(wide, "f")
     }
-    assert(ex.getMessage.contains(graft.ml.Cov.MaxCols.toString))
+    assert(ex.getMessage.contains("feature width 46341 outside (0, 46340]"), ex.getMessage)
+  }
+
+  test("GraftPCA fits 46,341-wide rows, one past Cov.MaxCols, through the sketch") {
+    import spark.implicits._
+    val n = 46341; val k = 2; val m = 6
+    val rng = new scala.util.Random(41)
+    val bases = Array.fill(k)(Array.fill(n)(rng.nextGaussian()))
+    val rows = Seq.fill(m) {
+      val (a, b) = (3.0 * rng.nextGaussian(), rng.nextGaussian())
+      Tuple1(Array.tabulate(n)(i => a * bases(0)(i) + b * bases(1)(i)))
+    }
+    val df = rows.toDF("f").repartition(2)
+    val model = new GraftPCA().setK(k).setInputCol("f").setOutputCol("o").fit(df)
+    assert(model.pc.numRows == n && model.pc.numCols == k)
+    // rank-2 data: the two components carry all variance
+    val ev = model.explainedVariance.values
+    assert(ev.sum > 0.999 && ev.sameElements(ev.sorted.reverse), ev.mkString(","))
   }
 
   test("randomized sketch matches the exact path within 1e-5 at 2048 dims") {
@@ -460,7 +512,7 @@ class PCASpec extends AnyFunSuite {
     }
     val df = rows.map(Tuple1(_)).toDF("f")
     val rdd = Cov.vectorRdd(df, "f")
-    val exact = Eigen.pca(Cov.stats(rdd).covariance, rank)
+    val exact = Eigen.pca(Cov.stats(rdd, n, useGemm = true).covariance, rank)
     val sk = graft.ml.Rsvd.pca(rdd, n, rank)
     for (j <- 0 until rank) {
       assert(math.abs(sk.explainedVariance(j) - exact.explainedVariance(j))
@@ -485,7 +537,7 @@ class PCASpec extends AnyFunSuite {
     // (RapidsRowMatrix.scala:66-68): above 65,535 columns the exact
     // n x n route is impossible (34+ GB gram); the randomized sketch
     // fits in O(n*(k+10)) — here ~13 MB of driver/executor state.
-    val n = graft.ml.Cov.MaxCols + 465 // 66,000
+    val n = 66000
     val rank = 3; val m = 64
     val rng = new scala.util.Random(31)
     val bases = Array.fill(rank)(Array.fill(n)(rng.nextGaussian()))
