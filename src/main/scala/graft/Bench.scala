@@ -57,22 +57,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    // split-size knob for deploy-time tuning. A/B at sf0.1 showed small
-    // splits (2m) LOSE to the 128m default here — per-task overhead
-    // outweighs scan parallelism on ~10MB files; the shuffles already
-    // spread work across cores after the first exchange.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // untimed warmup: executor spin-up, parquet footers, codegen JIT
     graft.sources.Tables.names.foreach { t =>
       val df = if (t == "events") graft.sources.Tables.events(spark, sfDir)

@@ -183,8 +183,11 @@ object Cov {
   /** One partition's partial, `None` for no rows. The width n is the
     * first row's, and every later row must match it. A first row whose
     * width is outside (0, [[MaxCols]]] ends the scan: the partial holds
-    * only that width, with no n×n allocation. `fill` writes one row into
-    * the block buffer from the given offset. */
+    * only that width, with no n×n allocation. A width whose n×n
+    * accumulator alone exceeds the max heap fails by name, before the
+    * allocation would fail with an `OutOfMemoryError` (which in local
+    * mode ends the JVM). `fill` writes one row into the block buffer
+    * from the given offset. */
   private def partitionPartial[T](rows: Iterator[T])(width: T => Int)(
       fill: (T, Array[Double], Int) => Unit): Iterator[Option[Partial]] =
     Iterator.single(if (!rows.hasNext) None else {
@@ -192,6 +195,10 @@ object Cov {
       val n = width(first)
       if (n < 1 || n > MaxCols) Some(Partial(n, 0L, null, null))
       else {
+        val need = 8L * n * n
+        val heap = Runtime.getRuntime.maxMemory
+        require(need <= heap, s"feature width $n needs ${need >> 20} MiB for " +
+          s"its n x n Gram, over the max heap of ${heap >> 20} MiB")
         val g = new GramBlock(n)
         fill(first, g.buf, g.slot())
         rows.foreach { x =>

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{CacheScope, SparkEntry}
+import graft.{CacheScope, Harness, SparkEntry}
 
 /** Builder-side growth-exponent scale audit (round-9 verdict task #2):
   * times each named query at SEVERAL scale points in ONE JVM — e.g.
@@ -61,13 +59,7 @@ object ScaleAudit {
         s"growth slope): ${points.map(_._2).mkString(", ")}")
     val names = args.drop(sep + 1)
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_AUDIT_BUDGET", "150").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     /** Warm + min-of-2 timed runs in a budget-guarded thread; None on
       * timeout or failure. */

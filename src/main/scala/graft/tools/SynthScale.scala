@@ -1,12 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Builder-side scale-audit fixture generator (round-8 verdict task
   * #1): unions `factor` id-remapped copies of each fixture table into
   * a synthetic larger scale (e.g. sf0.1 ×10 ≈ sf1), so superlinear
-  * plans show up as >factor runtime growth under `graft.TimeOne`
+  * plans show up as >factor runtime growth under `graft.Probe`
   * BEFORE real data ever does.
   *
   * Key discipline: every key domain is offset per copy by a fixed
@@ -25,12 +27,7 @@ object SynthScale {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     def src(t: String): DataFrame =
       spark.read.parquet(s"$srcDir/$t.parquet")

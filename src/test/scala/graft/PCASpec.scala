@@ -473,6 +473,15 @@ class PCASpec extends AnyFunSuite {
       graft.ml.Cov.stats(wide, "f")
     }
     assert(ex.getMessage.contains("feature width 46341 outside (0, 46340]"), ex.getMessage)
+    // 46340 passes the width check, but its accumulator needs 16 GiB:
+    // on a smaller heap the task fails by name before allocating it
+    assert(Runtime.getRuntime.maxMemory < 8L * 46340 * 46340, "heap of 16 GiB or more")
+    val atCap = Seq.fill(3)(Tuple1(Array.fill(46340)(1.0))).toDF("f")
+    val heapEx = intercept[org.apache.spark.SparkException] {
+      graft.ml.Cov.stats(atCap, "f")
+    }
+    assert(heapEx.getMessage.contains("feature width 46340 needs 16383 MiB for its " +
+      "n x n Gram, over the max heap of"), heapEx.getMessage)
   }
 
   test("GraftPCA fits 46,341-wide rows, one past Cov.MaxCols, through the sketch") {
