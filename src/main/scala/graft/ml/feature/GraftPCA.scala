@@ -20,11 +20,11 @@ import graft.ml.{Cov, Eigen}
   * `meanCentering`, plus `useGemm`, `useCuSolverSVD` and `gpuId` kept
   * as inert compatibility params), same fit/transform/persistence
   * protocol, deterministic canonical-sign eigenvectors. The covariance
-  * is always one [[graft.ml.Cov]] pass: upper-triangle panel `dgemm`
-  * over row blocks, whatever `useGemm` says. Fit keeps only the top-k
-  * eigenpairs ([[graft.ml.Eigen]]); transform is one codegen'd
-  * projection expression ([[graft.functions.PcaProject]]) on every
-  * input type.
+  * is always one [[graft.ml.Cov]] pass: a vectorized upper-triangle
+  * kernel over row blocks, with no BLAS call, whatever `useGemm` says.
+  * Fit keeps only the top-k eigenpairs ([[graft.ml.Eigen]]); transform
+  * is one codegen'd projection expression ([[graft.functions.PcaProject]])
+  * on every input type.
   *
   * Differences from stock Spark ML PCA, matching the reference:
   *  - `meanCentering=false` computes components of the uncentered second
@@ -42,7 +42,7 @@ trait GraftPCAParams extends Params {
   final val meanCentering = new BooleanParam(this, "meanCentering",
     "center columns before computing covariance (reference RapidsPCA.scala:36-45)")
   final val useGemm = new BooleanParam(this, "useGemm",
-    "compat: inert on JVM, the covariance is always the blocked dgemm pass " +
+    "compat: inert on JVM, the covariance is always the blocked Gram kernel pass " +
       "(reference RapidsPCA.scala:47-52)")
   final val useCuSolverSVD = new BooleanParam(this, "useCuSolverSVD",
     "compat: inert on JVM (reference RapidsPCA.scala:54-59)")

@@ -14,7 +14,7 @@ import graft.ml.Cov
   * concatenated data (StreamingSpec pins 1e-12 agreement, and exact
   * equality of counts/means). This is how a 100 TB/day feature stream
   * keeps a covariance/PCA model current without re-scanning history —
-  * each batch's heavy work (blocked GEMM over executor partitions)
+  * each batch's heavy work (the blocked Gram kernel over executor partitions)
   * stays distributed; only one n×n partial returns to the driver per
   * batch, and driver state is a single n×n matrix (n capped by
   * [[Cov.MaxCols]] = 46340 exactly like the batch path).
@@ -41,8 +41,9 @@ final class IncrementalCov(inputCol: String) extends Serializable {
   def rowCount: Long = synchronized { if (acc == null) 0L else acc.m }
 
   /** Current statistics; same accessor surface as the batch
-    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). Every
-    * folded partial is full and symmetric, so their sum is too. */
+    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). The
+    * folded partials hold the upper triangle; the statistics mirror it
+    * into both triangles, so the result is exactly symmetric. */
   def stats: Cov.Stats = synchronized {
     require(acc != null, "no rows accumulated yet")
     acc.stats

@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.Cov
 
 /** The covariance pass against a locally computed Gram: every input
-  * type, widths on and around the upper-triangle panel edges, partitions
-  * that end mid-block, hold more than one block, or hold nothing (the
-  * leading ones included, so the width comes from a later partition). */
+  * type, narrow widths and widths off the kernel's vector steps, and
+  * partitions that end in rank-1 tail rows, sit on the 64-row block
+  * edge, hold more than one block, or hold nothing (the leading ones
+  * included, so the width comes from a later partition). */
 class CovSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -89,13 +90,16 @@ class CovSpec extends AnyFunSuite {
     }
   }
 
-  test("Gram and column sums equal a local B^T B on every input type and panel edge") {
-    for (n <- Seq(1, 63, 127, 128, 129, 300, 512); kind <- inputTypes) {
+  test("Gram and column sums equal a local B^T B on every input type, width and block edge") {
+    for (n <- Seq(1, 2, 3, 4, 5, 8, 9, 63, 127, 128, 129, 300, 512); kind <- inputTypes) {
       val seed = n * 31L + kind.hashCode
       // 29 and 34 rows end mid-block; an empty partition sits between
-      // them, or the two leading partitions are empty
+      // them, or the two leading partitions are empty. Partitions of 1,
+      // 2, 3 and 5 rows end in rank-1 tail rows; 63 to 67 rows sit on
+      // the 64-row block edge.
       val (a, b) = (rows(kind, n, 29, seed), rows(kind, n, 34, seed + 1))
-      for (parts <- Seq(Seq(a, Seq.empty, b), Seq(Seq.empty, Seq.empty, a, b)))
+      val edges = Seq(1, 2, 3, 5, 63, 64, 65, 67).map(c => rows(kind, n, c, seed + 100 + c))
+      for (parts <- Seq(Seq(a, Seq.empty, b), Seq(Seq.empty, Seq.empty, a, b), edges))
         assertExact(Cov.stats(frame(kind, parts), "f"), parts.flatten,
           s"n=$n $kind partitions=${parts.map(_.length).mkString(",")}")
     }

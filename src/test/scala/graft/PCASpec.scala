@@ -576,9 +576,9 @@ class PCASpec extends AnyFunSuite {
   test("2048-dim PCA fits through the blocked-GEMM path without OOM") {
     import spark.implicits._
     // pins the memory envelope of the widest realistic embedding width:
-    // gram = 2048^2 doubles = 32 MB driver-side, blockRows x 2048
-    // doubles = 64 MB per in-flight executor block — both flat in the
-    // row count.
+    // gram = 2048^2 doubles = 32 MB per task and driver-side, blockRows
+    // x 2048 doubles = 1 MB per in-flight executor block — both flat in
+    // the row count.
     val rng = new scala.util.Random(11)
     val df = Seq.fill(256)(
         Vectors.dense(Array.fill(2048)(rng.nextGaussian())): Vector)
