@@ -33,8 +33,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Calibration-deviation ceiling: above this the suite re-measures
-    * once (BENCH_r05/r06/r07 were all load-contaminated — the judge's
-    * round-8 ask is that the harness catches this itself; the round-10
+    * once (the round-5 to round-7 bench files, `git show
+    * cf5d731:BENCH_r05.json` and on, were all load-contaminated; round 8
+    * asked that the harness catch this itself; the round-10
     * ask tightened the bar to 0.1 after two straight official runs
     * shipped with drift ≥ 0.2 and unusable per-query numbers). A run
     * that is STILL above the bar after the retry ships stamped
@@ -193,7 +194,8 @@ object Bench {
     // The stdout contract line must stay SHORT: the driver keeps only the
     // last ~2000 chars of output (after sbt's own trailer), and at 86
     // queries the full-name map alone is ~2050 chars — that is why
-    // BENCH_r05 came back parsed:null. The stdout line therefore keys
+    // round 5's bench file (`git show cf5d731:BENCH_r05.json`) came back
+    // parsed:null. The stdout line therefore keys
     // each query by its short code (the prefix before the first '_',
     // unique across the surface: q1..q38, d1..d9, s1..s7, t1..t12,
     // m1..m3, p1..p6, c1..c4, e1..e7 ≈ 1150 chars total); the full-name

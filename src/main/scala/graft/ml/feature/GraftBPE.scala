@@ -76,7 +76,7 @@ class GraftBPE(override val uid: String)
 
   override def copy(extra: ParamMap): GraftBPE = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftBPE.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted tokenizer: the ordered merge table (lhs, rhs) pairs. */
@@ -113,80 +113,22 @@ class GraftBPEModel private[feature] (override val uid: String,
   override def copy(extra: ParamMap): GraftBPEModel =
     copyValues(new GraftBPEModel(uid, merges), extra).setParent(parent)
 
-  override def write: MLWriter = new GraftBPEModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    BPEModelData(merges.flatten))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class BPEParamsData(uid: String,
-    textCol: Option[String], tokensCol: Option[String])
-
-/** Fitted-model artifact: params + the flattened ordered merge table. */
-private[feature] case class BPEModelData(params: BPEParamsData,
-    mergeValues: Array[String])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * the flattened ordered merge table. */
+private[feature] case class BPEModelData(mergeValues: Array[String])
 
 object GraftBPE extends MLReadable[GraftBPE] {
-
-  private[feature] def paramsData(
-      p: GraftBPEParams with Params): BPEParamsData =
-    BPEParamsData(p.uid, p.get(p.textCol), p.get(p.tokensCol))
-
-  private[feature] def restoreParams(t: GraftBPEParams,
-      d: BPEParamsData): Unit = {
-    d.textCol.foreach(v => t.set(t.textCol, v))
-    d.tokensCol.foreach(v => t.set(t.tokensCol, v))
-  }
-
-  private[feature] class Writer(instance: GraftBPE) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftBPE] {
-    override def load(path: String): GraftBPE = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[BPEParamsData].head()
-      val e = new GraftBPE(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftBPE] = new Reader
+  override def read: MLReader[GraftBPE] = new StageIO.EstimatorReader(new GraftBPE(_))
   override def load(path: String): GraftBPE = super.load(path)
 }
 
 object GraftBPEModel extends MLReadable[GraftBPEModel] {
-
-  private[feature] class Writer(instance: GraftBPEModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(BPEModelData(GraftBPE.paramsData(instance),
-          instance.merges.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftBPEModel] {
-    override def load(path: String): GraftBPEModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[BPEModelData].head()
-      val m = new GraftBPEModel(d.params.uid,
-        d.mergeValues.grouped(2).toArray)
-      GraftBPE.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftBPEModel] = new Reader
+  override def read: MLReader[GraftBPEModel] =
+    new StageIO.ModelReader((uid: String, d: BPEModelData) =>
+      new GraftBPEModel(uid, d.mergeValues.grouped(2).toArray))
   override def load(path: String): GraftBPEModel = super.load(path)
 }

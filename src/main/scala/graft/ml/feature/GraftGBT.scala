@@ -4,8 +4,8 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, count, floor, lit, sum, when}
-import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StructField, StructType}
+import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, NumericType, StructField, StructType}
 
 import graft.operators.Gbt
 
@@ -173,7 +173,7 @@ class GraftGBT(override val uid: String)
 
   override def copy(extra: ParamMap): GraftGBT = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftGBT.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted boosted-stump ensemble: the base per-mille prediction plus
@@ -222,147 +222,31 @@ class GraftGBTModel private[feature] (override val uid: String,
     copyValues(new GraftGBTModel(uid, baseF, rounds), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new GraftGBTModel.Writer(this)
+  override def write: MLWriter =
+    new StageIO.ModelWriter(this, GBTModelData(baseF, rounds.toSeq))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class GBTParamsData(uid: String,
-    maxIter: Option[Int], binWidth: Option[Double],
-    featuresCol: Option[String], labelCol: Option[String],
-    predictionCol: Option[String], probabilityCol: Option[String],
-    featureCols: Option[Seq[String]] = None,
-    binWidths: Option[Seq[Double]] = None,
-    lossType: Option[String] = None,
-    labelGrid: Option[Long] = None,
-    labelBound: Option[Long] = None)
-
-/** One persisted boosting round (Gbt.GbtRound, flattened). */
-private[feature] case class GBTRoundData(round: Int, thresholdBin: Long,
-    nLeft: Long, nRight: Long, vLeft: Long, vRight: Long, sseAfter: Long,
-    feature: Int = 0)
-
-/** Fitted-model artifact: params + base prediction + round table. */
-private[feature] case class GBTModelData(params: GBTParamsData,
-    baseF: Long, rounds: Seq[GBTRoundData])
+/** Fitted-model payload after the `params` struct ([[StageIO]]): base
+  * prediction + round table. */
+private[feature] case class GBTModelData(baseF: Long, rounds: Seq[Gbt.GbtRound])
 
 object GraftGBT extends MLReadable[GraftGBT] {
-
-  private[feature] def paramsData(
-      p: GraftGBTParams with Params): GBTParamsData =
-    GBTParamsData(p.uid, p.get(p.maxIter), p.get(p.binWidth),
-      p.get(p.featuresCol), p.get(p.labelCol), p.get(p.predictionCol),
-      p.get(p.probabilityCol),
-      p.get(p.featureCols).map(_.toSeq), p.get(p.binWidths).map(_.toSeq),
-      p.get(p.lossType), p.get(p.labelGrid), p.get(p.labelBound))
-
-  private[feature] def restoreParams(t: GraftGBTParams,
-      d: GBTParamsData): Unit = {
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.binWidth.foreach(v => t.set(t.binWidth, v))
-    d.featuresCol.foreach(v => t.set(t.featuresCol, v))
-    d.labelCol.foreach(v => t.set(t.labelCol, v))
-    d.predictionCol.foreach(v => t.set(t.predictionCol, v))
-    d.probabilityCol.foreach(v => t.set(t.probabilityCol, v))
-    d.featureCols.foreach(v => t.set(t.featureCols, v.toArray))
-    d.binWidths.foreach(v => t.set(t.binWidths, v.toArray))
-    d.lossType.foreach(v => t.set(t.lossType, v))
-    d.labelGrid.foreach(v => t.set(t.labelGrid, v))
-    d.labelBound.foreach(v => t.set(t.labelBound, v))
-  }
-
-  /** Pre-r15 artifacts lack the lossType/labelGrid/labelBound columns
-    * — add them as nulls before `.as[T]` (which does NOT apply Scala
-    * defaults). */
-  private[feature] def backfillParamCols(df: org.apache.spark.sql.DataFrame,
-      nested: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit}
-    if (nested) {
-      val pt = df.schema("params").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      if (pt.fieldNames.contains("lossType")) df
-      else df.withColumn("params", expr(
-        "struct(params.*, CAST(NULL AS STRING) AS lossType, " +
-          "CAST(NULL AS BIGINT) AS labelGrid, " +
-          "CAST(NULL AS BIGINT) AS labelBound)"))
-    } else {
-      if (df.schema.fieldNames.contains("lossType")) df
-      else df.withColumn("lossType", lit(null).cast("string"))
-        .withColumn("labelGrid", lit(null).cast("bigint"))
-        .withColumn("labelBound", lit(null).cast("bigint"))
-    }
-  }
-
-  private[feature] class Writer(instance: GraftGBT) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftGBT] {
-    override def load(path: String): GraftGBT = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = backfillParamCols(spark.read.parquet(s"$path/params"),
-        nested = false).as[GBTParamsData].head()
-      val e = new GraftGBT(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftGBT] = new Reader
+  override def read: MLReader[GraftGBT] = new StageIO.EstimatorReader(new GraftGBT(_))
   override def load(path: String): GraftGBT = super.load(path)
 }
 
 object GraftGBTModel extends MLReadable[GraftGBTModel] {
 
-  private[feature] class Writer(instance: GraftGBTModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(GBTModelData(GraftGBT.paramsData(instance), instance.baseF,
-          instance.rounds.toSeq.map(r => GBTRoundData(r.round,
-            r.thresholdBin, r.nLeft, r.nRight, r.vLeft, r.vRight,
-            r.sseAfter, r.feature)))).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
+  /** Artifacts persisted before the multi-feature round lack the nested
+    * `feature` field, and `.as[T]` does NOT apply Scala default values:
+    * backfill feature = 0 (the single-feature reading) before decoding. */
+  private def withRoundFeature(df: DataFrame): DataFrame =
+    if (df.schema("rounds").dataType.asInstanceOf[ArrayType].elementType
+        .asInstanceOf[StructType].fieldNames.contains("feature")) df
+    else df.withColumn("rounds", transform(col("rounds"), _.withField("feature", lit(0))))
 
-  private class Reader extends MLReader[GraftGBTModel] {
-    override def load(path: String): GraftGBTModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      // artifacts persisted before the multi-feature round lack the
-      // nested `feature` field, and `.as[T]` does NOT apply Scala
-      // default values (round-14 advisory) — backfill feature = 0
-      // (the single-feature reading) before decoding
-      var raw = spark.read.parquet(s"$path/data")
-      val elem = raw.schema("rounds").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      if (!elem.fieldNames.contains("feature"))
-        raw = raw.withColumn("rounds",
-          org.apache.spark.sql.functions.expr(
-            "transform(rounds, r -> struct(r.round AS round, " +
-              "r.thresholdBin AS thresholdBin, r.nLeft AS nLeft, " +
-              "r.nRight AS nRight, r.vLeft AS vLeft, " +
-              "r.vRight AS vRight, r.sseAfter AS sseAfter, " +
-              "0 AS feature))"))
-      raw = GraftGBT.backfillParamCols(raw, nested = true)
-      val d = raw.as[GBTModelData].head()
-      val m = new GraftGBTModel(d.params.uid, d.baseF,
-        d.rounds.map(r => Gbt.GbtRound(r.round, r.thresholdBin, r.nLeft,
-          r.nRight, r.vLeft, r.vRight, r.sseAfter, r.feature)).toArray)
-      GraftGBT.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftGBTModel] = new Reader
+  override def read: MLReader[GraftGBTModel] =
+    new StageIO.ModelReader((uid: String, d: GBTModelData) =>
+      new GraftGBTModel(uid, d.baseF, d.rounds.toArray), fix = withRoundFeature)
   override def load(path: String): GraftGBTModel = super.load(path)
 }

@@ -151,7 +151,7 @@ class GraftIDF(override val uid: String)
 
   override def copy(extra: ParamMap): GraftIDF = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftIDF.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted IDF table: (term, ln(nDocs/df)) rows over the fit corpus's
@@ -205,13 +205,9 @@ class GraftIDFModel private[graft] (override val uid: String,
   override def write: MLWriter = new GraftIDFModel.Writer(this)
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class IdfParamsData(uid: String, idCol: Option[String],
-    inputCol: Option[String], outputCol: Option[String], minDf: Option[Int],
-    vocabSize: Option[Int])
-
-private[feature] case class IdfModelMeta(params: IdfParamsData, nDocs: Long,
-    vocabCount: Long)
+/** Fitted-model payload after the `params` struct in `meta/`
+  * ([[StageIO]]); the idf table itself is `idf/`. */
+private[feature] case class IdfModelMeta(nDocs: Long, vocabCount: Long)
 
 object GraftIDF extends MLReadable[GraftIDF] {
 
@@ -220,48 +216,15 @@ object GraftIDF extends MLReadable[GraftIDF] {
     * a driver/executor; past it the term-keyed shuffle join wins. */
   val broadcastMaxVocab: Int = 1 << 21
 
-  private[feature] def paramsData(
-      p: GraftIDFParams with Params): IdfParamsData =
-    IdfParamsData(p.uid, p.get(p.idCol), p.get(p.inputCol),
-      p.get(p.outputCol), p.get(p.minDf), p.get(p.vocabSize))
-
-  private[feature] def restoreParams(t: GraftIDFParams,
-      d: IdfParamsData): Unit = {
-    d.idCol.foreach(v => t.set(t.idCol, v))
-    d.inputCol.foreach(v => t.set(t.inputCol, v))
-    d.outputCol.foreach(v => t.set(t.outputCol, v))
-    d.minDf.foreach(v => t.set(t.minDf, v))
-    d.vocabSize.foreach(v => t.set(t.vocabSize, v))
-  }
-
-  private[feature] class Writer(instance: GraftIDF) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftIDF] {
-    override def load(path: String): GraftIDF = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[IdfParamsData].head()
-      val e = new GraftIDF(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftIDF] = new Reader
+  override def read: MLReader[GraftIDF] = new StageIO.EstimatorReader(new GraftIDF(_))
   override def load(path: String): GraftIDF = super.load(path)
 }
 
 object GraftIDFModel extends MLReadable[GraftIDFModel] {
 
-  private[feature] class Writer(instance: GraftIDFModel) extends MLWriter {
+  private[feature] class Writer(instance: GraftIDFModel)
+      extends StageIO.ModelWriter(instance,
+        IdfModelMeta(instance.nDocs, instance.vocabCount), "meta") {
     private var staged: Option[String] = None
 
     /** Stage the idf table to a sibling temp dir BEFORE MLWriter's
@@ -289,44 +252,37 @@ object GraftIDFModel extends MLReadable[GraftIDFModel] {
     }
 
     override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(IdfModelMeta(GraftIDF.paramsData(instance), instance.nDocs,
-          instance.vocabCount)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
       // the idf table writes DISTRIBUTED (no driver round-trip); the
       // vocabSize cap bounds it, so the file count stays small
-      staged.map(spark.read.parquet(_)).getOrElse(instance.idfTable)
+      staged.map(sparkSession.read.parquet(_)).getOrElse(instance.idfTable)
         .write.mode("overwrite").parquet(s"$path/idf")
-      GraftPCA.writeMetadata(path, spark, instance)
+      super.saveImpl(path)
     }
   }
 
+  /** Pre-vocabCount artifacts (the field landed after the first
+    * persisted models): fall back to the configured cap, the vocabSize
+    * default when unset. Routing is then conservative-by-cap exactly as
+    * those models were. */
+  private def withVocabCount(meta: DataFrame): DataFrame =
+    if (meta.columns.contains("vocabCount")) meta
+    else {
+      val cap = lit(1 << 20)
+      meta.withColumn("vocabCount", (
+        if (meta.schema("params").dataType.asInstanceOf[StructType]
+            .fieldNames.contains("vocabSize")) coalesce(col("params.vocabSize"), cap)
+        else cap).cast("long"))
+    }
+
   private class Reader extends MLReader[GraftIDFModel] {
     override def load(path: String): GraftIDFModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val metaDf = spark.read.parquet(s"$path/meta")
-      // pre-vocabCount artifacts (the field landed after the first
-      // persisted models): fall back to the configured cap — routing
-      // is then conservative-by-cap exactly as those models were
-      val meta =
-        if (metaDf.columns.contains("vocabCount"))
-          metaDf.as[IdfModelMeta].head()
-        else {
-          val old = metaDf
-            .selectExpr("params", "nDocs").as[(IdfParamsData, Long)].head()
-          IdfModelMeta(old._1, old._2,
-            old._1.vocabSize.getOrElse(1 << 20).toLong)
-        }
       // loads as a DataFrame over the persisted parquet — the model is
       // usable without materializing the vocabulary anywhere
-      val idfDf = spark.read.parquet(s"$path/idf")
+      val idfDf = sparkSession.read.parquet(s"$path/idf")
         .select(col("term"), col("idf"))
-      val m = new GraftIDFModel(meta.params.uid, meta.nDocs,
-        meta.vocabCount, idfDf)
-      GraftIDF.restoreParams(m, meta.params)
-      m
+      new StageIO.ModelReader((uid: String, m: IdfModelMeta) =>
+          new GraftIDFModel(uid, m.nDocs, m.vocabCount, idfDf),
+        "meta", withVocabCount).session(sparkSession).load(path)
     }
   }
 

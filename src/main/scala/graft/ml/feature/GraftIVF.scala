@@ -105,7 +105,7 @@ class GraftIVF(override val uid: String)
 
   override def copy(extra: ParamMap): GraftIVF = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftIVF.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted IVF index plan: the coarse-cell codebook. */
@@ -135,89 +135,28 @@ class GraftIVFModel private[feature] (override val uid: String,
   override def copy(extra: ParamMap): GraftIVFModel =
     copyValues(new GraftIVFModel(uid, centroids), extra).setParent(parent)
 
-  override def write: MLWriter = new GraftIVFModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    IvfModelData(centroids.length,
+      if (centroids.isEmpty) 0 else centroids.head.length, centroids.flatten))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class IvfParamsData(uid: String, idCol: Option[String],
-    inputCol: Option[String], cellCol: Option[String], k: Option[Int],
-    maxIter: Option[Int], sampleSize: Option[Int])
-
-/** Fitted-index artifact: params + row-major centroid matrix. */
-private[feature] case class IvfModelData(params: IvfParamsData,
-    nCents: Int, dim: Int, centValues: Array[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * row-major centroid matrix. */
+private[feature] case class IvfModelData(nCents: Int, dim: Int,
+    centValues: Array[Double])
 
 object GraftIVF extends MLReadable[GraftIVF] {
-
-  private[feature] def paramsData(
-      p: GraftIVFParams with Params): IvfParamsData =
-    IvfParamsData(p.uid, p.get(p.idCol), p.get(p.inputCol), p.get(p.cellCol),
-      p.get(p.k), p.get(p.maxIter), p.get(p.sampleSize))
-
-  private[feature] def restoreParams(t: GraftIVFParams,
-      d: IvfParamsData): Unit = {
-    d.idCol.foreach(v => t.set(t.idCol, v))
-    d.inputCol.foreach(v => t.set(t.inputCol, v))
-    d.cellCol.foreach(v => t.set(t.cellCol, v))
-    d.k.foreach(v => t.set(t.k, v))
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.sampleSize.foreach(v => t.set(t.sampleSize, v))
-  }
-
-  private[feature] class Writer(instance: GraftIVF) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftIVF] {
-    override def load(path: String): GraftIVF = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[IvfParamsData].head()
-      val e = new GraftIVF(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftIVF] = new Reader
+  override def read: MLReader[GraftIVF] = new StageIO.EstimatorReader(new GraftIVF(_))
   override def load(path: String): GraftIVF = super.load(path)
 }
 
 object GraftIVFModel extends MLReadable[GraftIVFModel] {
-
-  private[feature] class Writer(instance: GraftIVFModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      val dim = if (instance.centroids.isEmpty) 0
-                else instance.centroids.head.length
-      Seq(IvfModelData(GraftIVF.paramsData(instance),
-          instance.centroids.length, dim, instance.centroids.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftIVFModel] {
-    override def load(path: String): GraftIVFModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[IvfModelData].head()
+  override def read: MLReader[GraftIVFModel] =
+    new StageIO.ModelReader((uid: String, d: IvfModelData) => {
       val cents = d.centValues.grouped(d.dim).toArray
       require(cents.length == d.nCents,
         s"corrupt artifact: ${cents.length} centroids, expected ${d.nCents}")
-      val m = new GraftIVFModel(d.params.uid, cents)
-      GraftIVF.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftIVFModel] = new Reader
+      new GraftIVFModel(uid, cents)
+    })
   override def load(path: String): GraftIVFModel = super.load(path)
 }

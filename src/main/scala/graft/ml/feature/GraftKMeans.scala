@@ -82,7 +82,7 @@ class GraftKMeans(override val uid: String)
 
   override def copy(extra: ParamMap): GraftKMeans = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftKMeans.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 class GraftKMeansModel private[feature] (override val uid: String,
@@ -105,90 +105,29 @@ class GraftKMeansModel private[feature] (override val uid: String,
     copyValues(new GraftKMeansModel(uid, centroids, clusterSizes), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new GraftKMeansModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    KMeansModelData(centroids.length,
+      if (centroids.isEmpty) 0 else centroids.head.length, centroids.flatten,
+      clusterSizes))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class KMeansParamsData(uid: String, k: Option[Int],
-    maxIter: Option[Int], inputCol: Option[String],
-    predictionCol: Option[String], orderCol: Option[String])
-
-/** Fitted-model artifact: params + row-major centroid matrix + sizes. */
-private[feature] case class KMeansModelData(params: KMeansParamsData,
-    nCents: Int, dim: Int, centValues: Array[Double], sizes: Array[Long])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * row-major centroid matrix + sizes. */
+private[feature] case class KMeansModelData(nCents: Int, dim: Int,
+    centValues: Array[Double], sizes: Array[Long])
 
 object GraftKMeans extends MLReadable[GraftKMeans] {
-
-  private[feature] def paramsData(
-      p: GraftKMeansParams with Params): KMeansParamsData =
-    KMeansParamsData(p.uid, p.get(p.k), p.get(p.maxIter), p.get(p.inputCol),
-      p.get(p.predictionCol), p.get(p.orderCol))
-
-  private[feature] def restoreParams(t: GraftKMeansParams,
-      d: KMeansParamsData): Unit = {
-    d.k.foreach(v => t.set(t.k, v))
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.inputCol.foreach(v => t.set(t.inputCol, v))
-    d.predictionCol.foreach(v => t.set(t.predictionCol, v))
-    d.orderCol.foreach(v => t.set(t.orderCol, v))
-  }
-
-  private[feature] class Writer(instance: GraftKMeans) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftKMeans] {
-    override def load(path: String): GraftKMeans = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[KMeansParamsData].head()
-      val e = new GraftKMeans(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftKMeans] = new Reader
+  override def read: MLReader[GraftKMeans] = new StageIO.EstimatorReader(new GraftKMeans(_))
   override def load(path: String): GraftKMeans = super.load(path)
 }
 
 object GraftKMeansModel extends MLReadable[GraftKMeansModel] {
-
-  private[feature] class Writer(instance: GraftKMeansModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      val dim = if (instance.centroids.isEmpty) 0
-                else instance.centroids.head.length
-      Seq(KMeansModelData(GraftKMeans.paramsData(instance),
-          instance.centroids.length, dim,
-          instance.centroids.flatten, instance.clusterSizes)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftKMeansModel] {
-    override def load(path: String): GraftKMeansModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[KMeansModelData].head()
+  override def read: MLReader[GraftKMeansModel] =
+    new StageIO.ModelReader((uid: String, d: KMeansModelData) => {
       val cents = d.centValues.grouped(d.dim).toArray
       require(cents.length == d.nCents,
         s"corrupt artifact: ${cents.length} centroids, expected ${d.nCents}")
-      val m = new GraftKMeansModel(d.params.uid, cents, d.sizes)
-      GraftKMeans.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftKMeansModel] = new Reader
+      new GraftKMeansModel(uid, cents, d.sizes)
+    })
   override def load(path: String): GraftKMeansModel = super.load(path)
 }

@@ -99,7 +99,7 @@ class GraftLinear(override val uid: String)
 
   override def copy(extra: ParamMap): GraftLinear = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftLinear.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted linear model: intercept + one coefficient per feature
@@ -128,84 +128,23 @@ class GraftLinearModel private[feature] (override val uid: String,
     copyValues(new GraftLinearModel(uid, intercept, coefficients),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GraftLinearModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    LinearModelData(intercept, coefficients.toSeq))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class LinearParamsData(uid: String,
-    featuresCols: Option[Seq[String]], labelCol: Option[String],
-    regParam: Option[Long], predictionCol: Option[String])
-
-/** Fitted-model artifact: params + intercept + coefficients. */
-private[feature] case class LinearModelData(params: LinearParamsData,
-    intercept: Double, coefficients: Seq[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * intercept + coefficients. */
+private[feature] case class LinearModelData(intercept: Double,
+    coefficients: Seq[Double])
 
 object GraftLinear extends MLReadable[GraftLinear] {
-
-  private[feature] def paramsData(
-      p: GraftLinearParams with Params): LinearParamsData =
-    LinearParamsData(p.uid, p.get(p.featuresCols).map(_.toSeq),
-      p.get(p.labelCol), p.get(p.regParam), p.get(p.predictionCol))
-
-  private[feature] def restoreParams(t: GraftLinearParams,
-      d: LinearParamsData): Unit = {
-    d.featuresCols.foreach(v => t.set(t.featuresCols, v.toArray))
-    d.labelCol.foreach(v => t.set(t.labelCol, v))
-    d.regParam.foreach(v => t.set(t.regParam, v))
-    d.predictionCol.foreach(v => t.set(t.predictionCol, v))
-  }
-
-  private[feature] class Writer(instance: GraftLinear) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftLinear] {
-    override def load(path: String): GraftLinear = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[LinearParamsData].head()
-      val e = new GraftLinear(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftLinear] = new Reader
+  override def read: MLReader[GraftLinear] = new StageIO.EstimatorReader(new GraftLinear(_))
   override def load(path: String): GraftLinear = super.load(path)
 }
 
 object GraftLinearModel extends MLReadable[GraftLinearModel] {
-
-  private[feature] class Writer(instance: GraftLinearModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(LinearModelData(GraftLinear.paramsData(instance),
-          instance.intercept, instance.coefficients.toSeq)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftLinearModel] {
-    override def load(path: String): GraftLinearModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[LinearModelData].head()
-      val m = new GraftLinearModel(d.params.uid, d.intercept,
-        d.coefficients.toArray)
-      GraftLinear.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftLinearModel] = new Reader
+  override def read: MLReader[GraftLinearModel] =
+    new StageIO.ModelReader((uid: String, d: LinearModelData) =>
+      new GraftLinearModel(uid, d.intercept, d.coefficients.toArray))
   override def load(path: String): GraftLinearModel = super.load(path)
 }

@@ -98,7 +98,7 @@ class GraftLogistic(override val uid: String)
 
   override def copy(extra: ParamMap): GraftLogistic = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftLogistic.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted GLM: intercept + slope, plus the per-superstep coefficient
@@ -129,87 +129,24 @@ class GraftLogisticModel private[feature] (override val uid: String,
     copyValues(new GraftLogisticModel(uid, intercept, coefficient, trace),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GraftLogisticModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    LogisticModelData(intercept, coefficient, trace.flatten))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class LogisticParamsData(uid: String,
-    maxIter: Option[Int], featuresCol: Option[String],
-    labelCol: Option[String], predictionCol: Option[String],
-    probabilityCol: Option[String])
-
-/** Fitted-model artifact: params + coefficients + flattened trace. */
-private[feature] case class LogisticModelData(params: LogisticParamsData,
-    intercept: Double, coefficient: Double, traceValues: Array[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * coefficients + flattened trace. */
+private[feature] case class LogisticModelData(intercept: Double,
+    coefficient: Double, traceValues: Array[Double])
 
 object GraftLogistic extends MLReadable[GraftLogistic] {
-
-  private[feature] def paramsData(
-      p: GraftLogisticParams with Params): LogisticParamsData =
-    LogisticParamsData(p.uid, p.get(p.maxIter), p.get(p.featuresCol),
-      p.get(p.labelCol), p.get(p.predictionCol), p.get(p.probabilityCol))
-
-  private[feature] def restoreParams(t: GraftLogisticParams,
-      d: LogisticParamsData): Unit = {
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.featuresCol.foreach(v => t.set(t.featuresCol, v))
-    d.labelCol.foreach(v => t.set(t.labelCol, v))
-    d.predictionCol.foreach(v => t.set(t.predictionCol, v))
-    d.probabilityCol.foreach(v => t.set(t.probabilityCol, v))
-  }
-
-  private[feature] class Writer(instance: GraftLogistic) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftLogistic] {
-    override def load(path: String): GraftLogistic = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[LogisticParamsData].head()
-      val e = new GraftLogistic(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftLogistic] = new Reader
+  override def read: MLReader[GraftLogistic] = new StageIO.EstimatorReader(new GraftLogistic(_))
   override def load(path: String): GraftLogistic = super.load(path)
 }
 
 object GraftLogisticModel extends MLReadable[GraftLogisticModel] {
-
-  private[feature] class Writer(instance: GraftLogisticModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(LogisticModelData(GraftLogistic.paramsData(instance),
-          instance.intercept, instance.coefficient,
-          instance.trace.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftLogisticModel] {
-    override def load(path: String): GraftLogisticModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[LogisticModelData].head()
-      val m = new GraftLogisticModel(d.params.uid, d.intercept,
-        d.coefficient, d.traceValues.grouped(2).toArray)
-      GraftLogistic.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftLogisticModel] = new Reader
+  override def read: MLReader[GraftLogisticModel] =
+    new StageIO.ModelReader((uid: String, d: LogisticModelData) =>
+      new GraftLogisticModel(uid, d.intercept, d.coefficient,
+        d.traceValues.grouped(2).toArray))
   override def load(path: String): GraftLogisticModel = super.load(path)
 }

@@ -132,7 +132,7 @@ class GraftMinHash(override val uid: String)
 
   override def copy(extra: ParamMap): GraftMinHash = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftMinHash.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted LSH index plan: the measured (bands, rowsPerBand) choice
@@ -180,85 +180,24 @@ class GraftMinHashModel private[feature] (override val uid: String,
     copyValues(new GraftMinHashModel(uid, numBands, rowsPerBand, sweep),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GraftMinHashModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    MinHashModelData(numBands, rowsPerBand, sweep.flatten))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class MinHashParamsData(uid: String,
-    idCol: Option[String], textCol: Option[String],
-    bandsCol: Option[String], sampleSize: Option[Int])
-
-/** Fitted-model artifact: params + chosen banding + flattened sweep. */
-private[feature] case class MinHashModelData(params: MinHashParamsData,
-    numBands: Int, rowsPerBand: Int, sweepValues: Array[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * chosen banding + flattened sweep. */
+private[feature] case class MinHashModelData(numBands: Int,
+    rowsPerBand: Int, sweepValues: Array[Double])
 
 object GraftMinHash extends MLReadable[GraftMinHash] {
-
-  private[feature] def paramsData(
-      p: GraftMinHashParams with Params): MinHashParamsData =
-    MinHashParamsData(p.uid, p.get(p.idCol), p.get(p.textCol),
-      p.get(p.bandsCol), p.get(p.sampleSize))
-
-  private[feature] def restoreParams(t: GraftMinHashParams,
-      d: MinHashParamsData): Unit = {
-    d.idCol.foreach(v => t.set(t.idCol, v))
-    d.textCol.foreach(v => t.set(t.textCol, v))
-    d.bandsCol.foreach(v => t.set(t.bandsCol, v))
-    d.sampleSize.foreach(v => t.set(t.sampleSize, v))
-  }
-
-  private[feature] class Writer(instance: GraftMinHash) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftMinHash] {
-    override def load(path: String): GraftMinHash = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[MinHashParamsData].head()
-      val e = new GraftMinHash(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftMinHash] = new Reader
+  override def read: MLReader[GraftMinHash] = new StageIO.EstimatorReader(new GraftMinHash(_))
   override def load(path: String): GraftMinHash = super.load(path)
 }
 
 object GraftMinHashModel extends MLReadable[GraftMinHashModel] {
-
-  private[feature] class Writer(instance: GraftMinHashModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(MinHashModelData(GraftMinHash.paramsData(instance),
-          instance.numBands, instance.rowsPerBand,
-          instance.sweep.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftMinHashModel] {
-    override def load(path: String): GraftMinHashModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[MinHashModelData].head()
-      val m = new GraftMinHashModel(d.params.uid, d.numBands,
-        d.rowsPerBand, d.sweepValues.grouped(6).toArray)
-      GraftMinHash.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftMinHashModel] = new Reader
+  override def read: MLReader[GraftMinHashModel] =
+    new StageIO.ModelReader((uid: String, d: MinHashModelData) =>
+      new GraftMinHashModel(uid, d.numBands, d.rowsPerBand,
+        d.sweepValues.grouped(6).toArray))
   override def load(path: String): GraftMinHashModel = super.load(path)
 }

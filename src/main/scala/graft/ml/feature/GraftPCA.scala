@@ -134,91 +134,20 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
 
   override def copy(extra: ParamMap): GraftPCA = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftPCA.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
-/** Explicitly-set params of an estimator or model, one parquet row.
-  * (The reference stores a JSON metadata file + a Matrix-UDT parquet,
-  * RapidsPCA.scala:218-228; we store plain columns so the artifact is
-  * readable by any parquet reader, DuckDB included.) Top-level so the
-  * encoder's generated code can reach the accessors (nested private
-  * classes force an interpreter fallback — or a hard failure under
-  * Pipeline.save's codegen path). */
-private[feature] case class ParamsData(uid: String, k: Option[Int],
-    inputCol: Option[String], outputCol: Option[String],
-    meanCentering: Option[Boolean], useGemm: Option[Boolean],
-    useCuSolverSVD: Option[Boolean], gpuId: Option[Int])
-
-/** Fitted-model artifact row: params + the n×k component matrix. */
-private[feature] case class ModelData(params: ParamsData, pcRows: Int,
-    pcCols: Int, pcValues: Array[Double], explainedVariance: Array[Double])
+/** Fitted-model payload after the `params` struct in `data/`
+  * ([[StageIO]]): the n×k component matrix as plain columns where the
+  * reference stores a Matrix UDT (RapidsPCA.scala:218-228). Top-level
+  * so the encoder's generated code can reach the accessors (nested
+  * private classes force an interpreter fallback, or a hard failure
+  * under Pipeline.save's codegen path). */
+private[feature] case class ModelData(pcRows: Int, pcCols: Int,
+    pcValues: Array[Double], explainedVariance: Array[Double])
 
 object GraftPCA extends MLReadable[GraftPCA] {
-
-  /** DefaultParamsWriter-layout metadata file, so Pipeline persistence
-    * can discover the stage class (`SharedReadWrite.load` reads
-    * `metadata/` to find the companion reader, which then loads our
-    * parquet artifact). Params are replicated in paramMap for
-    * inspectability; our own reader uses the parquet row. */
-  private[feature] def writeMetadata(path: String,
-      spark: org.apache.spark.sql.SparkSession, instance: Params): Unit = {
-    def jsonVal(v: Any): String = v match {
-      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      // array-typed params (e.g. featuresCols) must render as JSON
-      // arrays — Array.toString would corrupt the metadata file that
-      // Pipeline persistence parses to discover the stage class
-      case a: Array[_] => "[" + a.map(jsonVal).mkString(",") + "]"
-      case s: Seq[_] => "[" + s.map(jsonVal).mkString(",") + "]"
-      case other => other.toString
-    }
-    val pairs = instance.params.flatMap(p => instance.get(p).map(v =>
-      s""""${p.name}":${jsonVal(v)}""")).mkString(",")
-    val json = s"""{"class":"${instance.getClass.getName}",""" +
-      s""""timestamp":${System.currentTimeMillis()},""" +
-      s""""sparkVersion":"${spark.version}","uid":"${instance.uid}",""" +
-      s""""paramMap":{$pairs},"defaultParamMap":{}}"""
-    import spark.implicits._
-    // a one-row local Dataset is one partition: one part file, no shuffle
-    Seq(json).toDS().write.mode("overwrite").text(s"$path/metadata")
-  }
-
-  private[feature] def paramsData(p: GraftPCAParams with Params): ParamsData =
-    ParamsData(p.uid, p.get(p.k), p.get(p.inputCol), p.get(p.outputCol),
-      p.get(p.meanCentering), p.get(p.useGemm), p.get(p.useCuSolverSVD),
-      p.get(p.gpuId))
-
-  private[feature] def restoreParams(t: GraftPCAParams, d: ParamsData): Unit = {
-    d.k.foreach(v => t.set(t.k, v))
-    d.inputCol.foreach(v => t.set(t.inputCol, v))
-    d.outputCol.foreach(v => t.set(t.outputCol, v))
-    d.meanCentering.foreach(v => t.set(t.meanCentering, v))
-    d.useGemm.foreach(v => t.set(t.useGemm, v))
-    d.useCuSolverSVD.foreach(v => t.set(t.useCuSolverSVD, v))
-    d.gpuId.foreach(v => t.set(t.gpuId, v))
-  }
-
-  private[feature] class Writer(instance: GraftPCA) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .write.mode("overwrite").parquet(s"$path/params")
-      writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPCA] {
-    override def load(path: String): GraftPCA = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[ParamsData].head()
-      val est = new GraftPCA(d.uid)
-      restoreParams(est, d)
-      est
-    }
-  }
-
-  override def read: MLReader[GraftPCA] = new Reader
+  override def read: MLReader[GraftPCA] = new StageIO.EstimatorReader(new GraftPCA(_))
   override def load(path: String): GraftPCA = super.load(path)
 }
 
@@ -258,37 +187,15 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
     copyValues(new GraftPCAModel(uid, pc, explainedVariance), extra)
       .setParent(parent)
 
-  override def write: MLWriter = new GraftPCAModel.Writer(this)
+  // single artifact file, as the reference (RapidsPCA.scala:224)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    ModelData(pc.numRows, pc.numCols, pc.values, explainedVariance.values))
 }
 
 object GraftPCAModel extends MLReadable[GraftPCAModel] {
-
-  private[feature] class Writer(instance: GraftPCAModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = ModelData(GraftPCA.paramsData(instance), instance.pc.numRows,
-        instance.pc.numCols, instance.pc.values,
-        instance.explainedVariance.values)
-      // single artifact file, as the reference (RapidsPCA.scala:224)
-      Seq(d).toDS().write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPCAModel] {
-    override def load(path: String): GraftPCAModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[ModelData].head()
-      val model = new GraftPCAModel(d.params.uid,
-        new DenseMatrix(d.pcRows, d.pcCols, d.pcValues),
-        new DenseVector(d.explainedVariance))
-      GraftPCA.restoreParams(model, d.params)
-      model
-    }
-  }
-
-  override def read: MLReader[GraftPCAModel] = new Reader
+  override def read: MLReader[GraftPCAModel] =
+    new StageIO.ModelReader((uid: String, d: ModelData) => new GraftPCAModel(uid,
+      new DenseMatrix(d.pcRows, d.pcCols, d.pcValues),
+      new DenseVector(d.explainedVariance)))
   override def load(path: String): GraftPCAModel = super.load(path)
 }

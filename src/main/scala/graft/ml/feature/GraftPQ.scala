@@ -115,7 +115,7 @@ class GraftPQ(override val uid: String)
 
   override def copy(extra: ParamMap): GraftPQ = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftPQ.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted PQ encoder: per-subspace codebooks. */
@@ -139,95 +139,31 @@ class GraftPQModel private[feature] (override val uid: String,
   override def copy(extra: ParamMap): GraftPQModel =
     copyValues(new GraftPQModel(uid, codebooks), extra).setParent(parent)
 
-  override def write: MLWriter = new GraftPQModel.Writer(this)
+  override def write: MLWriter = {
+    val nCents = if (codebooks.isEmpty) 0 else codebooks.head.length
+    val subDim = if (nCents == 0) 0 else codebooks.head.head.length
+    new StageIO.ModelWriter(this, PqModelData(codebooks.length, nCents, subDim,
+      codebooks.flatten.flatten))
+  }
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class PqParamsData(uid: String, idCol: Option[String],
-    inputCol: Option[String], codesCol: Option[String],
-    numSubspaces: Option[Int], codebookSize: Option[Int],
-    maxIter: Option[Int], sampleSize: Option[Int])
-
-/** Fitted-encoder artifact: params + flattened codebook tensor. */
-private[feature] case class PqModelData(params: PqParamsData,
-    nSubspaces: Int, nCents: Int, subDim: Int, bookValues: Array[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * flattened codebook tensor. */
+private[feature] case class PqModelData(nSubspaces: Int, nCents: Int,
+    subDim: Int, bookValues: Array[Double])
 
 object GraftPQ extends MLReadable[GraftPQ] {
-
-  private[feature] def paramsData(
-      p: GraftPQParams with Params): PqParamsData =
-    PqParamsData(p.uid, p.get(p.idCol), p.get(p.inputCol), p.get(p.codesCol),
-      p.get(p.numSubspaces), p.get(p.codebookSize), p.get(p.maxIter),
-      p.get(p.sampleSize))
-
-  private[feature] def restoreParams(t: GraftPQParams,
-      d: PqParamsData): Unit = {
-    d.idCol.foreach(v => t.set(t.idCol, v))
-    d.inputCol.foreach(v => t.set(t.inputCol, v))
-    d.codesCol.foreach(v => t.set(t.codesCol, v))
-    d.numSubspaces.foreach(v => t.set(t.numSubspaces, v))
-    d.codebookSize.foreach(v => t.set(t.codebookSize, v))
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.sampleSize.foreach(v => t.set(t.sampleSize, v))
-  }
-
-  private[feature] class Writer(instance: GraftPQ) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPQ] {
-    override def load(path: String): GraftPQ = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[PqParamsData].head()
-      val e = new GraftPQ(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftPQ] = new Reader
+  override def read: MLReader[GraftPQ] = new StageIO.EstimatorReader(new GraftPQ(_))
   override def load(path: String): GraftPQ = super.load(path)
 }
 
 object GraftPQModel extends MLReadable[GraftPQModel] {
-
-  private[feature] class Writer(instance: GraftPQModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      val nSub = instance.codebooks.length
-      val nCents = if (nSub == 0) 0 else instance.codebooks.head.length
-      val subDim = if (nCents == 0) 0
-                   else instance.codebooks.head.head.length
-      Seq(PqModelData(GraftPQ.paramsData(instance), nSub, nCents, subDim,
-          instance.codebooks.flatten.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPQModel] {
-    override def load(path: String): GraftPQModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[PqModelData].head()
-      val books = d.bookValues.grouped(d.subDim).toArray
-        .grouped(d.nCents).toArray
+  override def read: MLReader[GraftPQModel] =
+    new StageIO.ModelReader((uid: String, d: PqModelData) => {
+      val books = d.bookValues.grouped(d.subDim).toArray.grouped(d.nCents).toArray
       require(books.length == d.nSubspaces,
         s"corrupt artifact: ${books.length} codebooks, expected ${d.nSubspaces}")
-      val m = new GraftPQModel(d.params.uid, books)
-      GraftPQ.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftPQModel] = new Reader
+      new GraftPQModel(uid, books)
+    })
   override def load(path: String): GraftPQModel = super.load(path)
 }

@@ -92,7 +92,7 @@ class GraftPoisson(override val uid: String)
 
   override def copy(extra: ParamMap): GraftPoisson = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftPoisson.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted Poisson GLM: intercept + slope (log scale), plus the
@@ -121,85 +121,24 @@ class GraftPoissonModel private[feature] (override val uid: String,
     copyValues(new GraftPoissonModel(uid, intercept, coefficient, trace),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GraftPoissonModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    PoissonModelData(intercept, coefficient, trace.flatten))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class PoissonParamsData(uid: String,
-    maxIter: Option[Int], featuresCol: Option[String],
-    labelCol: Option[String], rateCol: Option[String])
-
-/** Fitted-model artifact: params + coefficients + flattened trace. */
-private[feature] case class PoissonModelData(params: PoissonParamsData,
-    intercept: Double, coefficient: Double, traceValues: Array[Double])
+/** Fitted-model payload after the `params` struct ([[StageIO]]):
+  * coefficients + flattened trace. */
+private[feature] case class PoissonModelData(intercept: Double,
+    coefficient: Double, traceValues: Array[Double])
 
 object GraftPoisson extends MLReadable[GraftPoisson] {
-
-  private[feature] def paramsData(
-      p: GraftPoissonParams with Params): PoissonParamsData =
-    PoissonParamsData(p.uid, p.get(p.maxIter), p.get(p.featuresCol),
-      p.get(p.labelCol), p.get(p.rateCol))
-
-  private[feature] def restoreParams(t: GraftPoissonParams,
-      d: PoissonParamsData): Unit = {
-    d.maxIter.foreach(v => t.set(t.maxIter, v))
-    d.featuresCol.foreach(v => t.set(t.featuresCol, v))
-    d.labelCol.foreach(v => t.set(t.labelCol, v))
-    d.rateCol.foreach(v => t.set(t.rateCol, v))
-  }
-
-  private[feature] class Writer(instance: GraftPoisson) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPoisson] {
-    override def load(path: String): GraftPoisson = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/params").as[PoissonParamsData].head()
-      val e = new GraftPoisson(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftPoisson] = new Reader
+  override def read: MLReader[GraftPoisson] = new StageIO.EstimatorReader(new GraftPoisson(_))
   override def load(path: String): GraftPoisson = super.load(path)
 }
 
 object GraftPoissonModel extends MLReadable[GraftPoissonModel] {
-
-  private[feature] class Writer(instance: GraftPoissonModel)
-      extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(PoissonModelData(GraftPoisson.paramsData(instance),
-          instance.intercept, instance.coefficient,
-          instance.trace.flatten)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftPoissonModel] {
-    override def load(path: String): GraftPoissonModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = spark.read.parquet(s"$path/data").as[PoissonModelData].head()
-      val m = new GraftPoissonModel(d.params.uid, d.intercept,
-        d.coefficient, d.traceValues.grouped(2).toArray)
-      GraftPoisson.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftPoissonModel] = new Reader
+  override def read: MLReader[GraftPoissonModel] =
+    new StageIO.ModelReader((uid: String, d: PoissonModelData) =>
+      new GraftPoissonModel(uid, d.intercept, d.coefficient,
+        d.traceValues.grouped(2).toArray))
   override def load(path: String): GraftPoissonModel = super.load(path)
 }

@@ -4,8 +4,8 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, count, floor, lit, sum, when}
-import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StructField, StructType}
+import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, NumericType, StructField, StructType}
 
 import graft.operators.Stump
 
@@ -218,7 +218,7 @@ class GraftTree(override val uid: String)
 
   override def copy(extra: ParamMap): GraftTree = defaultCopy(extra)
 
-  override def write: MLWriter = new GraftTree.Writer(this)
+  override def write: MLWriter = new StageIO.EstimatorWriter(this)
 }
 
 /** Fitted histogram tree: the complete split table (path-labeled
@@ -289,158 +289,42 @@ class GraftTreeModel private[feature] (override val uid: String,
     copyValues(new GraftTreeModel(uid, splits, rootN, rootPos, binEdges),
       extra).setParent(parent)
 
-  override def write: MLWriter = new GraftTreeModel.Writer(this)
+  override def write: MLWriter = new StageIO.ModelWriter(this,
+    TreeModelData(splits.toSeq, rootN, rootPos,
+      if (binEdges.isEmpty) None else Some(binEdges.toSeq.map(_.toSeq))))
 }
 
-/** Explicitly-set params, one parquet row (the GraftPCA layout). */
-private[feature] case class TreeParamsData(uid: String,
-    maxDepth: Option[Int], binWidth: Option[Double],
-    featuresCol: Option[String], labelCol: Option[String],
-    predictionCol: Option[String], probabilityCol: Option[String],
-    featureCols: Option[Seq[String]] = None,
-    binWidths: Option[Seq[Double]] = None,
-    lossType: Option[String] = None,
-    numBins: Option[Int] = None)
-
-/** One persisted split row (Stump.TreeSplit, flattened for parquet). */
-private[feature] case class TreeSplitData(node: String, depth: Int,
-    thresholdBin: Long, n: Long, pos: Long, nl: Long, pl: Long,
-    nr: Long, pr: Long, wgRaw: Double, pgRaw: Double,
-    feature: Int = 0)
-
-/** Fitted-model artifact: params + split table + root census +
-  * learned quantile edges (empty = width binning). */
-private[feature] case class TreeModelData(params: TreeParamsData,
-    splits: Seq[TreeSplitData], rootN: Long, rootPos: Long,
-    binEdges: Option[Seq[Seq[Double]]] = None)
+/** Fitted-model payload after the `params` struct ([[StageIO]]): split
+  * table + root census + learned quantile edges (empty = width
+  * binning). */
+private[feature] case class TreeModelData(splits: Seq[Stump.TreeSplit],
+    rootN: Long, rootPos: Long, binEdges: Option[Seq[Seq[Double]]])
 
 object GraftTree extends MLReadable[GraftTree] {
-
-  private[feature] def paramsData(
-      p: GraftTreeParams with Params): TreeParamsData =
-    TreeParamsData(p.uid, p.get(p.maxDepth), p.get(p.binWidth),
-      p.get(p.featuresCol), p.get(p.labelCol), p.get(p.predictionCol),
-      p.get(p.probabilityCol),
-      p.get(p.featureCols).map(_.toSeq), p.get(p.binWidths).map(_.toSeq),
-      p.get(p.lossType), p.get(p.numBins))
-
-  private[feature] def restoreParams(t: GraftTreeParams,
-      d: TreeParamsData): Unit = {
-    d.maxDepth.foreach(v => t.set(t.maxDepth, v))
-    d.binWidth.foreach(v => t.set(t.binWidth, v))
-    d.featuresCol.foreach(v => t.set(t.featuresCol, v))
-    d.labelCol.foreach(v => t.set(t.labelCol, v))
-    d.predictionCol.foreach(v => t.set(t.predictionCol, v))
-    d.probabilityCol.foreach(v => t.set(t.probabilityCol, v))
-    d.featureCols.foreach(v => t.set(t.featureCols, v.toArray))
-    d.binWidths.foreach(v => t.set(t.binWidths, v.toArray))
-    d.lossType.foreach(v => t.set(t.lossType, v))
-    d.numBins.foreach(v => t.set(t.numBins, v))
-  }
-
-  /** Pre-r15 artifacts lack the lossType/numBins columns (top level
-    * at $path/params, nested under `params` in $path/data) — add them
-    * as nulls before `.as[T]` (which does NOT apply Scala defaults). */
-  private[feature] def backfillParamCols(df: org.apache.spark.sql.DataFrame,
-      nested: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    if (nested) {
-      val pt = df.schema("params").dataType.asInstanceOf[StructType]
-      if (pt.fieldNames.contains("lossType")) df
-      else df.withColumn("params", expr(
-        "struct(params.*, CAST(NULL AS STRING) AS lossType, " +
-          "CAST(NULL AS INT) AS numBins)"))
-    } else {
-      if (df.schema.fieldNames.contains("lossType")) df
-      else df.withColumn("lossType",
-          org.apache.spark.sql.functions.lit(null).cast("string"))
-        .withColumn("numBins",
-          org.apache.spark.sql.functions.lit(null).cast("int"))
-    }
-  }
-
-  private[feature] class Writer(instance: GraftTree) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(paramsData(instance)).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
-  }
-
-  private class Reader extends MLReader[GraftTree] {
-    override def load(path: String): GraftTree = {
-      val spark = sparkSession
-      import spark.implicits._
-      val d = backfillParamCols(spark.read.parquet(s"$path/params"),
-        nested = false).as[TreeParamsData].head()
-      val e = new GraftTree(d.uid)
-      restoreParams(e, d)
-      e
-    }
-  }
-
-  override def read: MLReader[GraftTree] = new Reader
+  override def read: MLReader[GraftTree] = new StageIO.EstimatorReader(new GraftTree(_))
   override def load(path: String): GraftTree = super.load(path)
 }
 
 object GraftTreeModel extends MLReadable[GraftTreeModel] {
 
-  private[feature] class Writer(instance: GraftTreeModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq(TreeModelData(GraftTree.paramsData(instance),
-          instance.splits.toSeq.map(s => TreeSplitData(s.node, s.depth,
-            s.thresholdBin, s.n, s.pos, s.nl, s.pl, s.nr, s.pr,
-            s.wgRaw, s.pgRaw, s.feature)),
-          instance.rootN, instance.rootPos,
-          if (instance.binEdges.isEmpty) None
-          else Some(instance.binEdges.toSeq.map(_.toSeq)))).toDS()
-        .repartition(1).write.mode("overwrite").parquet(s"$path/data")
-      GraftPCA.writeMetadata(path, spark, instance)
-    }
+  /** Artifacts persisted before the multi-feature round lack the nested
+    * split `feature` field, and pre-r15 ones the `binEdges` column.
+    * `.as[T]` does NOT apply Scala default values, so both are
+    * backfilled before decoding: feature = 0 (the single-feature
+    * reading) and null edges (width binning). */
+  private def withFeatureAndEdges(df: DataFrame): DataFrame = {
+    val withFeature =
+      if (df.schema("splits").dataType.asInstanceOf[ArrayType].elementType
+          .asInstanceOf[StructType].fieldNames.contains("feature")) df
+      else df.withColumn("splits", transform(col("splits"), _.withField("feature", lit(0))))
+    if (withFeature.columns.contains("binEdges")) withFeature
+    else withFeature.withColumn("binEdges", lit(null).cast("array<array<double>>"))
   }
 
-  private class Reader extends MLReader[GraftTreeModel] {
-    override def load(path: String): GraftTreeModel = {
-      val spark = sparkSession
-      import spark.implicits._
-      // artifacts persisted before the multi-feature round lack the
-      // nested `feature` field, and `.as[T]` does NOT apply Scala
-      // default values (round-14 advisory) — backfill feature = 0
-      // (the single-feature reading) before decoding; pre-r15
-      // artifacts also lack lossType/numBins/binEdges
-      var raw = spark.read.parquet(s"$path/data")
-      val elem = raw.schema("splits").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType.asInstanceOf[StructType]
-      if (!elem.fieldNames.contains("feature"))
-        raw = raw.withColumn("splits",
-          org.apache.spark.sql.functions.expr(
-            "transform(splits, s -> struct(s.node AS node, " +
-              "s.depth AS depth, s.thresholdBin AS thresholdBin, " +
-              "s.n AS n, s.pos AS pos, s.nl AS nl, s.pl AS pl, " +
-              "s.nr AS nr, s.pr AS pr, s.wgRaw AS wgRaw, " +
-              "s.pgRaw AS pgRaw, 0 AS feature))"))
-      raw = GraftTree.backfillParamCols(raw, nested = true)
-      if (!raw.schema.fieldNames.contains("binEdges"))
-        raw = raw.withColumn("binEdges",
-          org.apache.spark.sql.functions.lit(null)
-            .cast("array<array<double>>"))
-      val d = raw.as[TreeModelData].head()
-      val m = new GraftTreeModel(d.params.uid,
-        d.splits.map(s => Stump.TreeSplit(s.node, s.depth, s.thresholdBin,
-          s.n, s.pos, s.nl, s.pl, s.nr, s.pr, s.wgRaw, s.pgRaw,
-          s.feature)).toArray,
-        d.rootN, d.rootPos,
-        d.binEdges.map(_.map(_.toArray).toArray).getOrElse(Array.empty))
-      GraftTree.restoreParams(m, d.params)
-      m
-    }
-  }
-
-  override def read: MLReader[GraftTreeModel] = new Reader
+  override def read: MLReader[GraftTreeModel] =
+    new StageIO.ModelReader((uid: String, d: TreeModelData) =>
+      new GraftTreeModel(uid, d.splits.toArray, d.rootN, d.rootPos,
+        d.binEdges.map(_.map(_.toArray).toArray).getOrElse(Array.empty)),
+      fix = withFeatureAndEdges)
   override def load(path: String): GraftTreeModel = super.load(path)
 }
