@@ -233,7 +233,8 @@ object GraftIDFModel extends MLReadable[GraftIDFModel] {
       * from the very path an overwrite().save(samePath) is about to
       * clear, and without staging the delete would destroy the
       * artifact mid-save. A fresh target has no such hazard, so the
-      * common fit→save cycle pays exactly one write. */
+      * common fit→save cycle pays exactly one Spark write, the idf
+      * table's; `meta/` and `metadata/` are written on the driver. */
     override def save(path: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(sparkSession.sparkContext.hadoopConfiguration)

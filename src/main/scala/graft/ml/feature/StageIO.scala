@@ -6,6 +6,7 @@ import org.apache.spark.ml.param.{DoubleArrayParam, DoubleParam, Param, Params}
 import org.apache.spark.ml.util.{MLReader, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, struct, to_json}
+import org.apache.spark.sql.graftshim.DriverParquet
 import org.apache.spark.sql.types.StructType
 import org.json4s.{JInt, JNull, JObject, JString, jvalue2monadic}
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
@@ -21,18 +22,20 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   *  - A model's `data/` row (IDF: `meta/`) is the same fields as a
   *    `params` struct, then the stage's own payload columns.
   *
-  * A load decodes that row in one `head()` job, after Spark's own
-  * parquet schema job, and sets each present, non-null field through
-  * the param's own `jsonDecode`. An absent field leaves its param
-  * unset, so an artifact written before a param existed loads as it
-  * is; a field that names no param fails the load.
-  *
-  * Each of these rows is written from a one-row local Dataset, which
-  * is one partition: one part file per directory, no shuffle. */
+  * Save and load run on the driver, with no Spark job
+  * ([[org.apache.spark.sql.graftshim.DriverParquet]]): each row is
+  * built as a one-row local Dataset, collected without a job and
+  * written through Spark's own parquet writer, one part file per
+  * directory. A load takes the schema from the part file's footer,
+  * decodes the row into a local DataFrame and sets each present,
+  * non-null field through the param's own `jsonDecode`. An absent
+  * field leaves its param unset, so an artifact written before a param
+  * existed loads as it is; a field that names no param fails the load,
+  * and so does a directory that holds other than one row. */
 private[feature] object StageIO {
 
   /** `uid`, then one literal per explicitly-set param. */
-  private def paramsFields(stage: Params): Seq[Column] =
+  private[feature] def paramsFields(stage: Params): Seq[Column] =
     lit(stage.uid).as("uid") +: stage.params.toSeq.flatMap(p =>
       stage.get(p).map(v => lit(v).as(p.name)))
 
@@ -69,22 +72,21 @@ private[feature] object StageIO {
       "timestamp" -> JInt(System.currentTimeMillis()),
       "sparkVersion" -> JString(spark.version), "uid" -> JString(stage.uid),
       "paramMap" -> JObject(paramMap), "defaultParamMap" -> JObject())
-    import spark.implicits._
-    Seq(compact(render(doc))).toDS().write.mode("overwrite").text(s"$path/metadata")
+    DriverParquet.writeTextLine(spark, compact(render(doc)), s"$path/metadata")
   }
 
   class EstimatorWriter(stage: Params) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
-      sparkSession.createDataFrame(java.util.List.of(Row.empty), new StructType())
-        .select(paramsFields(stage): _*)
-        .write.mode("overwrite").parquet(s"$path/params")
+      DriverParquet.writeParquet(sparkSession.createDataFrame(
+        java.util.List.of(Row.empty), new StructType()).select(paramsFields(stage): _*),
+        s"$path/params")
       writeMetadata(path, sparkSession, stage)
     }
   }
 
   class EstimatorReader[T <: Params](make: String => T) extends MLReader[T] {
     override def load(path: String): T = {
-      val row = sparkSession.read.parquet(s"$path/params")
+      val row = DriverParquet.readSingleRow(sparkSession, s"$path/params")
       build(row.select(to_json(struct(row.columns.toSeq.map(row.col): _*)))
         .as(Encoders.STRING).head(), make)
     }
@@ -93,9 +95,8 @@ private[feature] object StageIO {
   class ModelWriter[P <: Product : TypeTag](stage: Params, payload: P,
       dir: String = "data") extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
-      sparkSession.createDataset(Seq(payload))(Encoders.product[P])
-        .select(struct(paramsFields(stage): _*).as("params"), col("*"))
-        .write.mode("overwrite").parquet(s"$path/$dir")
+      DriverParquet.writeParquet(sparkSession.createDataset(Seq(payload))(Encoders.product[P])
+        .select(struct(paramsFields(stage): _*).as("params"), col("*")), s"$path/$dir")
       writeMetadata(path, sparkSession, stage)
     }
   }
@@ -105,7 +106,7 @@ private[feature] object StageIO {
       dir: String = "data", fix: DataFrame => DataFrame = identity)
       extends MLReader[T] {
     override def load(path: String): T = {
-      val row = fix(sparkSession.read.parquet(s"$path/$dir"))
+      val row = fix(DriverParquet.readSingleRow(sparkSession, s"$path/$dir"))
       val payload = row.columns.toSeq.filter(_ != "params").map(row.col)
       val (json, p) = row.select(to_json(row.col("params")), struct(payload: _*))
         .as(Encoders.tuple(Encoders.STRING, Encoders.product[P])).head()

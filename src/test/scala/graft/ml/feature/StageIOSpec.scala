@@ -8,6 +8,9 @@ import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{MLReadable, MLWritable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -233,7 +236,7 @@ class StageIOSpec extends AnyFunSuite {
       e.getMessage.contains("graft.ml.feature.GraftPCA"), e.getMessage)
   }
 
-  test("save and load each run two jobs, for an estimator and for a model") {
+  test("save and load run no Spark job, for an estimator and for a model") {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
@@ -266,7 +269,90 @@ class StageIOSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     import scala.jdk.CollectionConverters._
-    assert(jobs.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size } == Map(
-      "io-est-save" -> 2, "io-est-load" -> 2, "io-model-save" -> 2, "io-model-load" -> 2))
+    assert(jobs.isEmpty, jobs.asScala.mkString(", "))
+  }
+
+  /** A model's `data/` the way Spark's parquet writer lays it out: a
+    * uuid-named part file, its `.crc` and `_SUCCESS`. */
+  private def writeWithSpark(model: GraftPCAModel, path: String): Unit = {
+    import spark.implicits._
+    spark.createDataset(Seq(ModelData(model.pc.numRows, model.pc.numCols,
+        model.pc.values, model.explainedVariance.values)))
+      .select(struct(StageIO.paramsFields(model): _*).as("params"), col("*"))
+      .write.parquet(s"$path/data")
+  }
+
+  private def pcaModel(uid: String): GraftPCAModel =
+    new GraftPCAModel(uid, new DenseMatrix(2, 1, Array(0.1 + 0.2, -1e-300)),
+      new DenseVector(Array(Double.MinPositiveValue))).setOutputCol("out\n\t").setInputCol("in")
+
+  test("an artifact written by Spark's parquet writer loads bit-identically") {
+    val dir = tmp("sparkwritten")
+    val model = pcaModel("pcaSpark")
+    writeWithSpark(model, dir)
+    val files = new java.io.File(s"$dir/data").list().toSet
+    assert(files("_SUCCESS") && files.exists(n => n.startsWith(".part-") && n.endsWith(".crc")))
+    val back = GraftPCAModel.load(dir)
+    assertSameParams(model, back)
+    assert(same(back.pc.values, model.pc.values) &&
+      same(back.explainedVariance.values, model.explainedVariance.values))
+    val est = new GraftPCA("pcaSparkEst").setK(3).setOutputCol("x\ty")
+    spark.createDataFrame(java.util.List.of(Row.empty), new StructType())
+      .select(StageIO.paramsFields(est): _*).write.parquet(s"$dir/est/params")
+    assertSameParams(est, GraftPCA.load(s"$dir/est"))
+  }
+
+  test("a driver-written data/ and metadata/ read back through spark.read") {
+    val dir = tmp("driverwritten")
+    val model = pcaModel("pcaDriver")
+    model.write.save(s"$dir/driver")
+    writeWithSpark(model, s"$dir/spark")
+    def rows(d: String) = spark.read.parquet(s"$d/data").collect().toSeq
+    assert(rows(s"$dir/driver") == rows(s"$dir/spark") && rows(s"$dir/driver").size == 1)
+    assert(spark.read.parquet(s"$dir/driver/data").schema ==
+      spark.read.parquet(s"$dir/spark/data").schema)
+    val lines = spark.read.text(s"$dir/driver/metadata").collect().map(_.getString(0))
+    assert(lines.length == 1)
+    import org.json4s.{JString, jvalue2monadic}
+    val meta = org.json4s.jackson.JsonMethods.parse(lines.head)
+    assert(meta \ "class" == JString(classOf[GraftPCAModel].getName) &&
+      meta \ "uid" == JString("pcaDriver"))
+    assert(meta \ "paramMap" \ "outputCol" == JString(model.getOutputCol))
+    for (d <- Seq("data", "metadata")) {
+      val names = new java.io.File(s"$dir/driver/$d").list().filterNot(_.startsWith("."))
+      assert(names.contains("_SUCCESS") && names.count(n =>
+        n.matches("part-00000-[0-9a-f-]{36}-c000\\..+")) == 1, names.mkString(", "))
+    }
+  }
+
+  test("a params/ or data/ directory with no data file fails the load by name") {
+    val dir = tmp("norows")
+    for (d <- Seq("est/params", "model/data")) {
+      Files.createDirectories(java.nio.file.Paths.get(s"$dir/$d"))
+      Files.createFile(java.nio.file.Paths.get(s"$dir/$d/_SUCCESS"))
+    }
+    for ((what, load) <- Seq("est/params" -> (() => GraftPCA.load(s"$dir/est")),
+        "model/data" -> (() => GraftPCAModel.load(s"$dir/model")))) {
+      val e = intercept[IllegalArgumentException](load())
+      assert(e.getMessage.contains(s"$dir/$what") &&
+        e.getMessage.contains("holds 0 rows in 0 data files"), e.getMessage)
+    }
+  }
+
+  test("a params/ or data/ directory holding two rows fails the load by name") {
+    val dir = tmp("tworows")
+    spark.sql("SELECT 'pcaTwo' AS uid, 2 AS k UNION ALL SELECT 'pcaTwo' AS uid, 3 AS k")
+      .coalesce(1).write.parquet(s"$dir/est/params")
+    val model = pcaModel("pcaTwoM")
+    writeWithSpark(model, s"$dir/model")
+    spark.read.parquet(s"$dir/model/data").repartition(1)
+      .write.mode("append").parquet(s"$dir/model/data")
+    for ((what, files, load) <- Seq(
+        ("est/params", 1, () => GraftPCA.load(s"$dir/est")),
+        ("model/data", 2, () => GraftPCAModel.load(s"$dir/model")))) {
+      val e = intercept[IllegalArgumentException](load())
+      assert(e.getMessage.contains(s"$dir/$what") &&
+        e.getMessage.contains(s"holds 2 rows in $files data files"), e.getMessage)
+    }
   }
 }
