@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Central registry for the engine's SESSION-SCOPED memo caches — the
   * deliberate materialized views over immutable fixture data
@@ -29,7 +28,7 @@ import org.apache.spark.storage.StorageLevel
   *     access flips [[touched]]; the bench uses it to detect
   *     memo-backed queries and time a COLD run (caches released,
   *     build cost included) alongside the warm protocol numbers.
-  *  3. KEY SOUNDNESS (round-15 advisory). Frame caches key on the
+  *  3. KEY SOUNDNESS (round-15 advisory). Value caches key on the
   *     SparkSession REFERENCE itself (identity semantics — collision-
   *     free by construction, unlike `System.identityHashCode`, and
   *     `sessionUUID` is private[sql] on Spark 4.1.2). Entries of
@@ -76,39 +75,13 @@ object SessionCaches {
     n
   }
 
-  /** Session-scoped cache of persisted DataFrames keyed by
-    * (session, K). Values are persisted MEMORY_AND_DISK on build and
-    * unpersisted on release; stopped-session entries evict on access. */
-  final class FrameCache[K] private[SessionCaches] () extends Releasable {
-    private val m = TrieMap.empty[(SparkSession, K), DataFrame]
-
-    def getOrElseUpdate(spark: SparkSession, key: K)(build: => DataFrame)
-        : DataFrame = {
-      touch()
-      evictStopped()
-      m.getOrElseUpdate((spark, key),
-        build.persist(StorageLevel.MEMORY_AND_DISK))
-    }
-
-    private def evictStopped(): Unit =
-      m.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-
-    override def releaseAll(): Unit = {
-      m.values.foreach { df =>
-        try df.unpersist(blocking = true)
-        catch { case _: Throwable => () } // stopped session: nothing to free
-      }
-      m.clear()
-    }
-    override def size: Int = m.size
-  }
-
-  /** Session-scoped cache whose values CARRY DataFrames but are not
-    * bare frames (e.g. tuples of persisted frames, Option[DataFrame]).
-    * The caller supplies how to persist/unpersist a value's frames via
-    * `frames`; values whose frame set is empty (e.g. `None` census
-    * entries) still evict with their session (the round-15 advisory:
-    * a vacuous `forall` must not immortalize them). */
+  /** Session-scoped cache keyed by (session, K) whose values carry
+    * DataFrames (a bare frame, a tuple of frames, Option[DataFrame]).
+    * The builder persists what it returns; `frames` lists the frames
+    * release unpersists. Stopped-session entries evict on access, and
+    * values whose frame set is empty (e.g. `None` census entries)
+    * still evict with their session (the round-15 advisory: a vacuous
+    * `forall` must not immortalize them). */
   final class ValueCache[K, V] private[SessionCaches] (frames: V => Seq[DataFrame])
       extends Releasable {
     private val m = TrieMap.empty[(SparkSession, K), V]
@@ -149,7 +122,6 @@ object SessionCaches {
     override def size: Int = m.size
   }
 
-  def frameCache[K](): FrameCache[K] = register(new FrameCache[K]())
   def valueCache[K, V](frames: V => Seq[DataFrame]): ValueCache[K, V] =
     register(new ValueCache[K, V](frames))
   def scalarCache[K, V](): ScalarCache[K, V] = register(new ScalarCache[K, V]())

@@ -5,9 +5,9 @@ import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
-import graft.operators.Gbt
+import graft.operators.{Gbt, RegTree}
 
 /** Estimator/Model API over the exact-integer gradient-boosted stumps
   * (SURVEY.md §2 D281) — protocol surface #12, completing the tree
@@ -15,11 +15,12 @@ import graft.operators.Gbt
   * fit/transform/persistence lifecycle (reference:
   * /root/reference/src/main/scala/org/apache/spark/ml/feature/RapidsPCA.scala:81-137).
   *
-  * Training is [[Gbt.fitGbt]]: T rounds of least-squares stumps on
-  * the residuals of the running per-mille-grid integer prediction,
-  * learning rate ½, every census an exact long off the same
-  * domain-bounded bin histogram (Friedman 2001; the histogram
-  * formulation is XGBoost-`hist`, arXiv:1603.02754 §3.3).
+  * Training is T rounds of least-squares stumps on the residuals of
+  * the running integer-grid prediction, learning rate ½, every census
+  * an exact long (Friedman 2001; the histogram formulation is
+  * XGBoost-`hist`, arXiv:1603.02754 §3.3): [[Gbt.fitGbt]] off one
+  * domain-bounded bin histogram for a single binary feature,
+  * [[Gbt.fitGbtMulti]] otherwise.
   *
   * Transform evaluates the additive model as a literal expression —
   * the base floor-mean plus one `when(bin <= thr, dl, dr)` term per
@@ -27,32 +28,12 @@ import graft.operators.Gbt
   * score as a [0-ish..1-ish] probability and a 0.5-threshold
   * prediction. Scoring uses the integer adjustments training
   * committed, so model output and fitted state can never disagree. */
-trait GraftGBTParams extends Params {
+trait GraftGBTParams extends TreeFamilyParams {
   final val maxIter = new IntParam(this, "maxIter",
     "boosting rounds (1 to Gbt.gbtMaxRounds): the exact-integer " +
       "residual grid supports at most 25 rounds before the worst-case " +
       "drift envelope could overflow the Long census",
     ParamValidators.inRange(1, Gbt.gbtMaxRounds))
-  final val binWidth = new DoubleParam(this, "binWidth",
-    "histogram bin width in feature units (> 0)", ParamValidators.gt(0.0))
-  final val featuresCol = new Param[String](this, "featuresCol",
-    "numeric feature column (binned by binWidth for the split search)")
-  final val featureCols = new StringArrayParam(this, "featureCols",
-    "multi-feature mode (D290): numeric feature columns each round's " +
-      "split search argmins across; overrides featuresCol when set")
-  final val binWidths = new DoubleArrayParam(this, "binWidths",
-    "per-feature histogram bin widths for featureCols (same length); " +
-      "defaults to binWidth for every feature",
-    (ws: Array[Double]) => ws.forall(_ > 0.0))
-  final val labelCol = new Param[String](this, "labelCol",
-    "label column: binary {0,1} for lossType=binary, an integer-grid " +
-      "numeric for lossType=variance")
-  final val predictionCol = new Param[String](this, "predictionCol",
-    "output prediction column name ({0,1} for binary; the rounded " +
-      "predicted label for variance)")
-  final val probabilityCol = new Param[String](this, "probabilityCol",
-    "output boosted-score column name (per-mille grid / 1000 for " +
-      "binary; the predicted label value for variance)")
   final val lossType = new Param[String](this, "lossType",
     "loss (D295): 'binary' (binary {0,1} label on the fixed per-mille " +
       "grid) or 'variance' (continuous integer-grid label, " +
@@ -67,44 +48,8 @@ trait GraftGBTParams extends Params {
       "exact-arithmetic shift (fit fails loudly if data exceeds it)",
     ParamValidators.gtEq(1))
 
-  setDefault(maxIter -> Gbt.gbtRounds, binWidth -> 100.0,
-    lossType -> "binary", labelGrid -> 100L,
-    predictionCol -> "prediction", probabilityCol -> "probability")
-
-  /** The (column, binWidth) pairs training and scoring bin by. */
-  protected def effectiveFeatures: Seq[(String, Double)] =
-    if (isSet(featureCols)) {
-      val cols = $(featureCols).toSeq
-      require(cols.nonEmpty, "featureCols must be non-empty")
-      val ws =
-        if (isSet(binWidths)) $(binWidths).toSeq
-        else Seq.fill(cols.length)($(binWidth))
-      require(ws.length == cols.length,
-        s"binWidths has ${ws.length} entries for ${cols.length} featureCols")
-      cols.zip(ws)
-    } else Seq(($(featuresCol), $(binWidth)))
-
-  protected def validateFeatures(schema: StructType): Unit =
-    effectiveFeatures.foreach { case (c, _) =>
-      require(schema.fieldNames.contains(c),
-        s"features column '$c' not in ${schema.fieldNames.mkString(",")}")
-      schema(c).dataType match {
-        case _: NumericType => ()
-        case other => throw new IllegalArgumentException(
-          s"features column '$c' must be numeric, got $other")
-      }
-    }
-
-  protected def validateAndTransformSchema(schema: StructType): StructType = {
-    validateFeatures(schema)
-    Seq($(predictionCol), $(probabilityCol)).foreach { c =>
-      require(!schema.fieldNames.contains(c),
-        s"output column '$c' already exists")
-    }
-    StructType(schema.fields ++ Seq(
-      StructField($(probabilityCol), DoubleType, nullable = false),
-      StructField($(predictionCol), LongType, nullable = false)))
-  }
+  setDefault(maxIter -> Gbt.gbtRounds, lossType -> "binary",
+    labelGrid -> 100L)
 }
 
 class GraftGBT(override val uid: String)
@@ -114,12 +59,7 @@ class GraftGBT(override val uid: String)
 
   def setMaxIter(value: Int): this.type = set(maxIter, value)
   def setBinWidth(value: Double): this.type = set(binWidth, value)
-  def setFeaturesCol(value: String): this.type = set(featuresCol, value)
-  def setFeatureCols(value: Array[String]): this.type = set(featureCols, value)
-  def setBinWidths(value: Array[Double]): this.type = set(binWidths, value)
   def setLabelCol(value: String): this.type = set(labelCol, value)
-  def setPredictionCol(value: String): this.type = set(predictionCol, value)
-  def setProbabilityCol(value: String): this.type = set(probabilityCol, value)
   def setLossType(value: String): this.type = set(lossType, value)
   def setLabelGrid(value: Long): this.type = set(labelGrid, value)
   def setLabelBound(value: Long): this.type = set(labelBound, value)
@@ -130,40 +70,36 @@ class GraftGBT(override val uid: String)
       s"label column '${$(labelCol)}' not in ${dataset.schema.fieldNames.mkString(",")}")
     import graft.CacheScope.ScopedPersist
     val feats = effectiveFeatures
+    val label = col($(labelCol)).cast("long")
+    val variance = $(lossType) == "variance"
     val (f0, rounds) =
-      if ($(lossType) == "variance") {
-        // D295: regression boosting on the declared integer grid
-        require(isSet(labelBound),
-          "lossType=variance needs labelBound (the declared bound on " +
-            "|label * labelGrid| that sizes the exact-arithmetic shift)")
-        val design = dataset.toDF().select(
-          feats.zipWithIndex.map { case ((c, w), i) =>
-            floor(col(c).cast("double") / w).cast("long").as(s"__f$i")
-          } :+ (col($(labelCol)).cast("long") * lit($(labelGrid)))
-            .as("yg"): _*)
-          .scopedPersist()
-        graft.operators.RegTree.fitRegGbtMulti(design,
-          feats.indices.map(i => s"__f$i"), $(maxIter), $(labelBound))
-      } else if (feats.length == 1) {
-        // single feature: one domain-bounded histogram serves every
-        // round (per-bin F is well-defined) — cheaper than re-censusing
-        val hist = dataset.toDF().select(
-            floor(col(feats.head._1).cast("double") / feats.head._2)
-              .cast("long").as("bin"),
-            col($(labelCol)).cast("long").as("y"))
+      if (!variance && feats.length == 1) {
+        // single binary feature: one domain-bounded histogram serves
+        // every round (per-bin F is well-defined) — cheaper than
+        // re-censusing
+        val hist = dataset.toDF()
+          .select(widthBin(feats.head._1, feats.head._2).as("bin"),
+            label.as("y"))
           .groupBy(col("bin"))
           .agg(count(lit(1)).as("cnt"), sum(col("y")).as("p"))
         Gbt.fitGbt(hist.scopedPersist(), $(maxIter))
       } else {
-        // multi-feature (D290): per-round re-census, argmin across
-        // the d residual histograms
+        // per-round re-census, argmin across the d residual histograms,
+        // on the per-mille grid (binary) or the declared label grid
+        // (variance, D295)
+        require(!variance || isSet(labelBound),
+          "lossType=variance needs labelBound (the declared bound on " +
+            "|label * labelGrid| that sizes the exact-arithmetic shift)")
+        val (grid, range, shift) =
+          if (variance) ($(labelGrid), (-$(labelBound), $(labelBound)),
+            RegTree.regShiftFor($(labelBound), $(maxIter)))
+          else (1000L, Gbt.binaryGrid, Gbt.shiftFor($(maxIter)))
         val design = dataset.toDF().select(
           feats.zipWithIndex.map { case ((c, w), i) =>
-            floor(col(c).cast("double") / w).cast("long").as(s"__f$i")
-          } :+ col($(labelCol)).cast("long").as("y"): _*)
+            widthBin(c, w).as(s"__f$i") } :+ (label * lit(grid)).as("yg"): _*)
           .scopedPersist()
         Gbt.fitGbtMulti(design, feats.indices.map(i => s"__f$i"),
-          $(maxIter))
+          $(maxIter), range, shift)
       }
     copyValues(new GraftGBTModel(uid, f0, rounds.toArray).setParent(this))
   }
@@ -182,12 +118,6 @@ class GraftGBTModel private[feature] (override val uid: String,
     val baseF: Long, val rounds: Array[Gbt.GbtRound])
     extends Model[GraftGBTModel] with GraftGBTParams with MLWritable {
 
-  def setFeaturesCol(value: String): this.type = set(featuresCol, value)
-  def setFeatureCols(value: Array[String]): this.type = set(featureCols, value)
-  def setBinWidths(value: Array[Double]): this.type = set(binWidths, value)
-  def setPredictionCol(value: String): this.type = set(predictionCol, value)
-  def setProbabilityCol(value: String): this.type = set(probabilityCol, value)
-
   /** The additive per-mille score as a literal expression chain over
     * the per-feature bin columns. */
   private def scoreCol(bins: Seq[Column]): Column =
@@ -199,9 +129,7 @@ class GraftGBTModel private[feature] (override val uid: String,
 
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
-    val bins = effectiveFeatures.map { case (c, w) =>
-      floor(col(c).cast("double") / w).cast("long") }
-    val f = scoreCol(bins)
+    val f = scoreCol(effectiveFeatures.map { case (c, w) => widthBin(c, w) })
     if ($(lossType) == "variance") {
       // the additive score lives on the labelGrid: surface the
       // predicted label value and its half-up rounding

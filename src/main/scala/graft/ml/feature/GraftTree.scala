@@ -5,9 +5,9 @@ import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
-import graft.operators.Stump
+import graft.operators.{RegTree, Stump}
 
 /** Estimator/Model API over the depth-k histogram decision tree
   * (SURVEY.md §2 D279) — protocol surface #11, generalizing the
@@ -23,36 +23,19 @@ import graft.operators.Stump
   * node's best weighted-Gini split, and the ≤ 2^depth winners extend
   * the tree — the XGBoost-`hist` architecture (arXiv:1603.02754
   * §3.3): distributed histograms, centralized split decisions, no
-  * per-row sort, per-level cost bounded by the value domain.
+  * per-row sort, per-level cost bounded by the value domain. Several
+  * features (or `numBins`) train through [[Stump.fitTreeSplitsMulti]],
+  * and lossType=variance through [[RegTree.fitForestSplits]] with one
+  * all-rows bag.
   *
   * Transform routes each row to its leaf with the same literal
   * when-tree (pure codegen, no shuffle, no join) and scores it with
   * the leaf's exact positive rate — left child = pl/nl, right child =
   * pr/nr off the parent's recorded split census, so model scoring and
   * the fitted censuses can never disagree. */
-trait GraftTreeParams extends Params {
+trait GraftTreeParams extends TreeFamilyParams {
   final val maxDepth = new IntParam(this, "maxDepth",
     "tree depth: number of split levels (>= 1)", ParamValidators.gtEq(1))
-  final val binWidth = new DoubleParam(this, "binWidth",
-    "histogram bin width in feature units (> 0)", ParamValidators.gt(0.0))
-  final val featuresCol = new Param[String](this, "featuresCol",
-    "numeric feature column (binned by binWidth for the split search)")
-  final val featureCols = new StringArrayParam(this, "featureCols",
-    "multi-feature mode (D289): numeric feature columns the split " +
-      "search argmins across; overrides featuresCol when set")
-  final val binWidths = new DoubleArrayParam(this, "binWidths",
-    "per-feature histogram bin widths for featureCols (same length); " +
-      "defaults to binWidth for every feature",
-    (ws: Array[Double]) => ws.forall(_ > 0.0))
-  final val labelCol = new Param[String](this, "labelCol",
-    "label column: binary {0,1} for lossType=gini, an integer-grid " +
-      "numeric for lossType=variance")
-  final val predictionCol = new Param[String](this, "predictionCol",
-    "output prediction column name ({0,1} for gini; the rounded leaf " +
-      "mean for variance)")
-  final val probabilityCol = new Param[String](this, "probabilityCol",
-    "output leaf-value column name (positive rate for gini; exact " +
-      "leaf mean for variance)")
   final val lossType = new Param[String](this, "lossType",
     "split criterion (D294): 'gini' (binary label, weighted-Gini " +
       "splits) or 'variance' (integer-grid label, squared-error splits)",
@@ -63,45 +46,15 @@ trait GraftTreeParams extends Params {
       "binWidth/binWidths); the learned edges persist in the model so " +
       "scoring bins identically", ParamValidators.gtEq(2))
 
-  setDefault(maxDepth -> 3, binWidth -> 100.0, lossType -> "gini",
-    predictionCol -> "prediction", probabilityCol -> "probability")
+  setDefault(maxDepth -> 3, lossType -> "gini")
 
-  /** The (column, binWidth) pairs training and scoring bin by:
-    * featureCols×binWidths in multi-feature mode, the single
-    * featuresCol×binWidth otherwise. */
-  protected def effectiveFeatures: Seq[(String, Double)] =
-    if (isSet(featureCols)) {
-      val cols = $(featureCols).toSeq
-      require(cols.nonEmpty, "featureCols must be non-empty")
-      val ws =
-        if (isSet(binWidths)) $(binWidths).toSeq
-        else Seq.fill(cols.length)($(binWidth))
-      require(ws.length == cols.length,
-        s"binWidths has ${ws.length} entries for ${cols.length} featureCols")
-      cols.zip(ws)
-    } else Seq(($(featuresCol), $(binWidth)))
-
-  protected def validateFeatures(schema: StructType): Unit =
-    effectiveFeatures.foreach { case (c, _) =>
-      require(schema.fieldNames.contains(c),
-        s"features column '$c' not in ${schema.fieldNames.mkString(",")}")
-      schema(c).dataType match {
-        case _: NumericType => ()
-        case other => throw new IllegalArgumentException(
-          s"features column '$c' must be numeric, got $other")
-      }
-    }
-
-  protected def validateAndTransformSchema(schema: StructType): StructType = {
-    validateFeatures(schema)
-    Seq($(predictionCol), $(probabilityCol)).foreach { c =>
-      require(!schema.fieldNames.contains(c),
-        s"output column '$c' already exists")
-    }
-    StructType(schema.fields ++ Seq(
-      StructField($(probabilityCol), DoubleType, nullable = false),
-      StructField($(predictionCol), LongType, nullable = false)))
-  }
+  /** Feature i's bin column: by its learned quantile edges when fit
+    * with `numBins`, by its fixed width otherwise. */
+  protected def binCol(feats: Seq[(String, Double)],
+      edges: Array[Array[Double]], i: Int): Column =
+    if (edges.nonEmpty)
+      RegTree.quantileBin(col(feats(i)._1).cast("double"), edges(i).toSeq)
+    else widthBin(feats(i)._1, feats(i)._2)
 }
 
 class GraftTree(override val uid: String)
@@ -111,12 +64,7 @@ class GraftTree(override val uid: String)
 
   def setMaxDepth(value: Int): this.type = set(maxDepth, value)
   def setBinWidth(value: Double): this.type = set(binWidth, value)
-  def setFeaturesCol(value: String): this.type = set(featuresCol, value)
-  def setFeatureCols(value: Array[String]): this.type = set(featureCols, value)
-  def setBinWidths(value: Array[Double]): this.type = set(binWidths, value)
   def setLabelCol(value: String): this.type = set(labelCol, value)
-  def setPredictionCol(value: String): this.type = set(predictionCol, value)
-  def setProbabilityCol(value: String): this.type = set(probabilityCol, value)
   def setLossType(value: String): this.type = set(lossType, value)
   def setNumBins(value: Int): this.type = set(numBins, value)
 
@@ -136,7 +84,7 @@ class GraftTree(override val uid: String)
         (if (mm.isNullAt(2 * i)) 0.0 else mm.getDouble(2 * i),
           if (mm.isNullAt(2 * i + 1)) 0.0 else mm.getDouble(2 * i + 1))
       val width = math.max((mx - mn) / 1024.0, java.lang.Double.MIN_NORMAL)
-      graft.operators.RegTree.quantileEdges(
+      RegTree.quantileEdges(
         df.select(col(feats(i)).cast("double").as("v")), b, width).toArray
     }.toArray
   }
@@ -150,64 +98,43 @@ class GraftTree(override val uid: String)
     val edges: Array[Array[Double]] =
       if (isSet(numBins)) learnEdges(dataset.toDF(), feats.map(_._1))
       else Array.empty
-    def binCol(i: Int): Column =
-      if (edges.nonEmpty)
-        graft.operators.RegTree.quantileBin(
-          col(feats(i)._1).cast("double"), edges(i).toSeq)
-      else floor(col(feats(i)._1).cast("double") / feats(i)._2).cast("long")
+    val label = col($(labelCol)).cast("long")
     val (splits, rootCensus) =
-      if ($(lossType) == "variance") {
-        // D294: squared-error splits over the (possibly quantile-)
-        // binned design; TreeSplit's pos/pl/pr fields carry Σy, so
-        // leaf values are exact means through the same model shape
-        val design = dataset.toDF().select(
-          feats.indices.map(i => binCol(i).as(s"__f$i")) :+
-            col($(labelCol)).cast("long").as("y"): _*)
-          .scopedPersist()
-        val sp = graft.operators.RegTree.fitRegTreeSplitsMulti(design,
-          feats.indices.map(i => s"__f$i"), $(maxDepth))
-        val census = () => {
-          val t = design.agg(count(lit(1)), sum(col("y"))).head()
-          (t.getLong(0), if (t.isNullAt(1)) 0L else t.getLong(1))
-        }
-        (sp, census)
-      } else if (feats.length == 1 && edges.isEmpty) {
-        // single feature: the domain-bounded histogram is computed
+      if ($(lossType) != "variance" && feats.length == 1 && edges.isEmpty) {
+        // single Gini feature: the domain-bounded histogram is computed
         // ONCE and every level re-routes it — strictly cheaper than
         // the multi-feature per-level re-census
-        val hist = dataset.toDF().select(
-            floor(col(feats.head._1).cast("double") / feats.head._2)
-              .cast("long").as("bin"),
-            col($(labelCol)).cast("long").as("y"))
+        val hist = dataset.toDF()
+          .select(widthBin(feats.head._1, feats.head._2).as("bin"),
+            label.as("y"))
           .groupBy(col("bin"))
           .agg(count(lit(1)).as("cnt"), sum(col("y")).as("p"))
           .scopedPersist()
-        val sp = Stump.fitTreeSplits(hist, $(maxDepth))
-        val census = () => {
-          val t = hist.agg(sum(col("cnt")), sum(col("p"))).head()
-          (if (t.isNullAt(0)) 0L else t.getLong(0),
-            if (t.isNullAt(1)) 0L else t.getLong(1))
-        }
-        (sp, census)
+        (Stump.fitTreeSplits(hist, $(maxDepth)),
+          () => hist.agg(sum(col("cnt")), sum(col("p"))))
       } else {
-        // multi-feature (D289): per-level re-census, argmin across
-        // the d feature histograms
-        val design = dataset.toDF().select(
-          feats.indices.map(i => binCol(i).as(s"__f$i")) :+
-            col($(labelCol)).cast("long").as("y"): _*)
+        // per-level re-census, argmin across the d feature histograms
+        // (D289); variance (D294) splits on squared error, and
+        // TreeSplit's pos/pl/pr then carry Σy, so leaf values are exact
+        // means through the same model shape
+        val design = dataset.toDF().select(feats.indices.map(i =>
+            binCol(feats, edges, i).as(s"__f$i")) :+ label.as("y"): _*)
           .scopedPersist()
-        val sp = Stump.fitTreeSplitsMulti(design,
-          feats.indices.map(i => s"__f$i"), $(maxDepth))
-        val census = () => {
-          val t = design.agg(count(lit(1)), sum(col("y"))).head()
-          (t.getLong(0), if (t.isNullAt(1)) 0L else t.getLong(1))
-        }
-        (sp, census)
+        val cols = feats.indices.map(i => s"__f$i")
+        val sp =
+          if ($(lossType) == "variance")
+            RegTree.fitForestSplits(design, Seq((lit(true), cols)),
+              $(maxDepth)).head
+          else Stump.fitTreeSplitsMulti(design, cols, $(maxDepth))
+        (sp, () => design.agg(count(lit(1)), sum(col("y"))))
       }
     // root census even when the root is pure (no split to read it off)
     val (rootN, rootPos) = splits.headOption match {
       case Some(r) if r.node.isEmpty => (r.n, r.pos)
-      case _ => rootCensus()
+      case _ =>
+        val t = rootCensus().head()
+        (if (t.isNullAt(0)) 0L else t.getLong(0),
+          if (t.isNullAt(1)) 0L else t.getLong(1))
     }
     copyValues(new GraftTreeModel(uid, splits.toArray, rootN, rootPos,
       edges).setParent(this))
@@ -231,12 +158,6 @@ class GraftTreeModel private[feature] (override val uid: String,
     val splits: Array[Stump.TreeSplit], val rootN: Long, val rootPos: Long,
     val binEdges: Array[Array[Double]] = Array.empty)
     extends Model[GraftTreeModel] with GraftTreeParams with MLWritable {
-
-  def setFeaturesCol(value: String): this.type = set(featuresCol, value)
-  def setFeatureCols(value: Array[String]): this.type = set(featureCols, value)
-  def setBinWidths(value: Array[Double]): this.type = set(binWidths, value)
-  def setPredictionCol(value: String): this.type = set(predictionCol, value)
-  def setProbabilityCol(value: String): this.type = set(probabilityCol, value)
 
   private lazy val byNode: Map[String, Stump.TreeSplit] =
     splits.map(s => s.node -> s).toMap
@@ -267,13 +188,7 @@ class GraftTreeModel private[feature] (override val uid: String,
   override def transform(dataset: Dataset[_]): DataFrame = {
     transformSchema(dataset.schema, logging = true)
     val feats = effectiveFeatures
-    val bins = feats.indices.map { i =>
-      if (binEdges.nonEmpty)
-        graft.operators.RegTree.quantileBin(
-          col(feats(i)._1).cast("double"), binEdges(i).toSeq)
-      else floor(col(feats(i)._1).cast("double") / feats(i)._2).cast("long")
-    }
-    val p = probCol(bins)
+    val p = probCol(feats.indices.map(binCol(feats, binEdges, _)))
     val pred =
       if ($(lossType) == "variance") floor(p + lit(0.5)).cast("long")
       else (p >= lit(0.5)).cast("long")

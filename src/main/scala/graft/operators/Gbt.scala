@@ -50,47 +50,47 @@ object Gbt {
     * nonnegative-division margin, [[shiftFor]]). NOTE this is not by
     * itself a Long-overflow guarantee for the squared-residual census:
     * at the 25-round worst-case drift (~5.0e7) each row's rr² can
-    * reach ~2.5e15, so ~3.6k rows would already saturate Long.MaxValue
-    * (round-14 advisory — the old comment claimed int-row-count
-    * safety). The ROW-COUNT-AWARE envelope is enforced at fit time by
-    * [[requireSseEnvelope]]: at the default 3 rounds the worst-case
-    * |residual| is ≤ 8750, admitting ~1.2e11 rows — any realistic
-    * corpus — and the admissible row count shrinks as 1.5^-2T. */
+    * reach ~2.5e15, so ~3.6k rows would already saturate Long.MaxValue.
+    * The ROW-COUNT-AWARE envelope is enforced at fit time by
+    * [[requireSseEnvelope]] over [[residualBound]]: at the default 3
+    * rounds the worst-case |residual| is ≤ 9750 on the per-mille grid,
+    * admitting ~9.5e10 rows — any realistic corpus — and the
+    * admissible row count shrinks as 1.5^-2T. */
   val gbtMaxRounds = 25
 
-  /** Fail-fast guard that the exact-integer Σrr² census cannot wrap
-    * Long at this (row count, rounds) pair — a wrapped (non-ANSI) sum
-    * would silently mis-select splits, unlike the loud drift require
-    * (round-14 advisory). Worst-case |F| drift after T ½-rate rounds
-    * is < 1000 + 2000·1.5^T (each round's adjustment is bounded by
-    * half the residual bound), so |rr| = |y·1000 − F| < 2000·1.5^T +
-    * 3000. */
-  private[graft] def requireSseEnvelope(n: Long, rounds: Int): Unit = {
-    val rrBound = 3000.0 + 2000.0 * math.pow(1.5, rounds)
-    require(n.toDouble * rrBound * rrBound < Long.MaxValue.toDouble * 0.98,
-      s"exact-integer SSE census could overflow Long: $n rows x " +
-        s"$rounds rounds (worst-case |residual| ~ ${rrBound.toLong}) — " +
-        "reduce the round count")
-  }
+  /** Worst-case |yg − F| after `rounds` ½-rate rounds on a label grid
+    * bounded by `gridBound`: each round's adjustment is at most half
+    * the residual bound, so |F_T| < gridBound·(1 + 2·1.5^T) and
+    * |yg − F| < gridBound·(2 + 2·1.5^T); one more gridBound of margin
+    * (3000 + 2000·1.5^T on the per-mille grid). */
+  private[operators] def residualBound(gridBound: Long, rounds: Int): Double =
+    gridBound.toDouble * (3.0 + 2.0 * math.pow(1.5, rounds))
 
-  /** Round-count-scaled shift (round-13 advisory: the fixed 8000 was
-    * sized for 3 rounds; a user-set round count past ~5 could trip the
-    * drift require even though the arithmetic has headroom). The leaf
-    * math is shift-INVARIANT for any even shift large enough —
+  /** Fail-fast guard that an exact-integer Σ(value²) census over `n`
+    * rows with |value| ≤ `bound` cannot wrap Long — a wrapped
+    * (non-ANSI) sum would silently mis-select splits. */
+  private[operators] def requireSseEnvelope(n: Long, bound: Double): Unit =
+    require(n.toDouble * bound * bound < Long.MaxValue.toDouble * 0.98,
+      s"exact-integer SSE census could overflow Long: $n rows with " +
+        s"worst-case |value| ~ ${bound.toLong} — reduce the round count " +
+        "or the label bound")
+
+  /** Round-count-scaled shift for the per-mille grid. The leaf math is
+    * shift-INVARIANT for any even shift large enough —
     * (sr + n·S)/n − S = floor(sr/n) and, for even S,
     * (v + S)/2 − S/2 = floor(v/2) — so growing S with the worst-case
-    * drift bound |F_T| ≤ 2000·1.5^T − 1000 changes no fitted value;
-    * ≤ 3 rounds keep the historical 8000 (p21's oracle text). */
+    * drift bound changes no fitted value; ≤ 3 rounds keep the
+    * historical 8000 (p21's and p23's oracle text). */
   def shiftFor(rounds: Int): Long = {
     require(rounds <= gbtMaxRounds,
       s"boosting rounds $rounds exceed the exact-integer envelope " +
         s"($gbtMaxRounds): the squared-residual census could overflow Long")
-    if (rounds <= 3) gbtShift
-    else {
-      val bound = 1000.0 + 2000.0 * math.pow(1.5, rounds)
-      (math.ceil(bound / 2.0).toLong + 1L) * 2L // even, with margin
-    }
+    if (rounds <= 3) gbtShift else RegTree.regShiftFor(1000L, rounds)
   }
+
+  /** The binary label's range on the per-mille grid: yg = 1000·y for
+    * y ∈ {0, 1}. */
+  private[graft] val binaryGrid = (0L, 1000L)
 
   private def d(x: String) = s"CAST($x AS DOUBLE)"
 
@@ -148,7 +148,7 @@ object Gbt {
     val nAll = t0.getLong(0)
     val posAll = t0.getLong(1)
     require(nAll > 0, "empty histogram")
-    requireSseEnvelope(nAll, rounds)
+    requireSseEnvelope(nAll, residualBound(1000L, rounds))
     val f0 = posAll * 1000L / nAll
     var decisions = Vector.empty[(Long, Long, Long)] // (thr, dl, dr)
     var out = Vector.empty[GbtRound]
@@ -220,56 +220,70 @@ object Gbt {
     (f0, out)
   }
 
-  /** D290: multi-feature gradient-boosted stumps — [[fitGbt]]'s split
-    * search generalized to argmin over d per-feature residual
-    * histograms per round (the full XGBoost-`hist` round,
-    * arXiv:1603.02754 §3.3): the residual grid stays exact integers
-    * (rr = y·1000 − F per row, Σrr and Σrr² exact longs per (feature,
-    * bin) cell), each round is ONE routed pass over the data
-    * (posexplode over the binned features, partial-aggregated to a
-    * domain-bounded histogram), and the winner is chosen by the
-    * shared-IEEE SSE criterion with tie order sse → feature → bin.
-    * Unlike the single-feature form, the per-row F depends on earlier
-    * rounds' features, so each round must re-census the rows — the
-    * cost model every hist GBT pays. */
-  private[graft] def fitGbtMulti(design: DataFrame,
-      featureCols: Seq[String], rounds: Int): (Long, Seq[GbtRound]) = {
+  /** D290/D295: multi-feature gradient-boosted stumps on an integer
+    * label grid — [[fitGbt]]'s split search generalized to argmin over
+    * d per-feature residual histograms per round (the full
+    * XGBoost-`hist` round, arXiv:1603.02754 §3.3). The one boosting
+    * loop of both losses: binary callers pass yg = 1000·y with
+    * [[binaryGrid]] and [[shiftFor]]; variance callers pass their
+    * integer-grid label with (−bound, bound) and
+    * [[RegTree.regShiftFor]]. The declared `ygRange` sizes the
+    * Long-overflow envelope and is checked in the preflight aggregate,
+    * so a label off its grid fails by name instead of fitting.
+    *
+    * Per round the residual rr = yg − F is censused exactly per
+    * (feature, bin) in ONE routed pass (posexplode over the binned
+    * features, partial-aggregated to a domain-bounded histogram), the
+    * winner is chosen by the shared-IEEE SSE criterion with tie order
+    * sse → feature → bin, and leaf values are shifted floor-division
+    * means halved by the same even-shift rule. The per-row F depends
+    * on earlier rounds' features, so each round re-censuses the rows —
+    * the cost model every hist GBT pays. Returns (f0, rounds) with f0
+    * the global floor-mean base prediction; a design with no valid
+    * split (one row, one bin per feature) fits no rounds. */
+  private[graft] def fitGbtMulti(design: DataFrame, featureCols: Seq[String],
+      rounds: Int, ygRange: (Long, Long), shift: Long): (Long, Seq[GbtRound]) = {
     import design.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     require(featureCols.nonEmpty, "need at least one feature column")
-    val S = shiftFor(rounds)
-    // null-bin fence (they'd census LEFT in the cumulative window but
-    // route RIGHT at scoring — round-14 advisory) + totals in ONE
-    // aggregate (round-15: the separate isEmpty pre-check was a full
-    // pass)
-    val t0 = design.agg(count(lit(1)), sum($"y"),
-      count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1))).head()
-    require(t0.getLong(2) == 0L,
+    val (lo, hi) = ygRange
+    val S = shift
+    // null fences, totals and the label range in ONE aggregate. Null
+    // bins would census LEFT in the cumulative window but route RIGHT
+    // at scoring.
+    val t0 = design.agg(count(lit(1)), sum($"yg"), min($"yg"), max($"yg"),
+      count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1)),
+      count(when($"yg".isNull, 1))).head()
+    require(t0.getLong(4) == 0L,
       "null feature bins in the GBT design: feature columns must be " +
         "non-null (filter or impute before fitting)")
+    require(t0.getLong(5) == 0L,
+      "null labels in the GBT design: the label must be non-null")
     val nAll = t0.getLong(0)
     require(nAll > 0, "empty design")
-    requireSseEnvelope(nAll, rounds)
-    val posAll = t0.getLong(1)
-    val f0 = posAll * 1000L / nAll
+    require(t0.getLong(2) >= lo && t0.getLong(3) <= hi,
+      s"label grid yg spans [${t0.getLong(2)}, ${t0.getLong(3)}], outside " +
+        s"the declared range [$lo, $hi]")
+    requireSseEnvelope(nAll,
+      residualBound(math.max(math.abs(lo), math.abs(hi)), rounds))
+    val f0 = Math.floorDiv(t0.getLong(1), nAll)
+    def prediction(decisions: Seq[(Int, Long, Long, Long)]): Column =
+      decisions.foldLeft(lit(f0)) { case (f, (ft, thr, dl, dr)) =>
+        f + when(col(featureCols(ft)) <= lit(thr), lit(dl)).otherwise(lit(dr))
+      }
     var decisions = Vector.empty[(Int, Long, Long, Long)] // (ft, thr, dl, dr)
     var out = Vector.empty[GbtRound]
-    // each round's collect closes the previous round (its census Σrr²
-    // IS the previous round's post-update SSE); only the last round
-    // pays a dedicated SSE pass (round-15)
+    // round t's census already sums rr² under the CURRENT model —
+    // exactly round t-1's post-update SSE — so each round's collect
+    // closes the previous round and only the last pays an SSE pass
     var pending: Option[GbtRound] = None
     var t = 1
     var open = true
     while (t <= rounds && open) {
-      val fCol: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (ft, thr, dl, dr)) =>
-          f + when(col(featureCols(ft)) <= lit(thr), lit(dl))
-            .otherwise(lit(dr))
-      }
-      // exact per-row residual on the per-mille grid, censused per
-      // (feature, bin); cached: totals + candidates both read it
-      val hist = design.withColumn("F", fCol)
-        .withColumn("rr", $"y" * 1000L - $"F")
+      // exact per-row residual, censused per (feature, bin); cached:
+      // totals + candidates both read it
+      val hist = design.withColumn("F", prediction(decisions))
+        .withColumn("rr", $"yg" - $"F")
         .select($"rr", posexplode(array(featureCols.map(col): _*))
           .as(Seq("feature", "bin")))
         .groupBy($"feature", $"bin")
@@ -299,11 +313,14 @@ object Gbt {
         val (ft, thr, nl, srl, nr, srR) = (best.getInt(0), best.getLong(1),
           best.getLong(2), best.getLong(3), best.getLong(4),
           best.getLong(5))
+        // shifted nonnegative floor-division (truncation == floor here;
+        // a negative numerator means the drift bound was violated — fail
+        // loudly, never divide wrong)
         require(srl + nl * S >= 0 && srR + nr * S >= 0,
           s"residual drift exceeded the ±$S shift at round $t")
         val vl = (srl + nl * S) / nl - S
         val vr = (srR + nr * S) / nr - S
-        val dl = (vl + S) / 2L - S / 2L
+        val dl = (vl + S) / 2L - S / 2L // = floor(vl / 2), both engines
         val dr = (vr + S) / 2L - S / 2L
         decisions :+= ((ft, thr, dl, dr))
         pending = Some(GbtRound(t, thr, nl, nr, vl, vr, -1L, feature = ft))
@@ -311,14 +328,8 @@ object Gbt {
       }
     }
     pending.foreach { pr =>
-      val fAfter: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (ff, th, l, r)) =>
-          f + when(col(featureCols(ff)) <= lit(th), lit(l))
-            .otherwise(lit(r))
-      }
-      // exact integer SSE: y ∈ {0,1} makes (1000y − F)² the census
-      val sseAfter = design.withColumn("F", fAfter)
-        .agg(sum(($"y" * 1000L - $"F") * ($"y" * 1000L - $"F")))
+      val sseAfter = design.withColumn("F", prediction(decisions))
+        .agg(sum(($"yg" - $"F") * ($"yg" - $"F")))
         .head().getLong(0)
       out :+= pr.copy(sseAfter = sseAfter)
     }
@@ -330,8 +341,10 @@ object Gbt {
     * column an exact integer including the chosen feature. */
   def p23GbtMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val design = Stump.multiDesign(spark, dir).scopedPersist()
-    fitGbtMulti(design, Stump.multiFeatures, gbtRounds)._2
+    val design = Stump.multiDesign(spark, dir)
+      .withColumn("yg", $"y" * 1000L).scopedPersist()
+    fitGbtMulti(design, Stump.multiFeatures, gbtRounds, binaryGrid,
+      shiftFor(gbtRounds))._2
       .map(r => (r.round.toLong, r.feature.toLong, r.thresholdBin,
         r.nLeft, r.nRight, r.vLeft, r.vRight, r.sseAfter))
       .toDF("round", "feature", "threshold_bin", "n_left", "n_right",

@@ -36,10 +36,12 @@ object Graph {
     * per query — a session-scoped materialized view over immutable
     * fixture data. Stopped-session entries evict first (same
     * identityHashCode argument as the signature cache). */
-  private val edgeCache = graft.SessionCaches.frameCache[(String, String)]()
+  private val edgeCache =
+    graft.SessionCaches.valueCache[(String, String), DataFrame](Seq(_))
   private def cachedEdges(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame =
-    edgeCache.getOrElseUpdate(spark, (dir, kind))(build)
+    edgeCache.getOrElseUpdate(spark, (dir, kind))(
+      build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Session-scoped cache of the hop-reach census (u, c1..c[[khopMax]])
     * over the strong-affinity graph — the [[edgeCache]] discipline one

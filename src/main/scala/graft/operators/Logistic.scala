@@ -115,21 +115,28 @@ object Logistic {
       .withColumn("zq", col("etaq0") +
         floor(((col("y") * lit(1000000L) - col("pq")).cast("double") *
           lit(1e12)) / col("wq").cast("double")).cast("long"))
-    // cast to decimal BEFORE multiplying: wq·x·zq reaches ~1e22, far
+    wlsSolve(scored, col("wq"))
+  }
+
+  /** The decimal-exact 2×2 weighted least-squares solve that ends
+    * every IRLS step here and in [[Poisson]]: exact-integer moments
+    * Σw, Σwx, Σwx², Σwz, Σwxz of the weight column `w` over the
+    * integer feature `x` and working response `zq` (1e-6 units), then
+    * Cramer's rule and the ppm de-scaling — the same expression
+    * structure as the oracles' stepSql. */
+  private[operators] def wlsSolve(scored: DataFrame, w: Column): Beta = {
+    // cast to decimal BEFORE multiplying: w·x·zq reaches ~1e22, far
     // past BIGINT — the whole product chain must run in decimal(38,0)
     // (HUGEINT on the DuckDB side)
-    val wqd = col("wq").cast("decimal(38,0)")
+    val wd = w.cast("decimal(38,0)")
     val row = scored.agg(
-      sum(wqd).as("sw"), sum(wqd * col("x")).as("swx"),
-      sum(wqd * col("x") * col("x")).as("swxx"),
-      sum(wqd * col("zq")).as("swz"),
-      sum(wqd * col("x") * col("zq")).as("swxz")).head()
-    val m = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-      n -> row.getDecimal(i).doubleValue
-    }.toMap
-    val det = m("sw") * m("swxx") - m("swx") * m("swx")
-    Beta((m("swz") * m("swxx") - m("swx") * m("swxz")) / det / 1e6,
-      (m("sw") * m("swxz") - m("swx") * m("swz")) / det / 1e6)
+      sum(wd), sum(wd * col("x")), sum(wd * col("x") * col("x")),
+      sum(wd * col("zq")), sum(wd * col("x") * col("zq"))).head()
+    val Seq(sw, swx, swxx, swz, swxz) =
+      (0 until 5).map(row.getDecimal(_).doubleValue)
+    val det = sw * swxx - swx * swx
+    Beta((swz * swxx - swx * swxz) / det / 1e6,
+      (sw * swxz - swx * swz) / det / 1e6)
   }
 
   /** p11: per-iteration coefficient trace (β after each superstep). */
@@ -161,7 +168,6 @@ object Logistic {
     * Scale shape: the two IRLS moment passes (p11) + ONE scoring scan
     * reduced map-side to a single confusion row. */
   def p13LogisticEval(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val d = design(spark, dir)
     val beta = fitTrace(d, lrIters).last
     val scored = d

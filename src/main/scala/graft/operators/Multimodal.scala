@@ -14,7 +14,7 @@ import graft.sources.Tables
   *
   * Scale design: payload bytes stay columnar in parquet and are never
   * shuffled — metadata extraction is a narrow map; feature extraction
-  * via [[extractFeatures]] runs `mapPartitions` so a real decoder would
+  * via [[decodePartitions]] runs `mapPartitions` so a real decoder would
   * amortize per-batch setup (model load, codec init) across a partition,
   * the same shape a Pandas-UDF/`mapInPandas` pipeline has in PySpark.
   */

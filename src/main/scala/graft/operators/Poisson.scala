@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Logistic.Beta
 import graft.sources.Tables
 
 /** D192: Poisson regression by IRLS — `orders-per-customer ~
@@ -47,8 +48,6 @@ object Poisson {
   val muqMin = 1000L
   val muqMax = 1000000000L
 
-  private[graft] case class Beta(b0: Double, b1: Double)
-
   /** (x, y) integer design: kilo-dollar account balance (floor — the
     * balance can be negative) and the customer's order count (LEFT
     * join: never-ordered customers are real y = 0 observations). */
@@ -86,18 +85,7 @@ object Poisson {
       .withColumn("zq", col("etaq") +
         floor(((col("y") * lit(1000000L) - col("muq")).cast("double") *
           lit(1e6)) / col("muq").cast("double")).cast("long"))
-    val wqd = col("muq").cast("decimal(38,0)")
-    val row = scored.agg(
-      sum(wqd).as("sw"), sum(wqd * col("x")).as("swx"),
-      sum(wqd * col("x") * col("x")).as("swxx"),
-      sum(wqd * col("zq")).as("swz"),
-      sum(wqd * col("x") * col("zq")).as("swxz")).head()
-    val m = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-      n -> row.getDecimal(i).doubleValue
-    }.toMap
-    val det = m("sw") * m("swxx") - m("swx") * m("swx")
-    Beta((m("swz") * m("swxx") - m("swx") * m("swxz")) / det / 1e6,
-      (m("sw") * m("swxz") - m("swx") * m("swz")) / det / 1e6)
+    Logistic.wlsSolve(scored, col("muq"))
   }
 
   private[graft] def fitTrace(d: DataFrame, iters: Int): List[Beta] =

@@ -10,8 +10,9 @@ import graft.sources.Tables
   * reduction) split search over automatically QUANTILE-BINNED features
   * (round-14 verdict ask #8, completing the XGBoost-`hist` story:
   * arXiv:1603.02754 §3.1 trains on quantile-sketch candidate splits,
-  * §3.3 on binned histograms; the Gini trainers in [[Stump]]/[[Gbt]]
-  * classify, these regress).
+  * §3.3 on binned histograms; the Gini trainers in [[Stump]] classify,
+  * these regress; p25 boosts through the one loop in
+  * [[Gbt.fitGbtMulti]]).
   *
   * Automatic binning: each feature's bin edges are its EXACT k/B
   * quantiles from [[AdvancedSql.exactPercentiles]] (q38's two-phase
@@ -59,92 +60,6 @@ object RegTree {
     }.otherwise(lit(edges.length.toLong))
   }
 
-  /** Fail-fast Long-overflow envelope for the Σy² census. */
-  private def requireRegEnvelope(n: Long, bound: Double): Unit =
-    require(n.toDouble * bound * bound < Long.MaxValue.toDouble * 0.98,
-      s"exact-integer SSE census could overflow Long: $n rows with " +
-        s"|label| bound $bound")
-
-  /** Depth-k multi-feature REGRESSION tree by histogram split search —
-    * [[Stump.fitTreeSplitsMulti]] with variance-reduction instead of
-    * Gini: per level, one routed pass censuses (cnt, Σy, Σy²) per
-    * (node, feature, bin); each node's split is the argmin of the
-    * shared-IEEE split SSE across all feature histograms (tie order
-    * sse → feature → bin). Returns [[Stump.TreeSplit]] rows with SUM
-    * semantics: `pos`/`pl`/`pr` carry Σy (so a leaf's fitted value is
-    * the exact mean pl/nl — the same field the Gini tree's leaf rate
-    * reads, which is what lets [[graft.ml.feature.GraftTree]] serve
-    * both losses with one model shape). `y` must be a non-null
-    * integer-grid label. */
-  private[graft] def fitRegTreeSplitsMulti(design: DataFrame,
-      featureCols: Seq[String], maxDepth: Int): Seq[Stump.TreeSplit] = {
-    import design.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    require(maxDepth >= 1, "maxDepth must be >= 1")
-    require(featureCols.nonEmpty, "need at least one feature column")
-    // the null-bin fence and the envelope scan share ONE aggregate
-    // (round-15: the separate isEmpty pre-check was a full pass)
-    val t0 = design.agg(count(lit(1)), max(abs($"y")),
-      count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1))).head()
-    require(t0.getLong(2) == 0L,
-      "null feature bins in the tree design: feature columns must be " +
-        "non-null (filter or impute before fitting)")
-    if (t0.getLong(0) == 0L) return Seq.empty
-    requireRegEnvelope(t0.getLong(0), math.max(t0.getLong(1).toDouble, 1.0))
-    var splits = Vector.empty[Stump.TreeSplit]
-    var dep = 0
-    var open = true
-    while (dep < maxDepth && open) {
-      val dec = splits.map(s => s.node -> (s.feature, s.thresholdBin)).toMap
-      def walk(path: String, lvl: Int): Column =
-        if (lvl == dep) lit(path)
-        else dec.get(path) match {
-          case None => lit(path)
-          case Some((f, t)) =>
-            when(col(featureCols(f)) <= lit(t), walk(path + "L", lvl + 1))
-              .otherwise(walk(path + "R", lvl + 1))
-        }
-      val hist = design.withColumn("node", walk("", 0))
-        .select($"node", $"y", posexplode(array(featureCols.map(col): _*))
-          .as(Seq("feature", "bin")))
-        .groupBy($"node", $"feature", $"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"y").as("sy"),
-          sum($"y" * $"y").as("syy"))
-        .scopedPersist()
-      val tot = hist.filter($"feature" === lit(0))
-        .groupBy($"node").agg(sum($"cnt").as("n"), sum($"sy").as("syt"),
-          sum($"syy").as("syyt"))
-      val w = Window.partitionBy($"node", $"feature").orderBy($"bin")
-      val aw = Window.partitionBy($"node")
-        .orderBy($"sse_raw", $"feature", $"bin")
-      val lvl = hist
-        .select($"node", $"feature", $"bin",
-          sum($"cnt").over(w).as("nl"), sum($"sy").over(w).as("syl"),
-          sum($"syy").over(w).as("syyl"))
-        .join(broadcast(tot), "node")
-        .filter($"nl" < $"n")
-        .withColumn("nr", $"n" - $"nl")
-        .withColumn("syr2", $"syt" - $"syl")
-        .withColumn("syyr", $"syyt" - $"syyl")
-        .withColumn("sse_raw", expr(regSseSql))
-        .withColumn("pg_raw", expr(parentSseSql))
-        .filter(length($"node") === dep)
-        .withColumn("rk", row_number().over(aw)).filter($"rk" === 1)
-        .select($"node", $"feature", $"bin", $"n", $"syt", $"nl", $"syl",
-          $"nr", $"syr2", $"sse_raw", $"pg_raw")
-        .collect() // ≤ 2^depth rows — the bounded split-decision table
-      if (lvl.isEmpty) open = false
-      else {
-        splits ++= lvl.map(r => Stump.TreeSplit(r.getString(0), dep,
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-          r.getLong(6), r.getLong(7), r.getLong(8), r.getDouble(9),
-          r.getDouble(10), feature = r.getInt(1)))
-        dep += 1
-      }
-    }
-    splits
-  }
-
   /** Round-count-scaled shift for an arbitrary integer label grid:
     * worst-case |F| drift after T ½-rate rounds is
     * < gridBound·(1 + 2·1.5^T) (the [[Gbt.shiftFor]] bound with 1000
@@ -152,109 +67,6 @@ object RegTree {
   private[graft] def regShiftFor(gridBound: Long, rounds: Int): Long = {
     val bound = gridBound.toDouble * (1.0 + 2.0 * math.pow(1.5, rounds))
     (math.ceil(bound / 2.0).toLong + 1L) * 2L
-  }
-
-  /** Multi-feature REGRESSION gradient-boosted stumps —
-    * [[Gbt.fitGbtMulti]] on a CONTINUOUS integer-grid label `yg`
-    * (|yg| ≤ gridBound, declared so the shift — and the oracle's
-    * replay of it — is a constant, not a data artifact): per round,
-    * residuals rr = yg − F census exactly per (feature, bin), the
-    * argmin rides the shared-IEEE SSE (tie sse → feature → bin), leaf
-    * values are shifted floor-division means, the ½ learning rate the
-    * same even-shift halving. Returns (f0, rounds) with f0 the global
-    * floor-mean base prediction. */
-  private[graft] def fitRegGbtMulti(design: DataFrame,
-      featureCols: Seq[String], rounds: Int,
-      gridBound: Long): (Long, Seq[Gbt.GbtRound]) = {
-    import design.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    require(featureCols.nonEmpty, "need at least one feature column")
-    require(gridBound >= 1L, "gridBound must be >= 1")
-    val S = regShiftFor(gridBound, rounds)
-    // null-bin fence + label scan in ONE aggregate (round-15)
-    val t0 = design.agg(count(lit(1)), sum($"yg"), max(abs($"yg")),
-      count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1))).head()
-    require(t0.getLong(3) == 0L,
-      "null feature bins in the GBT design: feature columns must be " +
-        "non-null (filter or impute before fitting)")
-    val nAll = t0.getLong(0)
-    require(nAll > 0, "empty design")
-    require(t0.getLong(2) <= gridBound,
-      s"label grid exceeds the declared bound: |yg| max ${t0.getLong(2)} " +
-        s"> $gridBound")
-    requireRegEnvelope(nAll,
-      gridBound.toDouble * (1.0 + 2.0 * math.pow(1.5, rounds)))
-    val f0 = Math.floorDiv(t0.getLong(1), nAll)
-    var decisions = Vector.empty[(Int, Long, Long, Long)] // (ft, thr, dl, dr)
-    var out = Vector.empty[Gbt.GbtRound]
-    // round t's histogram already sums rr^2 under the CURRENT model —
-    // exactly round t-1's post-update SSE — so each round's single
-    // collect also closes out the previous round, and only the LAST
-    // round pays a dedicated SSE pass (round-15: was one extra full
-    // aggregate per round)
-    var pending: Option[Gbt.GbtRound] = None
-    var t = 1
-    var open = true
-    while (t <= rounds && open) {
-      val fCol: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (ft, thr, dl, dr)) =>
-          f + when(col(featureCols(ft)) <= lit(thr), lit(dl))
-            .otherwise(lit(dr))
-      }
-      val hist = design.withColumn("F", fCol)
-        .withColumn("rr", $"yg" - $"F")
-        .select($"rr", posexplode(array(featureCols.map(col): _*))
-          .as(Seq("feature", "bin")))
-        .groupBy($"feature", $"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"rr").as("sr"),
-          sum($"rr" * $"rr").as("srr"))
-        .scopedPersist()
-      val tot = hist.filter($"feature" === lit(0))
-        .agg(sum($"cnt").as("n"), sum($"sr").as("srt"),
-          sum($"srr").as("srrt"))
-      val w = Window.partitionBy($"feature").orderBy($"bin")
-      val bestRows = hist
-        .select($"feature", $"bin", sum($"cnt").over(w).as("nl"),
-          sum($"sr").over(w).as("srl"), sum($"srr").over(w).as("srrl"))
-        .crossJoin(broadcast(tot))
-        .filter($"nl" < $"n")
-        .withColumn("nr", $"n" - $"nl")
-        .withColumn("srr2", $"srt" - $"srl")
-        .withColumn("srrr", $"srrt" - $"srrl")
-        .withColumn("sse_raw", expr(Gbt.sseSql))
-        .orderBy($"sse_raw", $"feature", $"bin").limit(1)
-        .select($"feature", $"bin", $"nl", $"srl", $"nr", $"srr2", $"srrt")
-        .collect()
-      if (bestRows.isEmpty) open = false
-      else {
-        val best = bestRows.head
-        pending.foreach(pr => out :+= pr.copy(sseAfter = best.getLong(6)))
-        val (ft, thr, nl, srl, nr, srR) = (best.getInt(0), best.getLong(1),
-          best.getLong(2), best.getLong(3), best.getLong(4),
-          best.getLong(5))
-        require(srl + nl * S >= 0 && srR + nr * S >= 0,
-          s"residual drift exceeded the ±$S shift at round $t")
-        val vl = (srl + nl * S) / nl - S
-        val vr = (srR + nr * S) / nr - S
-        val dl = (vl + S) / 2L - S / 2L
-        val dr = (vr + S) / 2L - S / 2L
-        decisions :+= ((ft, thr, dl, dr))
-        pending = Some(Gbt.GbtRound(t, thr, nl, nr, vl, vr, -1L, feature = ft))
-        t += 1
-      }
-    }
-    pending.foreach { pr =>
-      val fAfter: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (ff, th, l, r)) =>
-          f + when(col(featureCols(ff)) <= lit(th), lit(l))
-            .otherwise(lit(r))
-      }
-      val sseAfter = design.withColumn("F", fAfter)
-        .agg(sum(($"yg" - $"F") * ($"yg" - $"F")))
-        .head().getLong(0)
-      out :+= pr.copy(sseAfter = sseAfter)
-    }
-    (f0, out)
   }
 
   /** The p24/p25 quantile bin layout: price into 8 quantile bins,
@@ -284,11 +96,9 @@ object RegTree {
     .scalarCache[(String, String, Int), Seq[Double]]()
   private def cachedEdges(spark: SparkSession, dir: String, colName: String,
       bins: Int, width: Double): Seq[Double] =
-    edgeCache.getOrElseUpdate((dir, colName, bins), {
-      import spark.implicits._
+    edgeCache.getOrElseUpdate((dir, colName, bins),
       quantileEdges(Tables.lineitem(spark, dir).select(col(colName).as("v")),
-        bins, width)
-    })
+        bins, width))
 
   /** The shared p24/p25 design: quantile-binned (price, discount)
     * features + the integer quantity label. Edge computation is two
@@ -318,7 +128,7 @@ object RegTree {
   def p24RegTree(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val design = regDesign(spark, dir).scopedPersist()
-    val splits = fitRegTreeSplitsMulti(design, regFeatures, 3)
+    val splits = fitForestSplits(design, Seq((lit(true), regFeatures)), 3).head
     splits.map(s => (if (s.node.isEmpty) "root" else s.node,
         s.depth.toLong, s.feature.toLong, s.thresholdBin, s.n, s.pos,
         s.nl, s.nr,
@@ -336,7 +146,9 @@ object RegTree {
     import spark.implicits._
     val design = regDesign(spark, dir)
       .withColumn("yg", $"y" * 100L).scopedPersist()
-    fitRegGbtMulti(design, regFeatures, Gbt.gbtRounds, regGridBound)._2
+    Gbt.fitGbtMulti(design, regFeatures, Gbt.gbtRounds,
+        (-regGridBound, regGridBound),
+        regShiftFor(regGridBound, Gbt.gbtRounds))._2
       .map(r => (r.round.toLong, r.feature.toLong, r.thresholdBin,
         r.nLeft, r.nRight, r.vLeft, r.vRight, r.sseAfter))
       .toDF("round", "feature", "threshold_bin", "n_left", "n_right",
@@ -496,10 +308,11 @@ object RegTree {
     * replays share one binned design).
     *
     * Scale shape: three bounded exactPercentiles passes for edges,
-    * then per (tree, level) ONE routed partial-aggregated pass over
-    * ~2/3 of the rows — 6 passes total, histogram state bounded by
-    * 2^depth × 2 features × bins; no per-row state, no value-set
-    * buffering, bags are WHERE clauses (never materialized copies). */
+    * then per level ONE routed partial-aggregated pass that censuses
+    * all three bags ([[fitForestSplits]]) — 2 passes total, histogram
+    * state bounded by 3 × 2^depth × 2 features × bins; no per-row
+    * state, no value-set buffering, bags are row predicates (never
+    * materialized copies). */
   def p26Forest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val li = Tables.lineitem(spark, dir)
@@ -515,87 +328,106 @@ object RegTree {
             lit("#"), $"l_linenumber".cast("string"))), 1, 8), 16, 10)
           .cast("long"), lit(3L)).as("h"))
       .scopedPersist()
-    val rows = fitForestSplits(design).map { case (t, s) =>
-      val (a, b) = forestSubsets(t)
-      (t.toLong,
-        if (s.node.isEmpty) "root" else s.node, s.depth.toLong,
-        (if (s.feature == 0) a else b).toLong, s.thresholdBin,
-        s.n, s.pos, s.nl, s.nr,
-        Math.floorDiv(1000L * s.pl, s.nl),
-        Math.floorDiv(1000L * s.pr, s.nr))
+    val bags = forestSubsets.zipWithIndex.map { case ((a, b), t) =>
+      ($"h" =!= t.toLong, Seq(s"f$a", s"f$b"))
     }
+    val rows = fitForestSplits(design, bags, forestTreeDepth).zipWithIndex
+      .flatMap { case (splits, t) =>
+        val (a, b) = forestSubsets(t)
+        splits.map(s => (t.toLong,
+          if (s.node.isEmpty) "root" else s.node, s.depth.toLong,
+          (if (s.feature == 0) a else b).toLong, s.thresholdBin,
+          s.n, s.pos, s.nl, s.nr,
+          Math.floorDiv(1000L * s.pl, s.nl),
+          Math.floorDiv(1000L * s.pr, s.nr)))
+      }
     rows.toDF("tree", "node", "depth", "feature", "threshold_bin",
       "n_node", "sy_node", "n_left", "n_right", "v_left", "v_right")
       .orderBy($"tree", $"depth", $"node")
   }
 
-  /** All-bags-at-once forest fit (round-15, guide §2.4): the per-tree
-    * loop re-scanned the shared design once per (tree, level) — six
-    * routed passes plus three envelope pre-checks. Keying every
-    * census/argmin row by the tree id runs each LEVEL as ONE routed
-    * pass over the design (each row fans out to its 2 features × the
-    * 2 trees whose bag holds it) and ONE bounded collect for all
-    * trees. Bit-identical to fitting each tree separately: the bag
-    * predicates (h ≠ t), the per-tree decision walks, and the argmin
-    * tie order (sse → LOCAL feature index → bin) are unchanged —
-    * every grouping and window key simply carries `tree`. */
-  private def fitForestSplits(design: DataFrame)
-      : Seq[(Int, Stump.TreeSplit)] = {
+  /** Depth-k multi-feature REGRESSION trees by histogram split search,
+    * one per bag — [[Stump.fitTreeSplitsMulti]] with variance reduction
+    * instead of Gini. Each bag is (row predicate, binned feature
+    * columns): p26 passes its three hash-complement bags, p24 and
+    * [[graft.ml.feature.GraftTree]] one all-rows bag (`lit(true)`).
+    *
+    * Every census/argmin row is keyed by the bag id, so each LEVEL is
+    * ONE routed pass over the design (each row fans out to its
+    * features × the bags that hold it), partial-aggregated to
+    * (cnt, Σy, Σy²) per (bag, node, feature, bin), and ONE bounded
+    * collect for all bags. Each node's split is the argmin of the
+    * shared-IEEE split SSE across its bag's feature histograms (tie
+    * order sse → LOCAL feature index → bin), so a bag fits exactly as
+    * it would alone.
+    *
+    * Returns one split list per bag, in bag order, as
+    * [[Stump.TreeSplit]] rows with SUM semantics: `pos`/`pl`/`pr`
+    * carry Σy, so a leaf's fitted value is the exact mean pl/nl — the
+    * field the Gini tree's leaf rate reads, which lets GraftTree serve
+    * both losses with one model shape. `y` must be a non-null
+    * integer-grid label. An empty bag, or a node with no valid split,
+    * stops splitting. */
+  private[graft] def fitForestSplits(design: DataFrame,
+      bags: Seq[(Column, Seq[String])], maxDepth: Int)
+      : Seq[Seq[Stump.TreeSplit]] = {
     import design.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
-    val trees = forestSubsets.zipWithIndex
-    // per-bag envelope pre-checks + the null-feature-bin fence
-    // (round-15 advisory), folded into one aggregate. count(when(...))
-    // instead of sum: never null, so an EMPTY design yields bag sizes
-    // of 0 (and an empty forest) instead of an NPE.
-    val featureCols = forestSubsets
-      .flatMap { case (a, b) => Seq(s"f$a", s"f$b") }.distinct
-    val preAggs = trees.flatMap { case (_, t) =>
-      Seq(count(when($"h" =!= t.toLong, 1L)),
-        max(when($"h" =!= t.toLong, abs($"y"))))
+    require(maxDepth >= 1, "maxDepth must be >= 1")
+    require(bags.forall(_._2.nonEmpty), "need at least one feature column")
+    val trees = bags.indices
+    // per-bag sizes + label bounds for the envelope, and the
+    // null-feature-bin fence, in ONE aggregate. count(when(...)) is
+    // never null, so an EMPTY bag has size 0 (and fits no splits).
+    val featureCols = bags.flatMap(_._2).distinct
+    val preAggs = bags.flatMap { case (inBag, _) =>
+      Seq(count(when(inBag, 1L)), max(when(inBag, abs($"y"))))
     } :+ count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1))
     val pre = design.agg(preAggs.head, preAggs.tail: _*).head()
     require(pre.getLong(2 * trees.size) == 0L,
-      "null feature bins in the forest design: feature columns must be " +
+      "null feature bins in the tree design: feature columns must be " +
         "non-null (filter or impute before fitting)")
     def bagN(t: Int): Long = pre.getLong(2 * t)
-    trees.foreach { case (_, t) =>
-      if (bagN(t) > 0L)
-        requireRegEnvelope(bagN(t),
-          math.max(pre.getLong(2 * t + 1).toDouble, 1.0))
+    trees.filter(bagN(_) > 0L).foreach { t =>
+      require(!pre.isNullAt(2 * t + 1),
+        "null labels in the tree design: the label must be non-null")
+      Gbt.requireSseEnvelope(bagN(t),
+        math.max(pre.getLong(2 * t + 1).toDouble, 1.0))
     }
-    var splits = Map.empty[Int, Vector[Stump.TreeSplit]]
-    var openTrees = trees.collect { case (_, t) if bagN(t) > 0L => t }.toSet
+    val splits = Array.fill(trees.size)(Vector.empty[Stump.TreeSplit])
+    var openTrees = trees.filter(bagN(_) > 0L).toSet
     var dep = 0
-    while (dep < forestTreeDepth && openTrees.nonEmpty) {
-      val entries = trees.filter(tt => openTrees(tt._2)).flatMap {
-        case ((a, b), t) =>
-          val feats = Seq(a, b)
-          val dec = splits.getOrElse(t, Vector.empty)
-            .map(s => s.node -> (s.feature, s.thresholdBin)).toMap
-          def walk(path: String, lvl: Int): Column =
-            if (lvl == dep) lit(path)
-            else dec.get(path) match {
-              case None => lit(path)
-              case Some((f, thr)) =>
-                when(col(s"f${feats(f)}") <= lit(thr),
-                  walk(path + "L", lvl + 1))
-                  .otherwise(walk(path + "R", lvl + 1))
-            }
-          feats.zipWithIndex.map { case (fc, fi) =>
-            struct(lit(t).as("tree"), walk("", 0).as("node"),
-              lit(fi).as("feature"), col(s"f$fc").as("bin"))
+    while (dep < maxDepth && openTrees.nonEmpty) {
+      val entries = trees.filter(openTrees).flatMap { t =>
+        val (inBag, cols) = bags(t)
+        val dec = splits(t).map(s => s.node -> (s.feature, s.thresholdBin)).toMap
+        def walk(path: String, lvl: Int): Column =
+          if (lvl == dep) lit(path)
+          else dec.get(path) match {
+            case None => lit(path) // stopped early: keeps its short label
+            case Some((f, thr)) =>
+              when(col(cols(f)) <= lit(thr), walk(path + "L", lvl + 1))
+                .otherwise(walk(path + "R", lvl + 1))
           }
+        cols.zipWithIndex.map { case (c, fi) =>
+          struct(lit(t).as("tree"), inBag.as("in"), walk("", 0).as("node"),
+            lit(fi).as("feature"), col(c).as("bin"))
+        }
       }
+      // the level's whole data pass: route + explode + partial agg;
+      // cached because totals and candidates both read it (bounded:
+      // ≤ bags × 2^dep × features × |bin domain| rows)
       val hist = design
-        .select($"y", $"h", explode(array(entries: _*)).as("e"))
-        .filter($"h" =!= $"e.tree")
+        .select($"y", explode(array(entries: _*)).as("e"))
+        .filter($"e.in")
         .select($"e.tree".as("tree"), $"e.node".as("node"),
           $"e.feature".as("feature"), $"e.bin".as("bin"), $"y")
         .groupBy($"tree", $"node", $"feature", $"bin")
         .agg(count(lit(1)).as("cnt"), sum($"y").as("sy"),
           sum($"y" * $"y").as("syy"))
         .scopedPersist()
+      // node totals off ONE feature's slice (every row contributes one
+      // bin per feature, so any slice carries the full census)
       val tot = hist.filter($"feature" === lit(0))
         .groupBy($"tree", $"node").agg(sum($"cnt").as("n"),
           sum($"sy").as("syt"), sum($"syy").as("syyt"))
@@ -618,21 +450,20 @@ object RegTree {
         .withColumn("rk", row_number().over(aw)).filter($"rk" === 1)
         .select($"tree", $"node", $"feature", $"bin", $"n", $"syt",
           $"nl", $"syl", $"nr", $"syr2", $"sse_raw", $"pg_raw")
-        .collect() // ≤ 3 · 2^depth rows — the bounded decision table
+        .collect() // ≤ bags · 2^dep rows — the bounded decision table
+        .sortBy(r => (r.getInt(0), r.getString(1)))
       val byTree = lvl.groupBy(_.getInt(0))
       openTrees = openTrees.filter(byTree.contains)
       byTree.foreach { case (t, rows) =>
-        splits += t -> (splits.getOrElse(t, Vector.empty) ++ rows.map(r =>
+        splits(t) ++= rows.map(r =>
           Stump.TreeSplit(r.getString(1), dep, r.getLong(3), r.getLong(4),
             r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8),
             r.getLong(9), r.getDouble(10), r.getDouble(11),
-            feature = r.getInt(2))))
+            feature = r.getInt(2)))
       }
       dep += 1
     }
-    trees.flatMap { case (_, t) =>
-      splits.getOrElse(t, Vector.empty).map(t -> _)
-    }
+    splits.toSeq
   }
 
   /** The forest's shared design CTEs: global quantile edges for all

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.graftshim.ExpressionShim.{column, expression}
 import graft.functions.{CosineSimilarity, LshBuckets, NearestCentroid, PqAdc, PqEncode, SumOfSquares}
 import graft.sources.Tables
@@ -732,7 +731,6 @@ object Similarity {
     * (s6's audited shape); no corpus pass at all beyond them. */
   def s24CodebookStability(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, dir)
     val centsOld = oldCents(spark, dir)
     val centsNew = fullCents(spark, dir)
     def sq(a: Array[Double], b: Array[Double]): Double = {

@@ -600,7 +600,7 @@ object SnapshotTable {
 
   private def collectStats(spark: SparkSession, schema: StructType,
       path: String, commitRel: String, files: Seq[String],
-      forceCols: Seq[String] = Seq.empty): (FileStats, Map[String, Long]) = {
+      forceCols: Seq[String]): (FileStats, Map[String, Long]) = {
     val statCols = (schema.fields.toSeq
       .filter(f => isStatType(f.dataType)).map(_.name) ++ forceCols)
       .distinct.filter(schema.fieldNames.contains)

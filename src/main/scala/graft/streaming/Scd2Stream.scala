@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,7 +85,7 @@ object Scd2Stream {
       : (Option[(Long, Long, String, Long, Int)], List[Scd2Ver]) =
     done.foldLeft((cur, List.empty[Scd2Ver])) { case ((c, out), p) =>
       c match {
-        case Some((ts, id, et, cents, v)) =>
+        case Some((ts, _, et, cents, v)) =>
           (Some((p.tsMs, p.eventId, p.eventType, p.cents, v + 1)),
             out :+ Scd2Ver(uid, v, ts, Some(p.tsMs), et, cents))
         case None =>

@@ -1344,8 +1344,8 @@ class OlsSpec extends AnyFunSuite {
       graft.operators.RegTree.quantileBin($"price", pe).as("f0"),
       graft.operators.RegTree.quantileBin($"disc", de).as("f1"),
       $"qty".as("y"))
-    val direct = graft.operators.RegTree.fitRegTreeSplitsMulti(design,
-      Seq("f0", "f1"), 2)
+    val direct = graft.operators.RegTree.fitForestSplits(design,
+      Seq((lit(true), Seq("f0", "f1"))), 2).head
     assert(tree.splits.toSeq == direct)
     // transform: leaf value is the exact mean, prediction its half-up
     // rounding
@@ -1373,7 +1373,7 @@ class OlsSpec extends AnyFunSuite {
     val eBack = GraftTree.load(edir)
     assert(eBack.getOrDefault(eBack.lossType) == "variance" &&
       eBack.getOrDefault(eBack.numBins) == 8)
-    // variance GBT: equals a direct fitRegGbtMulti on the same
+    // variance GBT: equals a direct fitGbtMulti on the same
     // width-binned design; params round-trip
     val gbt = new GraftGBT().setMaxIter(3).setLossType("variance")
       .setLabelGrid(100L).setLabelBound(5000L)
@@ -1383,8 +1383,9 @@ class OlsSpec extends AnyFunSuite {
       floor($"price" / 100.0).cast("long").as("__f0"),
       floor($"disc" / 0.01).cast("long").as("__f1"),
       ($"qty" * 100L).as("yg"))
-    val (gf0, gdirect) = graft.operators.RegTree.fitRegGbtMulti(gdesign,
-      Seq("__f0", "__f1"), 3, 5000L)
+    val (gf0, gdirect) = graft.operators.Gbt.fitGbtMulti(gdesign,
+      Seq("__f0", "__f1"), 3, (-5000L, 5000L),
+      graft.operators.RegTree.regShiftFor(5000L, 3))
     assert(gbt.baseF == gf0 && gbt.rounds.toSeq == gdirect)
     val gdir2 = java.nio.file.Files.createTempDirectory("graft_regg").toString
     gbt.write.overwrite().save(gdir2)

@@ -11,13 +11,17 @@ class SessionCachesSpec extends AnyFunSuite {
   import TestSpark._
 
   test("frame cache: touched flag, release path, no leaked persists") {
-    val cache = SessionCaches.frameCache[String]()
+    // a frame-valued ValueCache, built the way docFacts, nbLangPred and
+    // the graph edges build theirs: the builder persists the frame
+    val cache =
+      SessionCaches.valueCache[String, org.apache.spark.sql.DataFrame](Seq(_))
     import spark.implicits._
     SessionCaches.consumeTouched() // clear
     var builds = 0
     def get() = cache.getOrElseUpdate(spark, "k") {
       builds += 1
       Seq(1L, 2L, 3L).toDF("v")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     val df = get()
     assert(SessionCaches.consumeTouched(), "build must set touched")
