@@ -4,7 +4,7 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
+import org.apache.spark.sql.functions.{col, floor, lit, transform, when}
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.operators.{Gbt, RegTree}
@@ -18,9 +18,10 @@ import graft.operators.{Gbt, RegTree}
   * Training is T rounds of least-squares stumps on the residuals of
   * the running integer-grid prediction, learning rate ½, every census
   * an exact long (Friedman 2001; the histogram formulation is
-  * XGBoost-`hist`, arXiv:1603.02754 §3.3): [[Gbt.fitGbt]] off one
-  * domain-bounded bin histogram for a single binary feature,
-  * [[Gbt.fitGbtMulti]] otherwise.
+  * XGBoost-`hist`, arXiv:1603.02754 §3.3), all through
+  * [[Gbt.fitGbtMulti]]: a single binary feature off its (bin, label)
+  * census, which every round re-reads instead of the data; several
+  * features and the variance loss re-census the rows per round.
   *
   * Transform evaluates the additive model as a literal expression —
   * the base floor-mean plus one `when(bin <= thr, dl, dr)` term per
@@ -70,37 +71,24 @@ class GraftGBT(override val uid: String)
       s"label column '${$(labelCol)}' not in ${dataset.schema.fieldNames.mkString(",")}")
     import graft.CacheScope.ScopedPersist
     val feats = effectiveFeatures
-    val label = col($(labelCol)).cast("long")
     val variance = $(lossType) == "variance"
-    val (f0, rounds) =
-      if (!variance && feats.length == 1) {
-        // single binary feature: one domain-bounded histogram serves
-        // every round (per-bin F is well-defined) — cheaper than
-        // re-censusing
-        val hist = dataset.toDF()
-          .select(widthBin(feats.head._1, feats.head._2).as("bin"),
-            label.as("y"))
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("cnt"), sum(col("y")).as("p"))
-        Gbt.fitGbt(hist.scopedPersist(), $(maxIter))
-      } else {
-        // per-round re-census, argmin across the d residual histograms,
-        // on the per-mille grid (binary) or the declared label grid
-        // (variance, D295)
-        require(!variance || isSet(labelBound),
-          "lossType=variance needs labelBound (the declared bound on " +
-            "|label * labelGrid| that sizes the exact-arithmetic shift)")
-        val (grid, range, shift) =
-          if (variance) ($(labelGrid), (-$(labelBound), $(labelBound)),
-            RegTree.regShiftFor($(labelBound), $(maxIter)))
-          else (1000L, Gbt.binaryGrid, Gbt.shiftFor($(maxIter)))
-        val design = dataset.toDF().select(
-          feats.zipWithIndex.map { case ((c, w), i) =>
-            widthBin(c, w).as(s"__f$i") } :+ (label * lit(grid)).as("yg"): _*)
-          .scopedPersist()
-        Gbt.fitGbtMulti(design, feats.indices.map(i => s"__f$i"),
-          $(maxIter), range, shift)
-      }
+    // the per-mille grid (binary) or the declared label grid
+    // (variance, D295)
+    require(!variance || isSet(labelBound),
+      "lossType=variance needs labelBound (the declared bound on " +
+        "|label * labelGrid| that sizes the exact-arithmetic shift)")
+    val (grid, range, shift) =
+      if (variance) ($(labelGrid), (-$(labelBound), $(labelBound)),
+        RegTree.regShiftFor($(labelBound), $(maxIter)))
+      else (1000L, Gbt.binaryGrid, Gbt.shiftFor($(maxIter)))
+    // one binary feature: its (bin, label) census, at most 2 × |bin
+    // domain| rows, serves every round — cheaper than re-censusing
+    val (design, cols) = weightedDesign(dataset.toDF(),
+      feats.map { case (c, w) => widthBin(c, w) },
+      (col($(labelCol)).cast("long") * lit(grid)).as("yg"),
+      census = !variance && feats.length == 1)
+    val (f0, rounds) = Gbt.fitGbtMulti(design.scopedPersist(), cols,
+      $(maxIter), range, shift)
     copyValues(new GraftGBTModel(uid, f0, rounds.toArray).setParent(this))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, count, floor, lit, sum, transform, when}
+import org.apache.spark.sql.functions.{coalesce, col, floor, lit, sum, transform, when}
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.operators.{RegTree, Stump}
@@ -17,16 +17,17 @@ import graft.operators.{RegTree, Stump}
   * /root/reference/src/main/scala/org/apache/spark/ml/feature/RapidsPCA.scala:81-137,
   * the Estimator–Model–MLWritable protocol [[GraftPCA]] established).
   *
-  * Training is [[Stump.fitTreeSplits]]: per level, ONE pass over the
-  * domain-bounded bin histogram routes rows through a literal
-  * threshold when-tree, an exact-integer cumulative scan finds each
-  * node's best weighted-Gini split, and the ≤ 2^depth winners extend
-  * the tree — the XGBoost-`hist` architecture (arXiv:1603.02754
-  * §3.3): distributed histograms, centralized split decisions, no
-  * per-row sort, per-level cost bounded by the value domain. Several
-  * features (or `numBins`) train through [[Stump.fitTreeSplitsMulti]],
-  * and lossType=variance through [[RegTree.fitForestSplits]] with one
-  * all-rows bag.
+  * Training is [[RegTree.fitForestSplits]] with one all-rows bag, the
+  * loss picked by `lossType` (weighted Gini or variance): per level,
+  * ONE pass over the weighted design routes rows through a literal
+  * threshold when-tree, an exact-integer cumulative scan per feature
+  * histogram finds each node's best split, and the ≤ 2^depth winners
+  * extend the tree — the XGBoost-`hist` architecture
+  * (arXiv:1603.02754 §3.3): distributed histograms, centralized split
+  * decisions, no per-row sort. A single width-binned Gini feature is
+  * fitted off its (bin, label) census, so each level re-reads a table
+  * bounded by the value domain; several features, `numBins` and the
+  * variance loss re-census the rows per level.
   *
   * Transform routes each row to its leaf with the same literal
   * when-tree (pure codegen, no shuffle, no join) and scores it with
@@ -98,43 +99,28 @@ class GraftTree(override val uid: String)
     val edges: Array[Array[Double]] =
       if (isSet(numBins)) learnEdges(dataset.toDF(), feats.map(_._1))
       else Array.empty
-    val label = col($(labelCol)).cast("long")
-    val (splits, rootCensus) =
-      if ($(lossType) != "variance" && feats.length == 1 && edges.isEmpty) {
-        // single Gini feature: the domain-bounded histogram is computed
-        // ONCE and every level re-routes it — strictly cheaper than
-        // the multi-feature per-level re-census
-        val hist = dataset.toDF()
-          .select(widthBin(feats.head._1, feats.head._2).as("bin"),
-            label.as("y"))
-          .groupBy(col("bin"))
-          .agg(count(lit(1)).as("cnt"), sum(col("y")).as("p"))
-          .scopedPersist()
-        (Stump.fitTreeSplits(hist, $(maxDepth)),
-          () => hist.agg(sum(col("cnt")), sum(col("p"))))
-      } else {
-        // per-level re-census, argmin across the d feature histograms
-        // (D289); variance (D294) splits on squared error, and
-        // TreeSplit's pos/pl/pr then carry Σy, so leaf values are exact
-        // means through the same model shape
-        val design = dataset.toDF().select(feats.indices.map(i =>
-            binCol(feats, edges, i).as(s"__f$i")) :+ label.as("y"): _*)
-          .scopedPersist()
-        val cols = feats.indices.map(i => s"__f$i")
-        val sp =
-          if ($(lossType) == "variance")
-            RegTree.fitForestSplits(design, Seq((lit(true), cols)),
-              $(maxDepth)).head
-          else Stump.fitTreeSplitsMulti(design, cols, $(maxDepth))
-        (sp, () => design.agg(count(lit(1)), sum(col("y"))))
-      }
+    val gini = $(lossType) != "variance"
+    // one width-binned Gini feature: its (bin, label) census, at most
+    // 2 × |bin domain| rows, serves every level — cheaper than
+    // re-censusing
+    val (rows, cols) = weightedDesign(dataset.toDF(),
+      feats.indices.map(binCol(feats, edges, _)),
+      col($(labelCol)).cast("long").as("y"),
+      census = gini && feats.length == 1 && edges.isEmpty)
+    val design = rows.scopedPersist()
+    // variance (D294) splits on squared error; TreeSplit's pos/pl/pr
+    // carry Σy under either loss, so leaf values are exact means
+    // through the same model shape
+    val loss = if (gini) RegTree.Gini else RegTree.Variance
+    val splits = RegTree.fitForestSplits(design, Seq((lit(true), cols)),
+      $(maxDepth), loss).head
     // root census even when the root is pure (no split to read it off)
     val (rootN, rootPos) = splits.headOption match {
       case Some(r) if r.node.isEmpty => (r.n, r.pos)
       case _ =>
-        val t = rootCensus().head()
-        (if (t.isNullAt(0)) 0L else t.getLong(0),
-          if (t.isNullAt(1)) 0L else t.getLong(1))
+        val t = design.agg(coalesce(sum(col("w")), lit(0L)),
+          coalesce(sum(col("w") * col("y")), lit(0L))).head()
+        (t.getLong(0), t.getLong(1))
     }
     copyValues(new GraftTreeModel(uid, splits.toArray, rootN, rootPos,
       edges).setParent(this))

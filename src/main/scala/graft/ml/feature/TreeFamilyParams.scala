@@ -1,8 +1,8 @@
 package graft.ml.feature
 
 import org.apache.spark.ml.param._
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, floor}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, count, floor, lit}
 import org.apache.spark.sql.types.{DoubleType, LongType, NumericType, StructField, StructType}
 
 /** The params and schema rules [[GraftTree]] and [[GraftGBT]] share:
@@ -59,6 +59,25 @@ trait TreeFamilyParams extends Params {
   /** Fixed-width bin of a numeric feature column: floor(v / width). */
   protected def widthBin(c: String, width: Double): Column =
     floor(col(c).cast("double") / width).cast("long")
+
+  /** The weighted design the tree loops read, and its feature column
+    * names: binned features `__f<i>`, the label column as given and
+    * `w`, the count of observations a row stands for. With `census`
+    * the rows are grouped to their (bins, label) table — at most
+    * 2 × |bin domain| rows for one feature and a binary label, which
+    * every level or round then re-reads instead of the data; without
+    * it each observation keeps its own row with `w` = 1. */
+  protected def weightedDesign(df: DataFrame, bins: Seq[Column],
+      label: Column, census: Boolean): (DataFrame, Seq[String]) = {
+    val names = bins.indices.map(i => s"__f$i")
+    val rows = df.select(bins.zip(names).map { case (b, n) => b.as(n) } :+
+      label: _*)
+    val design =
+      if (census)
+        rows.groupBy(rows.columns.toSeq.map(col): _*).agg(count(lit(1)).as("w"))
+      else rows.withColumn("w", lit(1L))
+    (design, names)
+  }
 
   protected def validateAndTransformSchema(schema: StructType): StructType = {
     effectiveFeatures.foreach { case (c, _) =>

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedPersist
-import graft.sources.Tables
 
 /** D281: gradient-boosted stumps by histogram split search — the GBT
   * composition the depth-k trainer (D279) opened: T rounds of
@@ -16,9 +15,8 @@ import graft.sources.Tables
   * Exactness discipline (what makes this hash-replayable in DuckDB
   * when textbook GBT is float soup): the label lives on a PER-MILLE
   * integer grid (y·1000) and the running prediction F is an INTEGER
-  * on that grid, so per-bin residual sums Σr = p·1000 − cnt·F and
-  * squared sums Σr² are exact longs off the SAME domain-bounded bin
-  * histogram every round. Leaf values are floor-means computed by
+  * on that grid, so per-bin residual sums Σw·r and squared sums Σw·r²
+  * are exact longs every round. Leaf values are floor-means computed by
   * SHIFTED nonnegative integer division ((Σr + n·S) div n − S with
   * S = [[gbtShift]]), so truncating and flooring engines agree; the
   * learning-rate halving uses the same shift. Only the per-candidate
@@ -27,9 +25,9 @@ import graft.sources.Tables
   * exactly-representable longs — and the reported per-round
   * `sse_after` is again an exact integer.
   *
-  * Scale shape: per round, one partial-aggregated pass over the ~1.1k
-  * bin histogram (value-domain bounded, never data-sized), one
-  * unpartitioned cumulative window over that bin frame, a
+  * Scale shape (p21): per round, one partial-aggregated pass over the
+  * (bin, y) census — at most 2 × ~1.1k rows, value-domain bounded,
+  * never data-sized — one cumulative window over the bin frame, a
   * TakeOrdered-1 argmin, and a 1-row collect — the p17/p19/p20
   * discipline, T times. The routing/prediction expression is a
   * literal when-chain (pure codegen, no join).
@@ -102,17 +100,17 @@ object Gbt {
         + (${d("srrr")} - ${d("srr2")} * ${d("srr2")} / ${d("nr")}))"""
 
   /** One fitted boosting round: the chosen feature (index into the
-    * trainer's featureCols; always 0 for the single-feature trainer),
-    * threshold, child populations, leaf values (per-mille residual
-    * floor-means), and the exact integer SSE after applying the
-    * ½-rate update. */
+    * loop's featureCols; 0 for a one-feature design), threshold, child
+    * populations, leaf values (residual floor-means on the label
+    * grid), and the exact integer SSE after applying the ½-rate
+    * update. Fitted by [[fitGbtMulti]]. */
   final case class GbtRound(round: Int, thresholdBin: Long, nLeft: Long,
       nRight: Long, vLeft: Long, vRight: Long, sseAfter: Long,
       feature: Int = 0)
 
   /** ½-rate per-round prediction adjustments derived from a fitted
     * round's leaf values — floor(v/2) via the shifted division, the
-    * exact arithmetic [[fitGbt]] trains with. */
+    * exact arithmetic [[fitGbtMulti]] trains with. */
   def adjustments(r: GbtRound): (Long, Long) = {
     // any even shift ≥ |v| yields the same floor(v/2) — size it to the
     // round's own leaf values so rounds fitted with a larger
@@ -122,107 +120,8 @@ object Gbt {
     ((r.vLeft + S) / 2L - S / 2L, (r.vRight + S) / 2L - S / 2L)
   }
 
-  /** Fit T boosted stumps over a (bin, cnt, p) histogram; returns the
-    * base (round-0 global floor-mean) prediction and the fitted
-    * rounds. Per round: residual census under the CURRENT
-    * literal-expression prediction, cumulative-window split search,
-    * 1-row argmin collect, exact leaf math driver-side, exact integer
-    * SSE census. */
-  private[graft] def fitGbt(hist: DataFrame,
-      rounds: Int): (Long, Seq[GbtRound]) = {
-    import hist.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val S = shiftFor(rounds)
-    // F0 = global mean label on the per-mille grid (floor)
-    // null bins (a null feature value) would census into the LEFT
-    // cumulative (nulls sort first) while `bin <= thr` routing sends
-    // those rows RIGHT — reject them up front rather than fit a model
-    // whose censuses disagree with its own routing (round-14 advisory)
-    // null-bin fence + totals in ONE aggregate (round-15: the
-    // separate isEmpty pre-check was its own job)
-    val t0 = hist.agg(sum($"cnt"), sum($"p"),
-      count(when($"bin".isNull, 1))).head()
-    require(t0.getLong(2) == 0L,
-      "null feature bins in the GBT design: feature columns must be " +
-        "non-null (filter or impute before fitting)")
-    val nAll = t0.getLong(0)
-    val posAll = t0.getLong(1)
-    require(nAll > 0, "empty histogram")
-    requireSseEnvelope(nAll, residualBound(1000L, rounds))
-    val f0 = posAll * 1000L / nAll
-    var decisions = Vector.empty[(Long, Long, Long)] // (thr, dl, dr)
-    var out = Vector.empty[GbtRound]
-    // round t's census already sums rr^2 under the CURRENT model —
-    // exactly round t-1's post-update SSE — so each round's collect
-    // closes the previous round and only the last pays an SSE pass
-    var pending: Option[GbtRound] = None
-    var t = 1
-    var open = true
-    while (t <= rounds && open) {
-      val fCol: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (thr, dl, dr)) =>
-          f + when($"bin" <= lit(thr), lit(dl)).otherwise(lit(dr))
-      }
-      val res = hist.withColumn("F", fCol)
-        .withColumn("sr", $"p" * 1000L - $"cnt" * $"F")
-        .withColumn("srr", $"p" * (lit(1000L) - $"F") * (lit(1000L) - $"F")
-          + ($"cnt" - $"p") * $"F" * $"F")
-      val tot = res.agg(sum($"cnt").as("n"), sum($"sr").as("srt"),
-        sum($"srr").as("srrt"))
-      val w = Window.orderBy($"bin")
-      val bestRows = res
-        .select($"bin", sum($"cnt").over(w).as("nl"),
-          sum($"sr").over(w).as("srl"), sum($"srr").over(w).as("srrl"))
-        .crossJoin(broadcast(tot))
-        .filter($"nl" < $"n")
-        .withColumn("nr", $"n" - $"nl")
-        .withColumn("srr2", $"srt" - $"srl")
-        .withColumn("srrr", $"srrt" - $"srrl")
-        .withColumn("sse_raw", expr(sseSql))
-        .orderBy($"sse_raw", $"bin").limit(1)
-        .select($"bin", $"nl", $"srl", $"nr", $"srr2", $"srrt")
-        .collect()
-      if (bestRows.isEmpty) {
-        // single-bin histogram: no candidate leaves both sides
-        // populated — stop boosting like fitTreeSplits stops splitting
-        // (round-13 advisory: .head() here crashed context-free)
-        open = false
-      } else {
-        val best = bestRows.head
-        pending.foreach(pr => out :+= pr.copy(sseAfter = best.getLong(5)))
-        val (thr, nl, srl, nr, srR) = (best.getLong(0), best.getLong(1),
-          best.getLong(2), best.getLong(3), best.getLong(4))
-        // shifted nonnegative floor-division (truncation == floor here;
-        // a negative numerator means the drift bound was violated — fail
-        // loudly, never divide wrong)
-        require(srl + nl * S >= 0 && srR + nr * S >= 0,
-          s"residual drift exceeded the ±$S shift at round $t")
-        val vl = (srl + nl * S) / nl - S
-        val vr = (srR + nr * S) / nr - S
-        val dl = (vl + S) / 2L - S / 2L // = floor(vl / 2), both engines
-        val dr = (vr + S) / 2L - S / 2L
-        decisions :+= ((thr, dl, dr))
-        pending = Some(GbtRound(t, thr, nl, nr, vl, vr, -1L))
-        t += 1
-      }
-    }
-    pending.foreach { pr =>
-      val fAfter: Column = decisions.foldLeft(lit(f0)) {
-        case (f, (th, l, r)) =>
-          f + when($"bin" <= lit(th), lit(l)).otherwise(lit(r))
-      }
-      val sseAfter = hist.withColumn("F", fAfter)
-        .agg(sum($"p" * (lit(1000L) - $"F") * (lit(1000L) - $"F")
-          + ($"cnt" - $"p") * $"F" * $"F"))
-        .head().getLong(0)
-      out :+= pr.copy(sseAfter = sseAfter)
-    }
-    (f0, out)
-  }
-
-  /** D290/D295: multi-feature gradient-boosted stumps on an integer
-    * label grid — [[fitGbt]]'s split search generalized to argmin over
-    * d per-feature residual histograms per round (the full
+  /** D281/D290/D295: gradient-boosted stumps on an integer label grid,
+    * argmin over d per-feature residual histograms per round (the
     * XGBoost-`hist` round, arXiv:1603.02754 §3.3). The one boosting
     * loop of both losses: binary callers pass yg = 1000·y with
     * [[binaryGrid]] and [[shiftFor]]; variance callers pass their
@@ -231,16 +130,26 @@ object Gbt {
     * Long-overflow envelope and is checked in the preflight aggregate,
     * so a label off its grid fails by name instead of fitting.
     *
+    * `design` is a WEIGHTED design (the [[RegTree.fitForestSplits]]
+    * contract): one row per observation group with its binned
+    * features, its label `yg` and `w`, the exact Long count of
+    * observations it stands for. Row-level callers (p23, p25,
+    * several-feature [[graft.ml.feature.GraftGBT]]) pass `w` = 1;
+    * one-feature callers (p21, one-feature GraftGBT) pass their
+    * (bin, yg) census, which every round re-reads instead of the data.
+    *
     * Per round the residual rr = yg − F is censused exactly per
-    * (feature, bin) in ONE routed pass (posexplode over the binned
-    * features, partial-aggregated to a domain-bounded histogram), the
-    * winner is chosen by the shared-IEEE SSE criterion with tie order
-    * sse → feature → bin, and leaf values are shifted floor-division
-    * means halved by the same even-shift rule. The per-row F depends
-    * on earlier rounds' features, so each round re-censuses the rows —
-    * the cost model every hist GBT pays. Returns (f0, rounds) with f0
-    * the global floor-mean base prediction; a design with no valid
-    * split (one row, one bin per feature) fits no rounds. */
+    * (feature, bin) as Σw, Σw·rr and Σw·rr² in ONE routed pass
+    * (posexplode over the binned features, partial-aggregated to a
+    * domain-bounded histogram), the winner is chosen by the
+    * shared-IEEE SSE criterion with tie order sse → feature → bin, and
+    * leaf values are shifted floor-division means halved by the same
+    * even-shift rule. The per-row F depends on earlier rounds'
+    * features, so each round re-censuses the design — the cost model
+    * every hist GBT pays. Returns (f0, rounds) with f0 the global
+    * floor-mean base prediction; a design with no valid split (one
+    * row, one bin per feature) fits no rounds, and one with no rows
+    * fails as an "empty design". */
   private[graft] def fitGbtMulti(design: DataFrame, featureCols: Seq[String],
       rounds: Int, ygRange: (Long, Long), shift: Long): (Long, Seq[GbtRound]) = {
     import design.sparkSession.implicits._
@@ -250,8 +159,10 @@ object Gbt {
     val S = shift
     // null fences, totals and the label range in ONE aggregate. Null
     // bins would census LEFT in the cumulative window but route RIGHT
-    // at scoring.
-    val t0 = design.agg(count(lit(1)), sum($"yg"), min($"yg"), max($"yg"),
+    // at scoring. Σw over no rows is null: coalesced, so an empty
+    // design fails by name below.
+    val t0 = design.agg(coalesce(sum($"w"), lit(0L)), sum($"w" * $"yg"),
+      min($"yg"), max($"yg"),
       count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1)),
       count(when($"yg".isNull, 1))).head()
     require(t0.getLong(4) == 0L,
@@ -280,24 +191,24 @@ object Gbt {
     var t = 1
     var open = true
     while (t <= rounds && open) {
-      // exact per-row residual, censused per (feature, bin); cached:
-      // totals + candidates both read it
-      val hist = design.withColumn("F", prediction(decisions))
+      // exact per-row residual, censused per (feature, bin); one
+      // window partitioning serves the cumulative scan and the totals
+      // (every row contributes one bin per feature, so each feature's
+      // slice carries the full census)
+      val cum = Window.partitionBy($"feature").orderBy($"bin")
+      val all = cum.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val bestRows = design.withColumn("F", prediction(decisions))
         .withColumn("rr", $"yg" - $"F")
-        .select($"rr", posexplode(array(featureCols.map(col): _*))
+        .select($"w", $"rr", posexplode(array(featureCols.map(col): _*))
           .as(Seq("feature", "bin")))
         .groupBy($"feature", $"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"rr").as("sr"),
-          sum($"rr" * $"rr").as("srr"))
-        .scopedPersist()
-      val tot = hist.filter($"feature" === lit(0))
-        .agg(sum($"cnt").as("n"), sum($"sr").as("srt"),
-          sum($"srr").as("srrt"))
-      val w = Window.partitionBy($"feature").orderBy($"bin")
-      val bestRows = hist
-        .select($"feature", $"bin", sum($"cnt").over(w).as("nl"),
-          sum($"sr").over(w).as("srl"), sum($"srr").over(w).as("srrl"))
-        .crossJoin(broadcast(tot))
+        .agg(sum($"w").as("cnt"), sum($"w" * $"rr").as("sr"),
+          sum($"w" * $"rr" * $"rr").as("srr"))
+        .select($"feature", $"bin", sum($"cnt").over(cum).as("nl"),
+          sum($"sr").over(cum).as("srl"), sum($"srr").over(cum).as("srrl"),
+          sum($"cnt").over(all).as("n"), sum($"sr").over(all).as("srt"),
+          sum($"srr").over(all).as("srrt"))
         .filter($"nl" < $"n")
         .withColumn("nr", $"n" - $"nl")
         .withColumn("srr2", $"srt" - $"srl")
@@ -329,7 +240,7 @@ object Gbt {
     }
     pending.foreach { pr =>
       val sseAfter = design.withColumn("F", prediction(decisions))
-        .agg(sum(($"yg" - $"F") * ($"yg" - $"F")))
+        .agg(sum($"w" * ($"yg" - $"F") * ($"yg" - $"F")))
         .head().getLong(0)
       out :+= pr.copy(sseAfter = sseAfter)
     }
@@ -353,16 +264,14 @@ object Gbt {
   }
 
   /** p21: three boosted stump rounds on the p17 design (price bins →
-    * returnflag), every output column an exact integer. */
+    * returnflag) through [[fitGbtMulti]] over its (bin, y) census,
+    * every output column an exact integer. */
   def p21Gbt3(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hist = Tables.lineitem(spark, dir).select(
-        floor($"l_extendedprice" / 100.0).cast("long").as("bin"),
-        ($"l_returnflag" === "R").cast("long").as("y"))
-      .groupBy($"bin")
-      .agg(count(lit(1)).as("cnt"), sum($"y").as("p"))
-      .scopedPersist()
-    fitGbt(hist, gbtRounds)._2
+    val design = Stump.designCensus(spark, dir)
+      .withColumn("yg", $"y" * 1000L).scopedPersist()
+    fitGbtMulti(design, Seq("bin"), gbtRounds, binaryGrid,
+      shiftFor(gbtRounds))._2
       .map(r => (r.round.toLong, r.thresholdBin, r.nLeft, r.nRight,
         r.vLeft, r.vRight, r.sseAfter))
       .toDF("round", "threshold_bin", "n_left", "n_right",

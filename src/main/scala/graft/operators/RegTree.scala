@@ -10,9 +10,10 @@ import graft.sources.Tables
   * reduction) split search over automatically QUANTILE-BINNED features
   * (round-14 verdict ask #8, completing the XGBoost-`hist` story:
   * arXiv:1603.02754 §3.1 trains on quantile-sketch candidate splits,
-  * §3.3 on binned histograms; the Gini trainers in [[Stump]] classify,
-  * these regress; p25 boosts through the one loop in
-  * [[Gbt.fitGbtMulti]]).
+  * §3.3 on binned histograms). [[fitForestSplits]] is the one level
+  * loop of the tree family: the Gini queries in [[Stump]] classify
+  * through it, these regress; p25 boosts through the one loop in
+  * [[Gbt.fitGbtMulti]].
   *
   * Automatic binning: each feature's bin edges are its EXACT k/B
   * quantiles from [[AdvancedSql.exactPercentiles]] (q38's two-phase
@@ -34,8 +35,9 @@ import graft.sources.Tables
   * Scale shape: per level/round, ONE routed pass over the data
   * partial-aggregates to a histogram bounded by 2^depth × #features ×
   * #bins (the bins now GUARANTEED small — that is what quantile
-  * binning buys over raw value domains), one bounded cumulative
-  * window, a TakeOrdered-1 argmin, and a ≤ 2^depth-row collect.
+  * binning buys over raw value domains), one bounded window pass for
+  * the cumulative scan, the node totals and the per-feature argmin,
+  * and a ≤ 2^depth × #features-row collect.
   */
 object RegTree {
 
@@ -101,7 +103,8 @@ object RegTree {
         bins, width))
 
   /** The shared p24/p25 design: quantile-binned (price, discount)
-    * features + the integer quantity label. Edge computation is two
+    * features + the integer quantity label, one row per observation
+    * (`w` = 1, the weighted-design contract). Edge computation is two
     * bounded exactPercentiles passes (histogram widths sized so bucket
     * occupancy, not the value set, bounds the refinement). */
   private[graft] def regDesign(spark: SparkSession, dir: String): DataFrame = {
@@ -112,7 +115,7 @@ object RegTree {
     li.select(
       quantileBin($"l_extendedprice", pe).as("f0"),
       quantileBin($"l_discount", de).as("f1"),
-      $"l_quantity".cast("long").as("y"))
+      $"l_quantity".cast("long").as("y"), lit(1L).as("w"))
   }
 
   /** D294 query binding: depth-3 regression tree (variance-reduction
@@ -128,7 +131,8 @@ object RegTree {
   def p24RegTree(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val design = regDesign(spark, dir).scopedPersist()
-    val splits = fitForestSplits(design, Seq((lit(true), regFeatures)), 3).head
+    val splits = fitForestSplits(design, Seq((lit(true), regFeatures)), 3,
+      Variance).head
     splits.map(s => (if (s.node.isEmpty) "root" else s.node,
         s.depth.toLong, s.feature.toLong, s.thresholdBin, s.n, s.pos,
         s.nl, s.nr,
@@ -323,7 +327,7 @@ object RegTree {
         quantileBin($"l_extendedprice", pe).as("f0"),
         quantileBin($"l_discount", de).as("f1"),
         quantileBin($"l_tax", te).as("f2"),
-        $"l_quantity".cast("long").as("y"),
+        $"l_quantity".cast("long").as("y"), lit(1L).as("w"),
         pmod(conv(substring(md5(concat($"l_orderkey".cast("string"),
             lit("#"), $"l_linenumber".cast("string"))), 1, 8), 16, 10)
           .cast("long"), lit(3L)).as("h"))
@@ -331,7 +335,8 @@ object RegTree {
     val bags = forestSubsets.zipWithIndex.map { case ((a, b), t) =>
       ($"h" =!= t.toLong, Seq(s"f$a", s"f$b"))
     }
-    val rows = fitForestSplits(design, bags, forestTreeDepth).zipWithIndex
+    val rows = fitForestSplits(design, bags, forestTreeDepth, Variance)
+      .zipWithIndex
       .flatMap { case (splits, t) =>
         val (a, b) = forestSubsets(t)
         splits.map(s => (t.toLong,
@@ -346,51 +351,85 @@ object RegTree {
       .orderBy($"tree", $"depth", $"node")
   }
 
-  /** Depth-k multi-feature REGRESSION trees by histogram split search,
-    * one per bag — [[Stump.fitTreeSplitsMulti]] with variance reduction
-    * instead of Gini. Each bag is (row predicate, binned feature
-    * columns): p26 passes its three hash-complement bags, p24 and
+  /** The level loop's split criterion. [[Gini]] scores a binary label
+    * y ∈ {0, 1} by the weighted Gini of [[Stump]] (the shared IEEE text
+    * its oracles replay); [[Variance]] scores an integer-grid label by
+    * the split SSE ([[regSseSql]]). The two argmins agree only in
+    * exact arithmetic, so the Gini callers keep Gini. */
+  sealed trait Loss
+  case object Gini extends Loss
+  case object Variance extends Loss
+
+  /** Depth-k multi-feature trees by histogram split search, one per
+    * bag — the one level loop of the tree family, for both losses.
+    * Each bag is (row predicate, binned feature columns): p26 passes
+    * its three hash-complement bags; p20, p22, p24 and
     * [[graft.ml.feature.GraftTree]] one all-rows bag (`lit(true)`).
+    *
+    * `design` is a WEIGHTED design: one row per observation group,
+    * with its binned features, its label `y` and `w`, the exact Long
+    * count of observations the row stands for. Row-level callers pass
+    * `w = 1`; one-feature callers (p20, one-feature GraftTree) pass
+    * their `groupBy(bin, y)` census, at most 2 × |bin domain| rows for
+    * a binary label, so every level re-reads that small table instead
+    * of the data. The census is Σw, Σw·y and Σw·y², so a row and its
+    * census fit identical splits.
     *
     * Every census/argmin row is keyed by the bag id, so each LEVEL is
     * ONE routed pass over the design (each row fans out to its
-    * features × the bags that hold it), partial-aggregated to
-    * (cnt, Σy, Σy²) per (bag, node, feature, bin), and ONE bounded
-    * collect for all bags. Each node's split is the argmin of the
-    * shared-IEEE split SSE across its bag's feature histograms (tie
-    * order sse → LOCAL feature index → bin), so a bag fits exactly as
-    * it would alone.
+    * features × the bags that hold it), partial-aggregated per (bag,
+    * node, feature, bin), one window pass per (bag, node, feature)
+    * for the cumulative scan, the node totals and that feature's best
+    * bin, and ONE bounded collect for all bags. Each node's split is
+    * the argmin of the loss's shared-IEEE criterion across its bag's
+    * feature histograms (tie order criterion → LOCAL feature index →
+    * bin, the last step on the driver), so a bag fits exactly as it
+    * would alone.
+    * The multi-feature recursion must re-census per level: a node's
+    * conditional distribution of feature j given earlier splits on
+    * feature i is not derivable from marginal histograms — the
+    * per-level cost XGBoost's hist algorithm pays (arXiv:1603.02754
+    * §3.3).
     *
-    * Returns one split list per bag, in bag order, as
-    * [[Stump.TreeSplit]] rows with SUM semantics: `pos`/`pl`/`pr`
-    * carry Σy, so a leaf's fitted value is the exact mean pl/nl — the
-    * field the Gini tree's leaf rate reads, which lets GraftTree serve
-    * both losses with one model shape. `y` must be a non-null
-    * integer-grid label. An empty bag, or a node with no valid split,
-    * stops splitting. */
+    * Returns one split list per bag, in bag order, each level sorted
+    * by node, as [[Stump.TreeSplit]] rows with SUM semantics:
+    * `pos`/`pl`/`pr` carry Σy (the positives for Gini), so a leaf's
+    * fitted value is the exact mean pl/nl under either loss. The
+    * preflight aggregate fails by name on a null feature bin, a null
+    * label and, for Gini, a label outside {0, 1}. An empty bag, or a
+    * node with no valid split, stops splitting. */
   private[graft] def fitForestSplits(design: DataFrame,
-      bags: Seq[(Column, Seq[String])], maxDepth: Int)
+      bags: Seq[(Column, Seq[String])], maxDepth: Int, loss: Loss)
       : Seq[Seq[Stump.TreeSplit]] = {
     import design.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     require(maxDepth >= 1, "maxDepth must be >= 1")
     require(bags.forall(_._2.nonEmpty), "need at least one feature column")
     val trees = bags.indices
-    // per-bag sizes + label bounds for the envelope, and the
-    // null-feature-bin fence, in ONE aggregate. count(when(...)) is
-    // never null, so an EMPTY bag has size 0 (and fits no splits).
+    // per-bag weights + label bounds for the envelope, and the design's
+    // null and label-range fences, in ONE aggregate. Σw over no rows is
+    // null, so an EMPTY bag is coalesced to weight 0 (and fits no
+    // splits).
     val featureCols = bags.flatMap(_._2).distinct
     val preAggs = bags.flatMap { case (inBag, _) =>
-      Seq(count(when(inBag, 1L)), max(when(inBag, abs($"y"))))
-    } :+ count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1))
+      Seq(coalesce(sum(when(inBag, $"w")), lit(0L)),
+        max(when(inBag, abs($"y"))))
+    } ++ Seq(
+      count(when(featureCols.map(col(_).isNull).reduce(_ || _), 1)),
+      count(when($"y".isNull, 1)), min($"y"), max($"y"))
     val pre = design.agg(preAggs.head, preAggs.tail: _*).head()
-    require(pre.getLong(2 * trees.size) == 0L,
+    val k = 2 * trees.size
+    require(pre.getLong(k) == 0L,
       "null feature bins in the tree design: feature columns must be " +
         "non-null (filter or impute before fitting)")
+    require(pre.getLong(k + 1) == 0L,
+      "null labels in the tree design: the label must be non-null")
+    if (loss == Gini && !pre.isNullAt(k + 2))
+      require(pre.getLong(k + 2) >= 0L && pre.getLong(k + 3) <= 1L,
+        s"Gini loss needs a binary label: y spans [${pre.getLong(k + 2)}, " +
+          s"${pre.getLong(k + 3)}], outside {0, 1}")
     def bagN(t: Int): Long = pre.getLong(2 * t)
     trees.filter(bagN(_) > 0L).foreach { t =>
-      require(!pre.isNullAt(2 * t + 1),
-        "null labels in the tree design: the label must be non-null")
       Gbt.requireSseEnvelope(bagN(t),
         math.max(pre.getLong(2 * t + 1).toDouble, 1.0))
     }
@@ -414,53 +453,70 @@ object RegTree {
             lit(fi).as("feature"), col(c).as("bin"))
         }
       }
-      // the level's whole data pass: route + explode + partial agg;
-      // cached because totals and candidates both read it (bounded:
-      // ≤ bags × 2^dep × features × |bin domain| rows)
+      // the level's whole data pass: route + explode + partial agg
+      // (bounded: ≤ bags × 2^dep × features × |bin domain| rows); rows
+      // of nodes that stopped early keep a short label and drop out
       val hist = design
-        .select($"y", explode(array(entries: _*)).as("e"))
-        .filter($"e.in")
+        .select($"y", $"w", explode(array(entries: _*)).as("e"))
+        .filter($"e.in" && length($"e.node") === dep)
         .select($"e.tree".as("tree"), $"e.node".as("node"),
-          $"e.feature".as("feature"), $"e.bin".as("bin"), $"y")
+          $"e.feature".as("feature"), $"e.bin".as("bin"), $"y", $"w")
         .groupBy($"tree", $"node", $"feature", $"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"y").as("sy"),
-          sum($"y" * $"y").as("syy"))
-        .scopedPersist()
-      // node totals off ONE feature's slice (every row contributes one
-      // bin per feature, so any slice carries the full census)
-      val tot = hist.filter($"feature" === lit(0))
-        .groupBy($"tree", $"node").agg(sum($"cnt").as("n"),
-          sum($"sy").as("syt"), sum($"syy").as("syyt"))
-      val w = Window.partitionBy($"tree", $"node", $"feature")
-        .orderBy($"bin")
-      val aw = Window.partitionBy($"tree", $"node")
-        .orderBy($"sse_raw", $"feature", $"bin")
-      val lvl = hist
+        .agg(sum($"w").as("cnt"), sum($"w" * $"y").as("sy"),
+          sum($"w" * $"y" * $"y").as("syy"))
+      // one window partitioning serves the cumulative scan, the node
+      // totals (every row contributes one bin per feature, so each
+      // feature's slice carries the full node census) and the per-
+      // feature argmin: one shuffle after the aggregate
+      val byFeature = Window.partitionBy($"tree", $"node", $"feature")
+      val cum = byFeature.orderBy($"bin")
+      val all = cum.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      val cand = hist
         .select($"tree", $"node", $"feature", $"bin",
-          sum($"cnt").over(w).as("nl"), sum($"sy").over(w).as("syl"),
-          sum($"syy").over(w).as("syyl"))
-        .join(broadcast(tot), Seq("tree", "node"))
+          sum($"cnt").over(cum).as("nl"), sum($"sy").over(cum).as("syl"),
+          sum($"syy").over(cum).as("syyl"), sum($"cnt").over(all).as("n"),
+          sum($"sy").over(all).as("syt"), sum($"syy").over(all).as("syyt"))
         .filter($"nl" < $"n")
         .withColumn("nr", $"n" - $"nl")
         .withColumn("syr2", $"syt" - $"syl")
         .withColumn("syyr", $"syyt" - $"syyl")
-        .withColumn("sse_raw", expr(regSseSql))
-        .withColumn("pg_raw", expr(parentSseSql))
-        .filter(length($"node") === dep)
-        .withColumn("rk", row_number().over(aw)).filter($"rk" === 1)
-        .select($"tree", $"node", $"feature", $"bin", $"n", $"syt",
-          $"nl", $"syl", $"nr", $"syr2", $"sse_raw", $"pg_raw")
-        .collect() // ≤ bags · 2^dep rows — the bounded decision table
-        .sortBy(r => (r.getInt(0), r.getString(1)))
-      val byTree = lvl.groupBy(_.getInt(0))
-      openTrees = openTrees.filter(byTree.contains)
-      byTree.foreach { case (t, rows) =>
-        splits(t) ++= rows.map(r =>
-          Stump.TreeSplit(r.getString(1), dep, r.getLong(3), r.getLong(4),
-            r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8),
-            r.getLong(9), r.getDouble(10), r.getDouble(11),
-            feature = r.getInt(2)))
+      // Stump's Gini texts read the binary census under its own names
+      val scored = loss match {
+        case Variance => cand
+          .withColumn("crit", expr(regSseSql))
+          .withColumn("pg_raw", expr(parentSseSql))
+        case Gini => cand
+          .withColumn("pos", $"syt").withColumn("pl", $"syl")
+          .withColumn("pr", $"syr2")
+          .withColumn("ql", $"nl" - $"pl")
+          .withColumn("qr", $"nr" - $"pr")
+          .withColumn("neg", $"n" - $"pos")
+          .withColumn("crit", expr(Stump.wgSql))
+          .withColumn("pg_raw", expr(Stump.parentSql))
       }
+      val perFeature = scored
+        .withColumn("rk", row_number().over(byFeature.orderBy($"crit", $"bin")))
+        .filter($"rk" === 1)
+        .select($"tree", $"node", $"feature", $"bin", $"n", $"syt",
+          $"nl", $"syl", $"nr", $"syr2", $"crit", $"pg_raw")
+        .collect() // ≤ bags · 2^dep · features rows — bounded
+        .map(r => r.getInt(0) -> Stump.TreeSplit(r.getString(1), dep,
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+          r.getLong(7), r.getLong(8), r.getLong(9), r.getDouble(10),
+          r.getDouble(11), feature = r.getInt(2)))
+      // each node's argmin across its features, in the tie order
+      // criterion → feature → bin; SQL ordering equates −0.0 and 0.0,
+      // and −0.0 + 0.0 is 0.0
+      val tieOrder = Ordering.Tuple3(Ordering.Double.TotalOrdering,
+        Ordering.Int, Ordering.Long)
+      val best = perFeature.groupBy { case (t, sp) => (t, sp.node) }
+        .toSeq.sortBy(_._1).map { case ((t, _), cands) =>
+          t -> cands.map(_._2).minBy(sp =>
+            (sp.wgRaw + 0.0, sp.feature, sp.thresholdBin))(tieOrder)
+        }
+      openTrees = best.map(_._1).toSet
+      best.foreach { case (t, sp) => splits(t) :+= sp }
       dep += 1
     }
     splits.toSeq

@@ -40,22 +40,37 @@ object Stump {
         - (${d(q)} / ${d(m)}) * (${d(q)} / ${d(m)}))"""
 
   /** Split-weighted Gini over columns (nl,pl,ql, nr,pr,qr, n). */
-  private val wgSql =
+  private[operators] val wgSql =
     s"""((${d("nl")} * ${giniSql("pl", "ql", "nl")}
         + ${d("nr")} * ${giniSql("pr", "qr", "nr")}) / ${d("n")})"""
 
   /** Parent (unsplit) Gini over columns (pos, neg, n). */
-  private val parentSql = giniSql("pos", "neg", "n")
+  private[operators] val parentSql = giniSql("pos", "neg", "n")
 
-  /** (bin, cnt, p) histogram of the stump design — the one census
-    * every split search reads. */
-  private def designHist(spark: SparkSession, dir: String): DataFrame = {
+  /** The stump design's (bin, y) rows: price in $100 bins against the
+    * returnflag = 'R' label. */
+  private def designRows(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.lineitem(spark, dir).select(
-        floor($"l_extendedprice" / 100.0).cast("long").as("bin"),
-        ($"l_returnflag" === "R").cast("long").as("y"))
-      .groupBy($"bin")
+      floor($"l_extendedprice" / 100.0).cast("long").as("bin"),
+      ($"l_returnflag" === "R").cast("long").as("y"))
+  }
+
+  /** (bin, cnt, p) histogram of the stump design — the census p17 and
+    * p19's split search reads. */
+  private def designHist(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    designRows(spark, dir).groupBy($"bin")
       .agg(count(lit(1)).as("cnt"), sum($"y").as("p"))
+  }
+
+  /** The stump design as a weighted design for the level and boosting
+    * loops (p20, p21): its (bin, y) census with `w` = the number of
+    * rows in each group — at most 2 × |bin domain| rows. */
+  private[operators] def designCensus(spark: SparkSession,
+      dir: String): DataFrame = {
+    import spark.implicits._
+    designRows(spark, dir).groupBy($"bin", $"y").agg(count(lit(1)).as("w"))
   }
 
   /** Candidate frame shared by p17 and p19: per (node, threshold bin),
@@ -85,161 +100,15 @@ object Stump {
   }
 
   /** One fitted split: the node's path ("" = root, then 'L'/'R' per
-    * level), its population/positives, the chosen feature (index into
-    * the trainer's featureCols; always 0 for the single-feature
-    * trainers) and threshold bin, the exact child census, and the raw
-    * (unrounded) parent/split Ginis. Child leaf rates are derivable
-    * (left = pl/nl, right = pr/nr), so this is the complete model
-    * artifact. */
+    * level), its population and Σy (positives for the Gini loss), the
+    * chosen feature (index into the bag's feature columns; 0 for a
+    * one-feature design) and threshold bin, the exact child census,
+    * and the raw (unrounded) parent/split criteria. Child leaf values
+    * are derivable (left = pl/nl, right = pr/nr), so this is the
+    * complete model artifact. Fitted by [[RegTree.fitForestSplits]]. */
   final case class TreeSplit(node: String, depth: Int, thresholdBin: Long,
       n: Long, pos: Long, nl: Long, pl: Long, nr: Long, pr: Long,
       wgRaw: Double, pgRaw: Double, feature: Int = 0)
-
-  /** Depth-k histogram tree trainer — the p17/p19 recursion made
-    * configurable (round-12 verdict ask #4, the GBT door). Level d is
-    * ONE pass over the same domain-bounded bin histogram: rows are
-    * routed to their depth-d node by a literal threshold when-tree
-    * (pure codegen, ≤ 2^d leaves), the per-node best split is an
-    * exact-integer cumulative scan + argmin, and the ≤ 2^d winning
-    * rows come back to the driver to extend the routing tree — the
-    * XGBoost-`hist` architecture (distributed histograms, centralized
-    * split decisions; arXiv:1603.02754 §3.3). Per-level cost is
-    * bounded by the VALUE DOMAIN and 2^depth, never the data. A node
-    * with no valid split (pure/single-bin) simply stops splitting. */
-  private[graft] def fitTreeSplits(hist: DataFrame,
-      maxDepth: Int): Seq[TreeSplit] = {
-    import hist.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    require(maxDepth >= 1, "maxDepth must be >= 1")
-    // a null bin would census into the LEFT cumulative (nulls sort
-    // first in the window) while `bin <= thr` routing sends the row
-    // RIGHT — and a null winning the argmin would NPE at getLong.
-    // Fail fast instead (round-14 advisory); the check is one limit-1
-    // probe of the domain-bounded histogram.
-    require(hist.filter($"bin".isNull).isEmpty,
-      "null feature bins in the tree design: the feature column must " +
-        "be non-null (filter or impute before fitting)")
-    var splits = Vector.empty[TreeSplit]
-    var d = 0
-    var open = true
-    while (d < maxDepth && open) {
-      val thr = splits.map(s => s.node -> s.thresholdBin).toMap
-      def walk(path: String, lvl: Int): org.apache.spark.sql.Column =
-        if (lvl == d) lit(path)
-        else thr.get(path) match {
-          case None => lit(path) // stopped early: keeps its short label
-          case Some(t) => when($"bin" <= lit(t), walk(path + "L", lvl + 1))
-            .otherwise(walk(path + "R", lvl + 1))
-        }
-      val aw = Window.partitionBy("node").orderBy($"wg_raw", $"bin")
-      val lvl = splitCandidates(hist, walk("", 0))
-        .filter(length($"node") === d)
-        .withColumn("rk", row_number().over(aw)).filter($"rk" === 1)
-        .select($"node", $"bin", $"n", $"pos", $"nl", $"pl", $"nr", $"pr",
-          $"wg_raw", $"pg_raw")
-        .collect() // ≤ 2^d rows — the bounded split-decision table
-      if (lvl.isEmpty) open = false
-      else {
-        splits ++= lvl.map(r => TreeSplit(r.getString(0), d, r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-          r.getLong(6), r.getLong(7), r.getDouble(8), r.getDouble(9)))
-        d += 1
-      }
-    }
-    splits
-  }
-
-  /** D289: multi-feature depth-k histogram tree trainer — the true
-    * XGBoost-`hist` split search (arXiv:1603.02754 §3.3, Alg. 3):
-    * per level, ONE pass over the routed data builds a per-(node,
-    * feature, bin) censused histogram (`posexplode` over the binned
-    * feature columns — partial-aggregated, output bounded by
-    * 2^depth × d × |bin domain|, never the data), and each node's
-    * split is the ARGMIN OF THE WEIGHTED GINI ACROSS ALL d FEATURE
-    * HISTOGRAMS (tie order wg → feature → bin, replicated verbatim in
-    * the oracle). Unlike the single-feature [[fitTreeSplits]] — whose
-    * one histogram is computed once and re-routed level by level —
-    * the multi-feature recursion must re-census per level (a node's
-    * conditional distribution of feature j given earlier splits on
-    * feature i is not derivable from marginal histograms), which is
-    * exactly the per-iteration cost XGBoost's hist algorithm pays.
-    *
-    * `design`: one row per observation, `featureCols` already binned
-    * to longs, label `y` ∈ {0,1}. A node with no valid split
-    * (pure/single-bin on every feature) stops splitting. */
-  private[graft] def fitTreeSplitsMulti(design: DataFrame,
-      featureCols: Seq[String], maxDepth: Int): Seq[TreeSplit] = {
-    import design.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    require(maxDepth >= 1, "maxDepth must be >= 1")
-    require(featureCols.nonEmpty, "need at least one feature column")
-    var splits = Vector.empty[TreeSplit]
-    var d = 0
-    var open = true
-    while (d < maxDepth && open) {
-      val dec = splits.map(s => s.node -> (s.feature, s.thresholdBin)).toMap
-      def walk(path: String, lvl: Int): org.apache.spark.sql.Column =
-        if (lvl == d) lit(path)
-        else dec.get(path) match {
-          case None => lit(path) // stopped early: keeps its short label
-          case Some((f, t)) =>
-            when(col(featureCols(f)) <= lit(t), walk(path + "L", lvl + 1))
-              .otherwise(walk(path + "R", lvl + 1))
-        }
-      val routed = design.withColumn("node", walk("", 0))
-      // the level's whole data pass: route + explode + partial agg;
-      // cached because totals and candidates both read it (bounded:
-      // ≤ 2^d × d × |bin domain| rows)
-      val hist = routed
-        .select($"node", $"y", posexplode(array(featureCols.map(col): _*))
-          .as(Seq("feature", "bin")))
-        .groupBy($"node", $"feature", $"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"y").as("p"))
-        .scopedPersist()
-      // null feature bins census LEFT but route RIGHT (round-14
-      // advisory) — reject them before fitting anything. Checked on
-      // the BOUNDED persisted histogram (round-15: the old
-      // design-level isEmpty pre-check was its own full pass; the
-      // materialization this check forces is reused by the collect
-      // below)
-      if (d == 0) require(hist.filter($"bin".isNull).isEmpty,
-        "null feature bins in the tree design: feature columns must " +
-          "be non-null (filter or impute before fitting)")
-      // node totals off ONE feature's slice (every row contributes one
-      // bin per feature, so any slice carries the full census)
-      val tot = hist.filter($"feature" === lit(0))
-        .groupBy($"node").agg(sum($"cnt").as("n"), sum($"p").as("pos"))
-      val w = Window.partitionBy($"node", $"feature").orderBy($"bin")
-      val aw = Window.partitionBy($"node")
-        .orderBy($"wg_raw", $"feature", $"bin")
-      val lvl = hist
-        .select($"node", $"feature", $"bin",
-          sum($"cnt").over(w).as("nl"), sum($"p").over(w).as("pl"))
-        .join(broadcast(tot), "node")
-        .filter($"nl" < $"n")
-        .withColumn("ql", $"nl" - $"pl")
-        .withColumn("nr", $"n" - $"nl")
-        .withColumn("pr", $"pos" - $"pl")
-        .withColumn("qr", $"nr" - $"pr")
-        .withColumn("neg", $"n" - $"pos")
-        .withColumn("wg_raw", expr(wgSql))
-        .withColumn("pg_raw", expr(parentSql))
-        .filter(length($"node") === d)
-        .withColumn("rk", row_number().over(aw)).filter($"rk" === 1)
-        .select($"node", $"feature", $"bin", $"n", $"pos", $"nl", $"pl",
-          $"nr", $"pr", $"wg_raw", $"pg_raw")
-        .collect() // ≤ 2^d rows — the bounded split-decision table
-      if (lvl.isEmpty) open = false
-      else {
-        splits ++= lvl.map(r => TreeSplit(r.getString(0), d, r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
-          r.getLong(7), r.getLong(8), r.getDouble(9), r.getDouble(10),
-          feature = r.getInt(1)))
-        d += 1
-      }
-    }
-    splits
-  }
 
   def p17Stump(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -290,18 +159,21 @@ object Stump {
     root.unionAll(children).orderBy($"node")
   }
 
-  /** D279: depth-3 tree by the generalized [[fitTreeSplits]] trainer —
-    * p19's recursion at configurable depth, emitting one row per SPLIT
-    * node (up to 7: root, L/R, LL…RR) with its path label, depth,
-    * population, pre-split Gini, threshold and gain. The oracle
+  /** D279: depth-3 tree by the one level loop
+    * ([[RegTree.fitForestSplits]], Gini loss, over the (bin, y) census
+    * [[designCensus]]) — p19's recursion at configurable depth,
+    * emitting one row per SPLIT node (up to 7: root, L/R, LL…RR) with
+    * its path label, depth, population, pre-split Gini, threshold and
+    * gain. The oracle
     * replays all three levels as chained CTE blocks off the same
     * shared-IEEE Gini text, so every census integer and rounded double
     * is hash-exact. (The [[graft.ml.feature.GraftTree]] estimator fits
-    * through this same trainer — protocol surface #11.) */
+    * through this same loop — protocol surface #11.) */
   def p20Tree3(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hist = designHist(spark, dir).scopedPersist()
-    val splits = fitTreeSplits(hist, 3)
+    val design = designCensus(spark, dir).scopedPersist()
+    val splits = RegTree.fitForestSplits(design, Seq((lit(true), Seq("bin"))),
+      3, RegTree.Gini).head
     splits.map(s => (if (s.node.isEmpty) "root" else s.node,
         s.depth.toLong, s.thresholdBin, s.n, s.pos, s.wgRaw, s.pgRaw))
       .toDF("node", "depth", "threshold_bin", "n_node", "pos_node",
@@ -317,7 +189,8 @@ object Stump {
     * — price in $100 bins (f0), quantity units (f1), discount
     * percentage points (f2) — against the p17 label. Three genuinely
     * different value domains (~1.1k / 50 / 11 bins), so the argmin
-    * really arbitrates across feature histograms. */
+    * really arbitrates across feature histograms. One row per
+    * observation (`w` = 1, the weighted-design contract). */
   private[graft] def multiDesign(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
@@ -325,7 +198,7 @@ object Stump {
       floor($"l_extendedprice" / 100.0).cast("long").as("f0"),
       $"l_quantity".cast("long").as("f1"),
       floor($"l_discount" * 100.0).cast("long").as("f2"),
-      ($"l_returnflag" === "R").cast("long").as("y"))
+      ($"l_returnflag" === "R").cast("long").as("y"), lit(1L).as("w"))
   }
 
   private[graft] val multiFeatures = Seq("f0", "f1", "f2")
@@ -340,7 +213,8 @@ object Stump {
   def p22TreeMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val design = multiDesign(spark, dir).scopedPersist()
-    val splits = fitTreeSplitsMulti(design, multiFeatures, 3)
+    val splits = RegTree.fitForestSplits(design,
+      Seq((lit(true), multiFeatures)), 3, RegTree.Gini).head
     splits.map(s => (if (s.node.isEmpty) "root" else s.node,
         s.depth.toLong, s.feature.toLong, s.thresholdBin, s.n, s.pos,
         s.wgRaw, s.pgRaw))

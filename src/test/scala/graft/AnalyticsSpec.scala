@@ -763,7 +763,6 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("q87 flags exactly the months beyond K MADs of the median residual") {
-    import spark.implicits._
     // replay from q80's own (oracle-gated) output: residuals per nation
     val dec = Analytics.q80SeasonalDecompose(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(5)))

@@ -195,7 +195,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d8 components: pair members share a cluster, id = min, one rep each") {
-    import spark.implicits._
     val assign = Dedup.d8Components(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pairs = Dedup.d5Jaccard(spark, sf)
@@ -434,7 +433,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d22 cluster census conserves documents and matches the component assignment") {
-    import spark.implicits._
     val ca = Dedup.componentAssignment(spark, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val expected = ca.groupBy(_._2).values.map(_.size.toLong)

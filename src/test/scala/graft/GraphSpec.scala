@@ -237,7 +237,6 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("g6 equals a brute RA/common-neighbor replay over the strong graph") {
-    import spark.implicits._
     import graft.sources.Tables
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -284,7 +283,6 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("g7 equals a brute per-edge common-neighbor replay on the strong graph") {
-    import spark.implicits._
     import graft.sources.Tables
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -313,7 +311,6 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("g8 modularity equals a driver replay over g4's labels") {
-    import spark.implicits._
     import graft.sources.Tables
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -347,7 +344,6 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("g13 HITS equals a brute integer fixed-point replay") {
-    import TestSpark.spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.sources.Tables
     val pairs = Tables.orders(spark, sf)
@@ -583,7 +579,7 @@ class GraphSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
     val hll = Graph.distanceDistFrom(spark, sym, forceHll = true).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
-    exact.zip(hll).foreach { case ((he, ne, ee), (hh, nh, eh)) =>
+    exact.zip(hll).foreach { case ((he, ne, _), (hh, nh, _)) =>
       assert(he == hh)
       // per-hop new-pair estimates inside a 3% band (a DIFFERENCE of
       // two ~1%-error sketch sums)

@@ -22,7 +22,7 @@ class KMeansSpec extends AnyFunSuite {
     def q(v: Double) = math.floor(v * KMeans.qScale).toLong
     def mean(s: Long, n: Long) = (s.toDouble / n.toDouble) / KMeans.qScale
     var cents = vecs.take(kk).map(_._2.map(v => mean(q(v), 1L)))
-    var counts = Array.fill(kk)(0L)
+    val counts = Array.fill(kk)(0L)
     for (_ <- 1 to KMeans.iters) {
       def dot(a: Array[Double], b: Array[Double]) =
         a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))

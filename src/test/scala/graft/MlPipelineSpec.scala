@@ -99,7 +99,6 @@ class MlPipelineSpec extends AnyFunSuite {
   }
 
   test("ModelRegistry governs artifact versions with snapshot lineage") {
-    import spark.implicits._
     import graft.ml.ModelRegistry
     val base = tmp("graft_registry")
     val reg = s"$base/registry"

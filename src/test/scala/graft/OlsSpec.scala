@@ -141,7 +141,7 @@ class OlsSpec extends AnyFunSuite {
 
   test("p12 CV equals an independent Gaussian-elimination replay") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{concat_ws, conv, md5, substring, round => sround, floor => sfloor}
+    import org.apache.spark.sql.functions.{concat_ws, conv, md5, substring, round => sround}
     val O = graft.operators.Ols
     val rows = Tables.lineitem(spark, sf)
       .select(
@@ -276,7 +276,7 @@ class OlsSpec extends AnyFunSuite {
 
   test("GraftLogistic estimator: transform equals p13's scoring; persistence round-trips") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, when}
+    import org.apache.spark.sql.functions.{expr, when}
     import graft.ml.feature.{GraftLogistic, GraftLogisticModel}
     val O = graft.operators.Logistic
     val xy = graft.sources.Tables.documents(spark, sf)
@@ -457,7 +457,6 @@ class OlsSpec extends AnyFunSuite {
 
   test("GraftLinear estimator: fit equals p9/p10 coefficients; transform scores; persistence round-trips") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     import graft.ml.feature.{GraftLinear, GraftLinearModel}
     val O = graft.operators.Ols
     // the p9 design, under user-facing column names
@@ -754,9 +753,9 @@ class OlsSpec extends AnyFunSuite {
     assert(got == expected && got.nonEmpty)
     // child-partition identities at EVERY level: each split node's
     // population equals its children's (or is a leaf)
-    val splits = graft.operators.Stump.fitTreeSplits(
-      rows.toDF("bin", "y").groupBy($"bin")
-        .agg(count(lit(1)).as("cnt"), sum($"y").as("p")), 3)
+    val splits = graft.operators.RegTree.fitForestSplits(
+      rows.toDF("bin", "y").groupBy($"bin", $"y").agg(count(lit(1)).as("w")),
+      Seq((lit(true), Seq("bin"))), 3, graft.operators.RegTree.Gini).head
     val byNode = splits.map(s => s.node -> s).toMap
     splits.foreach { s =>
       assert(s.nl + s.nr == s.n && s.pl + s.pr == s.pos,
@@ -1003,8 +1002,6 @@ class OlsSpec extends AnyFunSuite {
   }
 
   private def multiRows(): Seq[(IndexedSeq[Long], Long)] = {
-    import TestSpark.spark.implicits._
-    import org.apache.spark.sql.functions._
     graft.operators.Stump.multiDesign(spark, sf).collect()
       .map(r => (IndexedSeq(r.getLong(0), r.getLong(1), r.getLong(2)),
         r.getLong(3))).toSeq
@@ -1030,11 +1027,11 @@ class OlsSpec extends AnyFunSuite {
     assert(got.map(_._3).distinct.length >= 2,
       s"argmin never left one feature: ${got.map(_._3)}")
     // census identities per split node
-    import TestSpark.spark.implicits._
-    import org.apache.spark.sql.functions._
-    val splits = graft.operators.Stump.fitTreeSplitsMulti(
+    import org.apache.spark.sql.functions.lit
+    val splits = graft.operators.RegTree.fitForestSplits(
       graft.operators.Stump.multiDesign(spark, sf),
-      graft.operators.Stump.multiFeatures, 3)
+      Seq((lit(true), graft.operators.Stump.multiFeatures)), 3,
+      graft.operators.RegTree.Gini).head
     val byNode = splits.map(x => x.node -> x).toMap
     splits.foreach { x =>
       assert(x.nl + x.nr == x.n && x.pl + x.pr == x.pos)
@@ -1343,9 +1340,10 @@ class OlsSpec extends AnyFunSuite {
     val design = raw.select(
       graft.operators.RegTree.quantileBin($"price", pe).as("f0"),
       graft.operators.RegTree.quantileBin($"disc", de).as("f1"),
-      $"qty".as("y"))
+      $"qty".as("y"), lit(1L).as("w"))
     val direct = graft.operators.RegTree.fitForestSplits(design,
-      Seq((lit(true), Seq("f0", "f1"))), 2).head
+      Seq((lit(true), Seq("f0", "f1"))), 2,
+      graft.operators.RegTree.Variance).head
     assert(tree.splits.toSeq == direct)
     // transform: leaf value is the exact mean, prediction its half-up
     // rounding
@@ -1382,7 +1380,7 @@ class OlsSpec extends AnyFunSuite {
     val gdesign = raw.select(
       floor($"price" / 100.0).cast("long").as("__f0"),
       floor($"disc" / 0.01).cast("long").as("__f1"),
-      ($"qty" * 100L).as("yg"))
+      ($"qty" * 100L).as("yg"), lit(1L).as("w"))
     val (gf0, gdirect) = graft.operators.Gbt.fitGbtMulti(gdesign,
       Seq("__f0", "__f1"), 3, (-5000L, 5000L),
       graft.operators.RegTree.regShiftFor(5000L, 3))

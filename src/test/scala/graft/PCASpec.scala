@@ -334,8 +334,6 @@ class PCASpec extends AnyFunSuite {
         col("o_custkey") === col("c_custkey"))
       .select("c_mktsegment", "c_acctbal", "o_totalprice").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    def rnd4(x: Double) = BigDecimal(x)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     val expect = joined.groupBy(_._1).map { case (seg, rows) =>
       val n = rows.length.toDouble
       val (xs, ys) = (rows.map(_._2), rows.map(_._3))

@@ -86,7 +86,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("m5 interleaved packing: joint text+patch costs, budget respected, lossless") {
     import TestSpark.spark.implicits._
-    import org.apache.spark.sql.functions._
     import graft.operators.Multimodal
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
@@ -258,7 +257,6 @@ class PipelineSpec extends AnyFunSuite {
   test("c4 chunking: count formula, full-width bodies, stride overlap, coverage") {
     val s0 = spark
     import s0.implicits._
-    import org.apache.spark.sql.functions._
     val toks = Tables.documents(spark, sf)
       .select($"doc_id", TextAnalysis.tokens($"text").as("t"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
@@ -308,7 +306,7 @@ class PipelineSpec extends AnyFunSuite {
       val sorted = sel.sortBy(_._2)
       // cum is the running sum and stays within budget
       var cum = 0L
-      sorted.foreach { case (_, rk, doc, n, c, _) =>
+      sorted.foreach { case (_, rk, _, n, c, _) =>
         cum += n
         assert(c == cum, s"$src rank $rk cum mismatch")
         assert(c <= quota, s"$src rank $rk over budget")
@@ -406,7 +404,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c11 stage funnel is monotone and consistent with c1's survivor set") {
-    import spark.implicits._
     val rows = Pipeline.c11StageFunnel(spark, sf).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5)))
@@ -425,7 +422,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c10 temperature mixture equals a driver replay and rebalances toward small sources") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{split, lower, col, size => asize}
     val census = Tables.documents(spark, sf)
       .select(col("source"), asize(split(lower(col("text")), " ")).cast("long"))
@@ -522,7 +518,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c12 dedup-aware mixture equals a driver canonical-attribution replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{col, lower, split}
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"), col("text"),
@@ -618,7 +613,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c15 mixture plan equals a driver replay and is budget-consistent") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("source"), col("text"),
@@ -681,7 +675,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c16 checksum manifest equals a driver fingerprint replay") {
-    import spark.implicits._
     // c3's packing is oracle-gated; the manifest must be an exact
     // rollup of it plus the commutative content fingerprint
     val packed = Pipeline.c3PackSequences(spark, sf).collect()
@@ -753,7 +746,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c13 perplexity gate equals a derivation from t18's scores") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     import graft.operators.TextAnalysis
     // t18 is itself oracle-gated, so its per-doc scores are trusted
@@ -798,7 +790,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("c17 pretraining run: funnel binds, shards respect the pack budget, draw is deterministic") {
-    import spark.implicits._
     val m = Pipeline.c17PretrainRun(spark, sf).collect()
     assert(m.nonEmpty)
     // every shard respects the pack budget (fixture docs are far
@@ -894,7 +885,6 @@ class PipelineSpec extends AnyFunSuite {
   test("GraftBPE fit equals the c9 merge table, transform matches a " +
     "driver encode, and the model round-trips") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     import graft.ml.feature.{GraftBPE, GraftBPEModel}
     val docs = Tables.documents(spark, sf)
     val model = new GraftBPE().setTextCol("text").fit(docs)
@@ -987,7 +977,6 @@ class PipelineSpec extends AnyFunSuite {
     val k = Pipeline.lifecycleK
     val spark0 = spark
     def embDf = {
-      import spark0.implicits._
       graft.sources.Tables.embeddings(spark0, sf)
     }
     val centsOld = Similarity.ivfCentroids(

@@ -340,7 +340,6 @@ class PlanSpec extends AnyFunSuite {
     // offsets frame; a partition-less window whose child reads the
     // census directly would be the single-partition cumsum this
     // operator exists to avoid
-    val windows = p.linesIterator.filter(_.contains("Arguments: [rev")).toSeq
     assert(p.contains("Window"), "expected window operators in q63")
     val partitioned = p.linesIterator
       .count(l => l.contains("windowspecdefinition") && l.contains("bucket"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The session-cache registry contract (round-15 verdict items 1/3/7):
   * every session-scoped memo registers with [[SessionCaches]], has a

@@ -383,7 +383,7 @@ class TextSpec extends AnyFunSuite {
     val prior = langs.map { l =>
       l -> r4(math.log(docs.count(_._2 == l).toDouble / nDocs.toDouble))
     }.toMap
-    val preds = docs.map { case (id, actual, tk) =>
+    val preds = docs.map { case (_, actual, tk) =>
       val best = langs.map { l =>
         val ll = r4(tk.map(t => r4(math.log(
           (ltc.getOrElse((l, t), 0L) + 1L).toDouble /
@@ -507,7 +507,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t27 Simpson diversity equals an exact BigInt driver replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{explode, split, lower, col}
     val terms = Tables.documents(spark, sf)
       .select(col("source"), explode(split(lower(col("text")), " ")).as("t"))
@@ -528,7 +527,7 @@ class TextSpec extends AnyFunSuite {
         r.getDouble(4), r.getDouble(5))).toMap
     assert(got == expected && got.nonEmpty)
     // diversity bounds: 1 <= inv_simpson <= vocab
-    got.values.foreach { case (n, v, s1, inv, bp) =>
+    got.values.foreach { case (n, _, s1, inv, bp) =>
       assert(s1 > 0.0 && s1 <= 1.0001)
       // the UNBIASED inverse can slightly exceed raw richness on
       // near-uniform counts ((Vc-1)/(c-1) > V); bound by tokens instead
@@ -564,7 +563,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t32 Good-Turing census equals a driver frequency-of-frequencies replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{col, lower, split}
     val docs = Tables.documents(spark, sf)
       .select(col("source"), split(lower(col("text")), " "))
@@ -598,7 +596,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t28 burstiness equals an exact Fano-factor driver replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{explode, split, lower, col}
     val perDoc = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("t"))
@@ -627,7 +624,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t29 dup n-gram coverage equals a driver span-census replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{split, lower, col}
     val docs = Tables.documents(spark, sf)
       .select(col("source"), split(lower(col("text")), " "))
@@ -659,7 +655,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t30 entropy rate equals a driver census replay and is information-consistent") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{split, lower, col}
     val docs = Tables.documents(spark, sf)
       .select(col("source"), split(lower(col("text")), " "))
@@ -696,7 +691,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t34 Heaps curve equals a brute first-occurrence replay") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")))
@@ -729,7 +723,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t36 Gopher audit equals a brute rule replay") {
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
       .select("source", "text").collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -770,7 +763,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t37 JS divergence equals a brute full-distribution replay") {
-    import spark.implicits._
     val toks = Tables.documents(spark, sf).select("source", "text").collect()
       .flatMap(r => r.getString(1).toLowerCase.split(" ", -1)
         .map(t => (r.getString(0), t)))
@@ -805,7 +797,6 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("t35 kappa equals a derivation from the two classifiers' predictions") {
-    import spark.implicits._
     // t3 and t22 are oracle-gated; the agreement statistic must be an
     // exact rollup of their per-doc predictions
     val hp = TextAnalysis.heuristicLangPred(spark, sf)
