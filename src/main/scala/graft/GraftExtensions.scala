@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, DotProduct, DotProductD, LshBuckets, NearestCentroid, PcaProject, PqAdc, PqEncode, SumOfSquares}
-import graft.plans.RewriteHofDot
+import graft.functions.{CosineSimilarity, DotProduct, LshBuckets, NearestCentroid, PcaProject, PqAdc, PqEncode}
 
 /** Session extensions for the graft engine — the public plug-in point
   * for custom Catalyst expressions (the brief's preference order:
@@ -17,19 +16,15 @@ import graft.plans.RewriteHofDot
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
-  * It does two things: it registers the `graft_*` SQL names (so
-  * `graft_cosine(a, b)` is callable from SQL and via
-  * `functions.call_function`), and it injects the [[RewriteHofDot]]
-  * optimizer rule. The operators do not depend on it: they build the
-  * same native expressions as Columns directly
-  * ([[graft.operators.Similarity.cosineCol]]), so every session plans
-  * them inside whole-stage codegen.
+  * It only registers the `graft_*` SQL names, so `graft_cosine(a, b)`
+  * is callable from SQL and via `functions.call_function`. It selects
+  * no plan: the operators build the same native expressions as Columns
+  * directly ([[graft.operators.Similarity.dot]],
+  * [[graft.operators.Similarity.cosineCol]]), so every session, with
+  * or without the extensions, plans them inside whole-stage codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: the interpreted HOF dot-product pattern becomes
-    // the codegen'd native expression (see RewriteHofDot's Scaladoc)
-    ext.injectOptimizerRule(_ => RewriteHofDot)
     GraftExtensions.functions.foreach { case (name, cls, arity, make) =>
       ext.injectFunction((
         new FunctionIdentifier(name),
@@ -49,9 +44,7 @@ object GraftExtensions {
     * registered native function. */
   private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
     ("graft_dot", classOf[DotProduct], 2, c => DotProduct(c(0), c(1))),
-    ("graft_dot_d", classOf[DotProductD], 2, c => DotProductD(c(0), c(1))),
     ("graft_cosine", classOf[CosineSimilarity], 2, c => CosineSimilarity(c(0), c(1))),
-    ("graft_sumsq", classOf[SumOfSquares], 1, c => SumOfSquares(c(0))),
     ("graft_pq_encode", classOf[PqEncode], 2, c => PqEncode(c(0), c(1))),
     ("graft_pq_adc", classOf[PqAdc], 3, c => PqAdc(c(0), c(1), c(2))),
     ("graft_lsh_buckets", classOf[LshBuckets], 2, c => LshBuckets(c(0), c(1))),

@@ -18,15 +18,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the loop into the generated stage, reading floats straight out of
   * the columnar/unsafe array representation with zero allocation.
   *
-  * Arithmetic is IDENTICAL to the HOF form
-  * [[graft.operators.Similarity.cosine]] and the DuckDB oracle replay:
-  * float widened to double, one ascending-index pass, d/(√na·√nb) —
+  * Arithmetic is IDENTICAL to `dot(a, b) / (√dot(a, a)·√dot(b, b))`
+  * over [[DotProduct]] and to the DuckDB oracle replay: float widened
+  * to double, one ascending-index pass, d/(√na·√nb) —
   * IEEE-deterministic, so it cannot change any oracle hash
   * (FunctionsSpec asserts bit-equality against a scalar reference).
+  * It is one fused pass where that form is three.
   *
   * Null semantics: null if either side is null (BinaryExpression
-  * default); mismatched lengths score the common prefix, matching the
-  * zip_with semantics of the expression form.
+  * default); mismatched lengths score the common prefix, as
+  * [[DotProduct]] does.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -19,9 +19,9 @@ import graft.sources.Tables
   * so the means are bit-identical on any partitioning, any engine.
   * Assignment compares `dot(c,c) − 2·dot(x,c)` (the ‖x‖²-free
   * expansion of squared L2) with both dots summed in ascending index
-  * order (Spark HOF and DuckDB `list_inner_product` agree
-  * bit-for-bit — the s1/s3 precedent), ties broken by lowest
-  * centroid id via lexicographic struct-min. Init is the k
+  * order (the native [[Similarity.dot]] and DuckDB
+  * `list_inner_product` agree bit-for-bit — the s1/s3 precedent), ties
+  * broken by lowest centroid id via lexicographic struct-min. Init is the k
   * lowest-vec_id embeddings quantized through the same mean formula
   * (n = 1) — no RNG anywhere.
   *
@@ -48,14 +48,6 @@ object KMeans {
     d
   }
 
-  /** Ascending-index HOF dot on `array<double>` columns — interpreted,
-    * bit-identical to DuckDB `list_inner_product` (same order, same
-    * IEEE ops). The corpus side is k=8 evals/row; a compiled
-    * double-dot expression (the [[graft.functions.DotProduct]] float
-    * sibling) is the drop-in if k·d ever dominates. */
-  private def dotD(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** Fitted state: per-cluster counts + centroid means (+norms). */
   private[graft] case class Fit(cents: Array[Array[Double]],
       counts: Array[Long])
@@ -67,7 +59,7 @@ object KMeans {
       cents: Array[Array[Double]]): Column = {
     val distStructs = cents.zipWithIndex.map { case (c, cid) =>
       val cLit = typedLit(c.toSeq)
-      struct((lit(dotSeq(c, c)) - lit(2.0) * dotD(e, cLit)).as("dist"),
+      struct((lit(dotSeq(c, c)) - lit(2.0) * Similarity.dot(e, cLit)).as("dist"),
         lit(cid).as("cid"))
     }
     array_min(array(distStructs: _*)).getField("cid")
@@ -183,7 +175,7 @@ object KMeans {
     * three. The dup witness is a high-cardinality per-vec_id window
     * (c2 discipline). Determinism: doubles all the way, ranked on the
     * 4-dp rounded cosine (ties → lowest witness id) — bit-stable on
-    * any partitioning given the ascending HOF dot (p8 precedent). */
+    * any partitioning given the ascending-index dot (p8 precedent). */
   def d14SemDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -200,7 +192,7 @@ object KMeans {
     val asg = Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
       .select($"vec_id", $"e", assignCol($"e", f.cents).as("cid"))
-      .withColumn("nrm", sqrt(dotD($"e", $"e")))
+      .withColumn("nrm", Similarity.normCol($"e"))
       .scopedPersist()
     val kept = asg.select($"cid", $"vec_id".as("dup_of"),
       $"e".as("ea"), $"nrm".as("na"))
@@ -209,7 +201,7 @@ object KMeans {
     kept.join(cand, Seq("cid"))
       .filter($"dup_of" < $"vec_id")
       .withColumn("cos_sim",
-        round(dotD($"ea", $"eb") / ($"na" * $"nb"), 4))
+        round(Similarity.dot($"ea", $"eb") / ($"na" * $"nb"), 4))
       .filter($"cos_sim" >= semTau)
       .withColumn("rk", row_number().over(
         Window.partitionBy($"vec_id")
@@ -225,7 +217,7 @@ object KMeans {
 
   // Oracle: the same three Lloyd rounds as chained CTEs. Quantized
   // integer sums make every mean exact; list_inner_product matches the
-  // ascending HOF dot bit-for-bit.
+  // ascending-index native dot bit-for-bit.
   /** Shared Lloyd-replay CTE chain (`e`, `init`, `c0`, `a1..c[iters]`)
     * — interpolated after `WITH` by the p8 and d14 oracles. `initCtes`
     * is the seed-selection CTE: p8 passes the fixed `LIMIT k` form;

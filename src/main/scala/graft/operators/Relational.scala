@@ -316,9 +316,9 @@ object Relational {
   }
 
   /** D16+D21: array/math functions over the embedding column — L2 norm
-    * via the codegen'd Σx² expression (bit-identical to the
-    * transform+aggregate HOF form, which is interpreted: one lambda
-    * dispatch per element). */
+    * via the codegen'd native dot (bit-identical to the interpreted
+    * transform+aggregate HOF form, which pays one lambda dispatch per
+    * element). */
   def q16ArrayMath(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.embeddings(spark, dir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ExpressionShim.{column, expression}
-import graft.functions.{CosineSimilarity, LshBuckets, NearestCentroid, PqAdc, PqEncode, SumOfSquares}
+import graft.functions.{CosineSimilarity, DotProduct, LshBuckets, NearestCentroid, PqAdc, PqEncode}
 import graft.sources.Tables
 import graft.CacheScope.ScopedPersist
 
@@ -22,35 +22,26 @@ import graft.CacheScope.ScopedPersist
   * - Plus threshold near-dup pairs (s3), centroid analytics (s4), and
   *   int8 quantization (s5).
   *
-  * Arithmetic: the expression-form dot ([[dot]]) and the codegen'd
-  * [[cosineCol]] both widen float→double and sum sequentially in
-  * element order, so every score is bit-identical to DuckDB's
-  * `list_inner_product` on `DOUBLE[]` — which is what makes the s1/s3
-  * oracles hash-exact. (Spark's higher-order expressions are
-  * interpreted, so hot pair-scoring uses the native expressions of
-  * [[graft.functions]].)
+  * Arithmetic: the codegen'd [[dot]] and [[cosineCol]] both widen
+  * float→double and sum sequentially in element order, so every score
+  * is bit-identical to DuckDB's `list_inner_product` on `DOUBLE[]` —
+  * which is what makes the s1/s3 oracles hash-exact.
   */
 object Similarity {
 
-  /** Sequential-sum dot product of two float arrays, in double. */
+  /** Dot product of two `array<float>` or two `array<double>` columns,
+    * in double: the codegen'd native [[graft.functions.DotProduct]]. */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
+    column(DotProduct(expression(a), expression(b)))
 
   /** Cosine for the hot scoring loops: the codegen'd native expression
-    * [[graft.functions.CosineSimilarity]] (zero per-row allocation,
-    * fused into whole-stage codegen), bit-identical to [[cosine]]. */
+    * [[graft.functions.CosineSimilarity]] (zero per-row allocation, one
+    * fused pass for the dot and both norms). */
   def cosineCol(a: Column, b: Column): Column =
     column(CosineSimilarity(expression(a), expression(b)))
 
-  /** L2 norm of an `array<float>` column via the codegen'd Σx²
-    * expression [[graft.functions.SumOfSquares]]; bit-identical to the
-    * HOF form [[l2norm]]. */
-  def normCol(a: Column): Column = sqrt(column(SumOfSquares(expression(a))))
+  /** L2 norm of an `array<float>` or `array<double>` column. */
+  def normCol(a: Column): Column = sqrt(dot(a, a))
 
   /** D19: exact brute-force cosine top-5 neighbors for query vectors
     * (vec_id < 5). Queries are broadcast; the corpus is scanned once.

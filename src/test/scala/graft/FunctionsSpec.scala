@@ -42,71 +42,68 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("RewriteHofDot: the interpreted HOF dot pattern becomes native graft_dot") {
+  /** `Similarity.dot` over 40×40 pairs of `e` vectors plans the native
+    * graft_dot, and equals, bit for bit, both the interpreted HOF dot
+    * (which really runs interpreted: nothing rewrites it) and a driver
+    * loop with the same widening and summation order. */
+  private def assertDotParity(vecs: org.apache.spark.sql.DataFrame): Unit = {
     import spark.implicits._
-    val emb = graft.sources.Tables.embeddings(spark, sf).limit(50)
-    // the idiomatic declarative form (Similarity.dot builds exactly the
-    // aggregate(zip_with(...)) tree the rule targets)
-    val q = emb.select($"vec_id",
-      Similarity.dot($"embedding", $"embedding").as("d"))
-    val opt = q.queryExecution.optimizedPlan
-    val fired = opt.exists(_.expressions.exists(_.exists {
-      case _: graft.functions.DotProduct => true
-      case _ => false
-    }))
-    assert(fired, s"rule did not fire:\n$opt")
-    assert(!opt.exists(_.expressions.exists(_.exists {
-      case _: org.apache.spark.sql.catalyst.expressions.ArrayAggregate => true
-      case _ => false
-    })), "interpreted ArrayAggregate survived the rewrite")
-    // bit-equality vs a driver-side loop with the same summation order
-    q.collect().foreach { r =>
-      val v = emb.filter($"vec_id" === r.getLong(0))
-        .head.getSeq[Float](1)
+    val a = vecs.filter($"vec_id" < 40).select($"vec_id".as("id_a"), $"e".as("ea"))
+    val b = vecs.filter($"vec_id" >= 40 && $"vec_id" < 80)
+      .select($"vec_id".as("id_b"), $"e".as("eb"))
+    val q = a.crossJoin(b).select($"ea", $"eb",
+      Similarity.dot($"ea", $"eb").as("native"),
+      SimilarityReference.hofDot($"ea", $"eb").as("hof"))
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("graft_dot("), s"native dot not planned:\n$plan")
+    assert(plan.contains("aggregate("), s"HOF reference was rewritten:\n$plan")
+    val rows = q.collect()
+    assert(rows.length == 40 * 40)
+    // Float.doubleValue widens exactly, as the native dot does
+    def doubles(r: org.apache.spark.sql.Row, i: Int): Seq[Double] =
+      r.getSeq[java.lang.Number](i).map(_.doubleValue)
+    rows.foreach { r =>
+      val (x, y) = (doubles(r, 0), doubles(r, 1))
       var d = 0.0; var i = 0
-      while (i < v.length) { d += v(i).toDouble * v(i).toDouble; i += 1 }
-      assert(java.lang.Double.doubleToLongBits(d) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)),
-        s"vec ${r.getLong(0)}: $d != ${r.getDouble(1)}")
+      while (i < x.length) { d += x(i) * y(i); i += 1 }
+      val bits = java.lang.Double.doubleToLongBits(r.getDouble(2))
+      assert(bits == java.lang.Double.doubleToLongBits(d), s"loop: $d != ${r.getDouble(2)}")
+      assert(bits == java.lang.Double.doubleToLongBits(r.getDouble(3)),
+        s"HOF: ${r.getDouble(3)} != ${r.getDouble(2)}")
     }
   }
 
-  test("RewriteHofDot double case: HOF dot over array<double> becomes graft_dot_d, bit-identical") {
+  test("native dot over array<float> is bit-identical to the HOF dot and a loop") {
     import spark.implicits._
-    val emb = graft.sources.Tables.embeddings(spark, sf).limit(50)
-      .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-    // the exact declarative shape KMeans.dotD builds (the d14/p8 hot loop)
-    val hofDot = aggregate(zip_with($"e", $"e",
-      (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val q = emb.select($"vec_id", hofDot.as("d"))
-    val opt = q.queryExecution.optimizedPlan
-    val fired = opt.exists(_.expressions.exists(_.exists {
-      case _: graft.functions.DotProductD => true
-      case _ => false
-    }))
-    assert(fired, s"double-case rule did not fire:\n$opt")
-    assert(!opt.exists(_.expressions.exists(_.exists {
-      case _: org.apache.spark.sql.catalyst.expressions.ArrayAggregate => true
-      case _ => false
-    })), "interpreted ArrayAggregate survived the rewrite")
-    // bit-equality vs a driver-side loop with the same summation order
-    q.collect().foreach { r =>
-      val v = emb.filter($"vec_id" === r.getLong(0))
-        .head.getSeq[Double](1)
-      var d = 0.0; var i = 0
-      while (i < v.length) { d += v(i) * v(i); i += 1 }
-      assert(java.lang.Double.doubleToLongBits(d) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)),
-        s"vec ${r.getLong(0)}: $d != ${r.getDouble(1)}")
-    }
+    assertDotParity(graft.sources.Tables.embeddings(spark, sf)
+      .select($"vec_id", $"embedding".as("e")))
   }
 
-  test("graft_sumsq is bit-identical to the interpreted HOF norm") {
+  test("native dot over array<double> is bit-identical to the HOF dot and a loop") {
+    import spark.implicits._
+    assertDotParity(graft.sources.Tables.embeddings(spark, sf)
+      .select($"vec_id", $"embedding".cast("array<double>").as("e")))
+  }
+
+  test("graft_dot of a mixed (array<float>, array<double>) pair fails analysis") {
     import spark.implicits._
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val rows = emb.select(
-        sqrt(call_function("graft_sumsq", $"embedding")).as("native"),
-        Similarity.l2norm($"embedding").as("viaHof"))
+    val viaHelper = intercept[org.apache.spark.sql.AnalysisException] {
+      emb.select(Similarity.dot($"embedding", $"embedding".cast("array<double>")))
+    }
+    val viaSql = intercept[org.apache.spark.sql.AnalysisException] {
+      emb.select(call_function("graft_dot", $"embedding".cast("array<double>"), $"embedding"))
+    }
+    Seq(viaHelper, viaSql).foreach(e => assert(
+      e.getMessage.contains("graft_dot expects (array<float>, array<float>) or " +
+        "(array<double>, array<double>)"), e.getMessage))
+  }
+
+  test("normCol is bit-identical to the interpreted HOF norm") {
+    import spark.implicits._
+    val rows = graft.sources.Tables.embeddings(spark, sf).select(
+        Similarity.normCol($"embedding").as("native"),
+        sqrt(SimilarityReference.hofDot($"embedding", $"embedding")).as("viaHof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -114,11 +111,6 @@ class FunctionsSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(1)),
         s"${r.getDouble(0)} vs ${r.getDouble(1)}")
     }
-    // the helper returns the same value
-    val d = emb.limit(5).select(
-      Similarity.normCol($"embedding").as("n"),
-      Similarity.l2norm($"embedding").as("h")).collect()
-    d.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
   }
 
   test("graft_pq_encode produces exactly the UDF encoder's codes") {

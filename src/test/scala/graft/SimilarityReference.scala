@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{aggregate, lit, zip_with}
+
 import graft.operators.Similarity
 
 /** Plain-Scala references for the native similarity expressions of
@@ -9,6 +12,14 @@ import graft.operators.Similarity
   * widens float→double and folds in ascending element order, exactly as
   * the expressions and the DuckDB oracle replays do. */
 object SimilarityReference {
+
+  /** The interpreted higher-order dot of two `array<float>` or two
+    * `array<double>` columns, `aggregate(zip_with(a, b, x·y), 0.0, +)`:
+    * Spark evaluates it through lambda dispatch per element, outside
+    * whole-stage codegen, and no rule rewrites it. */
+  def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
 
   /** Cosine of two float vectors: d/(√na·√nb). */
   def cosineF(a: Seq[Float], b: Seq[Float]): Double = {

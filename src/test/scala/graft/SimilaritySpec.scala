@@ -354,7 +354,7 @@ class SimilaritySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val df = Seq((1L, Array(1.0f, 2.0f, 3.0f))).toDF("id", "embedding")
-    val c = df.select(Similarity.cosine(col("embedding"), col("embedding"))).head.getDouble(0)
+    val c = df.select(Similarity.cosineCol(col("embedding"), col("embedding"))).head.getDouble(0)
     assert(math.abs(c - 1.0) < 1e-12)
   }
 
